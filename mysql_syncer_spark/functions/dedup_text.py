@@ -86,6 +86,11 @@ def minhash_signatures(
     seeded token is a uniform 128-bit draw; the min over a doc's token set
     is the classic MinHash estimator. Output: id, mh0..mh{k-1}.
 
+    Precondition: ``id_col`` is unique in ``df``. Output is one row per
+    input row, so a repeated id yields several signature rows for that
+    id, and every consumer keyed on the id (LSH bands, candidate pairs)
+    then sees one document per row, not per id.
+
     MAP-ONLY: the per-doc min is an ``array_min`` over the doc's own token
     array, so no explode and no aggregation exchange exist at all — the
     previous explode → groupBy(id) shape shuffled one partial row per

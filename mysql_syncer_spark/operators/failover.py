@@ -116,10 +116,7 @@ def replay_failover(
         "query",
     )
     events = decode_wire_events(env)
-    if PagesTable.exists(table_path):
-        table = PagesTable(spark, table_path)
-    else:
-        table = PagesTable.create(spark, table_path, num_buckets=num_buckets)
+    table = PagesTable.open(spark, table_path, num_buckets)
     if cfg is None:
         from ..plans.replay import default_pages_config
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..config import TableConfig
 from ..functions.text import with_extracted_text, with_filled_text
+from ..operators.skew import SkewPlanner
 from ..sink.pages_table import PagesTable
 from ..sources.event_log import read_event_log
 
@@ -279,10 +280,7 @@ def replay(
     cfg = cfg or default_pages_config()
     if event_filter is not None and pipeline_depth > 1:
         raise ValueError("event_filter requires pipeline_depth=1")
-    if PagesTable.exists(table_path):
-        table = PagesTable(spark, table_path)
-    else:
-        table = PagesTable.create(spark, table_path, num_buckets=num_buckets)
+    table = PagesTable.open(spark, table_path, num_buckets)
 
     # ONE pushed-predicate scan collects every batch's DDL up front (both
     # paths) — DDL events are never transaction-deferred (tx_id is NULL),
@@ -328,48 +326,18 @@ def replay(
                 ).append(r.asDict())
             have_index = True
 
+    gated = (
+        (f"fileseq-{seq}", batch if event_filter is None else event_filter(batch))
+        for seq, batch in iter_tx_gated_batches(spark, event_dir, from_file_seq)
+    )
     if pipeline_depth > 1:
         batches = table.apply_batches_pipelined(
-            (
-                (f"fileseq-{seq}", batch)
-                for seq, batch in iter_tx_gated_batches(spark, event_dir, from_file_seq)
-            ),
-            cfg=cfg,
-            depth=pipeline_depth,
-            ddl_index=ddl_index,
+            gated, cfg=cfg, depth=pipeline_depth, ddl_index=ddl_index
         )
     else:
-        # serial-loop skew planner — the same amortization the pipelined
-        # path does internally: probe the first batch, carry the salting
-        # decision, re-probe only when the free observe() duplicate-share
-        # signal moves more than salt_reprobe_delta (skew in a CDC stream
-        # is persistent — hot domains stay hot).
-        batches = []
-        planner = {"last_probe_share": None, "salted": False, "latest": None}
-        for seq, batch in iter_tx_gated_batches(spark, event_dir, from_file_seq):
-            if event_filter is not None:
-                batch = event_filter(batch)
-            if cfg.skew_probe != "auto" or planner["last_probe_share"] is None:
-                carry = None  # probe (apply_batch resolves always/never)
-            elif (
-                planner["latest"] is not None
-                and abs(planner["latest"] - planner["last_probe_share"])
-                > cfg.salt_reprobe_delta
-            ):
-                carry = None  # signal moved → re-probe
-            else:
-                carry = planner["salted"]
-            res = table.apply_batch(
-                batch_id=f"fileseq-{seq}", events=batch, cfg=cfg,
-                carry_salted=carry,
-                ddls=ddl_index.get(f"fileseq-{seq}", []) if have_index else None,
-            )
-            if not res.get("skipped"):
-                if res.get("skew_probed"):
-                    planner["last_probe_share"] = res.get("dup_share")
-                    planner["salted"] = bool(res.get("salted_merge"))
-                planner["latest"] = res.get("dup_share")
-            batches.append(res)
+        batches = table.apply_batches(
+            gated, cfg=cfg, ddl_index=ddl_index if have_index else None
+        )
     total_events = sum(b.get("events_in", 0) for b in batches)
     out = {
         "n_batches": len(batches),
@@ -622,6 +590,22 @@ def bootstrap_then_replay(
     return tail
 
 
+def _binlog_seqs(bin_dir: str) -> list[int]:
+    """Sorted file_seqs of a raw binlog dir, from ``mysql-bin.index`` when
+    present (the rotation index), else from the file names."""
+    from ..sources.binlog_file import _file_seq_of
+
+    idx_path = os.path.join(bin_dir, "mysql-bin.index")
+    if os.path.exists(idx_path):
+        with open(idx_path) as f:
+            return sorted(_file_seq_of(ln.strip()) for ln in f if ln.strip())
+    return sorted(
+        _file_seq_of(fn)
+        for fn in os.listdir(bin_dir)
+        if fn.startswith("mysql-bin.") and not fn.endswith(".index")
+    )
+
+
 def replay_binlog(
     spark: SparkSession,
     bin_dir: str,
@@ -650,11 +634,7 @@ def replay_binlog(
     batch the scan parallelism is per-file (the file is sequential by
     nature — reference fread-walk), and everything after the envelope is
     the same one-shuffle ``apply_batch`` the typed path uses."""
-    from ..sources.binlog_file import (
-        _file_seq_of,
-        gtid_position,
-        read_binlog_files,
-    )
+    from ..sources.binlog_file import gtid_position, read_binlog_files
     from ..sources.wire_log import decode_wire_events
 
     cfg = cfg or default_pages_config()
@@ -662,28 +642,11 @@ def replay_binlog(
     if after_gtid is not None:
         from_seq, from_pos = gtid_position(spark, bin_dir, after_gtid)
 
-    idx_path = os.path.join(bin_dir, "mysql-bin.index")
-    if os.path.exists(idx_path):
-        with open(idx_path) as f:
-            seqs = sorted(
-                _file_seq_of(ln.strip()) for ln in f if ln.strip()
-            )
-    else:
-        seqs = sorted(
-            _file_seq_of(fn)
-            for fn in os.listdir(bin_dir)
-            if fn.startswith("mysql-bin.") and not fn.endswith(".index")
-        )
+    seqs = _binlog_seqs(bin_dir)
     if from_seq is not None:
         seqs = [s for s in seqs if s >= from_seq]
 
-    if PagesTable.exists(table_path):
-        table = PagesTable(spark, table_path)
-    else:
-        table = PagesTable.create(spark, table_path, num_buckets=num_buckets)
-
-    results = []
-    for seq in seqs:
+    def batch(seq: int) -> tuple[str, DataFrame]:
         partial = from_seq == seq and from_pos > 0
         env = read_binlog_files(
             spark,
@@ -695,13 +658,10 @@ def replay_binlog(
             to_file_seq=seq,
         )
         batch_id = f"fileseq-{seq}@{from_pos}" if partial else f"fileseq-{seq}"
-        res = table.apply_batch(
-            batch_id,
-            decode_wire_events(env),
-            cfg,
-            server_id=expected_server_id,
-        )
-        results.append(res)
+        return batch_id, decode_wire_events(env)
+
+    table = PagesTable.open(spark, table_path, num_buckets)
+    results = table.apply_batches((batch(seq) for seq in seqs), cfg)
     return {
         "n_batches": len(results),
         "resumed_at": (from_seq, from_pos) if after_gtid else None,
@@ -729,27 +689,17 @@ def replay_binlog_multi(
     Scale: per file this is one distributed decode + K bucket-shuffled
     apply jobs over disjoint row subsets; the checkpoint holds one
     file's events (binlog-file-sized, bounded by rotation)."""
-    from ..sources.binlog_file import _file_seq_of, read_binlog_files
+    from ..sources.binlog_file import read_binlog_files
     from ..sources.wire_log import decode_wire_events
 
-    idx_path = os.path.join(bin_dir, "mysql-bin.index")
-    if os.path.exists(idx_path):
-        with open(idx_path) as f:
-            seqs = sorted(_file_seq_of(ln.strip()) for ln in f if ln.strip())
-    else:
-        seqs = sorted(
-            _file_seq_of(fn)
-            for fn in os.listdir(bin_dir)
-            if fn.startswith("mysql-bin.") and not fn.endswith(".index")
+    seqs = _binlog_seqs(bin_dir)
+    tables = {
+        name: PagesTable.open(
+            spark, os.path.join(base_path, name.replace(".", "_")), num_buckets
         )
-    tables = {}
-    for name in registry:
-        path = os.path.join(base_path, name.replace(".", "_"))
-        tables[name] = (
-            PagesTable(spark, path)
-            if PagesTable.exists(path)
-            else PagesTable.create(spark, path, num_buckets=num_buckets)
-        )
+        for name in registry
+    }
+    planners = {name: SkewPlanner(cfg) for name, cfg in registry.items()}
     results: dict[str, list] = {name: [] for name in registry}
     for seq in seqs:
         env = read_binlog_files(
@@ -762,12 +712,12 @@ def replay_binlog_multi(
         )
         events = decode_wire_events(env).localCheckpoint(eager=True)
         for name, cfg in registry.items():
-            results[name].append(
-                tables[name].apply_batch(
-                    f"fileseq-{seq}",
-                    events.filter(F.col("table") == name),
-                    cfg,
-                    server_id=expected_server_id,
-                )
+            res = tables[name].apply_batch(
+                f"fileseq-{seq}",
+                events.filter(F.col("table") == name),
+                cfg,
+                carry_salted=planners[name].carry(),
             )
+            planners[name].observe(res)
+            results[name].append(res)
     return results

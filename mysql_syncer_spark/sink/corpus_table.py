@@ -4,13 +4,13 @@ The pages sink replicates a keyed table; a training corpus is the other
 ingest shape the same machinery serves: append-only batches of documents
 where the "merge" rule is near-duplicate suppression against everything
 already accepted. This sink reuses the engine's commit protocol
-(versioned manifest, exclusive version claim — same hardlink
-create-if-absent as `pages_table.PagesTable._commit` — and a batch-id
-ledger, so re-delivered batches are committed no-ops) together with the
-dedup operators' persisted band index (`dedup_text.minhash_bands` /
-`incremental_near_duplicates`). Per-batch cost is O(batch + touched band
-buckets), never O(corpus): the accepted corpus is never re-signatured,
-only its band table is equi-joined.
+(versioned manifest with an exclusive version claim and a locked
+``CURRENT`` advance — `sink/manifest_store.py`, shared with the pages
+sink — and a batch-id ledger, so re-delivered batches are committed
+no-ops) together with the dedup operators' persisted band index
+(`dedup_text.minhash_bands` / `incremental_near_duplicates`). Per-batch
+cost is O(batch + touched band buckets), never O(corpus): the accepted
+corpus is never re-signatured, only its band table is equi-joined.
 
 Reference tie-in: the at-least-once → idempotent-apply contract is the
 reference's slave loop (rs_redis_thread.c:10-85, apply before throttled
@@ -47,7 +47,8 @@ from mysql_syncer_spark.functions.dedup_text import (
     _token_array,
     minhash_signatures,
 )
-from mysql_syncer_spark.sink.pages_table import CommitConflictError
+from mysql_syncer_spark.sink import manifest_store
+from mysql_syncer_spark.sink.manifest_store import CommitConflictError
 
 
 def _verified_reject_ids(
@@ -167,7 +168,7 @@ class CorpusTable:
         verify_jaccard: float | None = None,
         band_compact_threshold: int = 16,
     ) -> "CorpusTable":
-        os.makedirs(os.path.join(path, "_versions"), exist_ok=True)
+        os.makedirs(manifest_store.versions_dir(path), exist_ok=True)
         os.makedirs(os.path.join(path, "docs"), exist_ok=True)
         os.makedirs(os.path.join(path, "bands"), exist_ok=True)
         t = cls(spark, path)
@@ -185,35 +186,10 @@ class CorpusTable:
         return t
 
     def manifest(self) -> CorpusManifest:
-        vdir = os.path.join(self.path, "_versions")
-        with open(os.path.join(vdir, "CURRENT")) as f:
-            version = int(f.read().strip())
-        with open(os.path.join(vdir, f"v{version:08d}.json")) as f:
-            return CorpusManifest.from_json(f.read())
+        return CorpusManifest.from_json(manifest_store.load(self.path))
 
     def _commit(self, m: CorpusManifest) -> None:
-        vdir = os.path.join(self.path, "_versions")
-        mpath = os.path.join(vdir, f"v{m.version:08d}.json")
-        tmp = mpath + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(m.to_json())
-        try:
-            os.link(tmp, mpath)  # atomic create-if-absent
-        except FileExistsError:
-            raise CommitConflictError(m.version)
-        finally:
-            os.unlink(tmp)
-        cur = os.path.join(vdir, "CURRENT")
-        try:
-            with open(cur) as f:
-                if int(f.read().strip()) >= m.version:
-                    return
-        except (FileNotFoundError, ValueError):
-            pass
-        tmp = cur + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(m.version))
-        os.rename(tmp, cur)
+        manifest_store.commit(self.path, m.version, m.to_json())
 
     # -- reads ----------------------------------------------------------
     def read(self) -> DataFrame:

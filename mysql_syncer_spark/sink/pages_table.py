@@ -56,6 +56,9 @@ from ..model import DDL_DTYPES
 from ..operators.filters import op_filter, oversized_ddl_filter, table_filter
 from ..operators.merge import batch_to_state, live_view
 from ..operators.routing import split_row_and_ddl
+from ..operators.skew import SkewPlanner
+from . import manifest_store
+from .manifest_store import CommitConflictError
 
 BASE_SCHEMA: list[list[str]] = [
     ["url", "string"],
@@ -74,15 +77,6 @@ _HIDDEN_DDL = [
 # Tiered compaction: a fold touches the bucket's base vintage only when
 # the delta tail has grown to this fraction of it (see _plan_fold).
 _MAJOR_FOLD_RATIO = 0.5
-
-
-class CommitConflictError(RuntimeError):
-    """A concurrent writer claimed this manifest version first — reload
-    the manifest, re-apply the batch's metadata, bump, retry."""
-
-    def __init__(self, version: int):
-        super().__init__(f"manifest version {version} already committed")
-        self.version = version
 
 
 @dataclass
@@ -157,7 +151,7 @@ class PagesTable:
     ) -> "PagesTable":
         from ..xxhash import CANARY_KEY
 
-        os.makedirs(os.path.join(path, "_versions"), exist_ok=True)
+        os.makedirs(manifest_store.versions_dir(path), exist_ok=True)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         t = cls(spark, path)
         schema = [list(x) for x in (schema or BASE_SCHEMA)]
@@ -188,60 +182,27 @@ class PagesTable:
 
     @classmethod
     def exists(cls, path: str) -> bool:
-        return os.path.exists(os.path.join(path, "_versions", "CURRENT"))
+        return manifest_store.exists(path)
+
+    @classmethod
+    def open(cls, spark: SparkSession, path: str, num_buckets: int = 64) -> "PagesTable":
+        """The table at ``path``, created with ``num_buckets`` if absent."""
+        if manifest_store.exists(path):
+            return cls(spark, path)
+        return cls.create(spark, path, num_buckets=num_buckets)
 
     def manifest(self, version: int | None = None) -> Manifest:
         """CURRENT manifest, or a historical snapshot (time travel — every
         commit's manifest persists until expired; vacuum() GCs only data
         dirs the CURRENT snapshot no longer references, so travel depth is
         bounded by vacuum cadence, exactly Iceberg expire_snapshots)."""
-        if version is None:
-            with open(os.path.join(self.path, "_versions", "CURRENT")) as f:
-                version = int(f.read().strip())
-        with open(
-            os.path.join(self.path, "_versions", f"v{version:08d}.json")
-        ) as f:
-            return Manifest.from_json(f.read())
+        return Manifest.from_json(manifest_store.load(self.path, version))
 
     def _commit(self, m: Manifest) -> None:
-        """Atomic + optimistic: the version file is claimed with an
-        EXCLUSIVE create (hardlink — fails if a concurrent writer already
-        committed this version number), then the CURRENT pointer advances
-        monotonically. A lost race raises CommitConflictError; the caller
-        rebases on the fresh manifest and retries (Iceberg's optimistic
-        concurrency protocol). The old os.rename overwrite would have let
-        two writers silently last-write-win."""
-        vdir = os.path.join(self.path, "_versions")
-        mpath = os.path.join(vdir, f"v{m.version:08d}.json")
-        tmp = mpath + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(m.to_json())
-        try:
-            os.link(tmp, mpath)  # atomic create-if-absent
-        except FileExistsError:
-            raise CommitConflictError(m.version)
-        finally:
-            os.unlink(tmp)
-        cur = os.path.join(vdir, "CURRENT")
-        # the pointer advance is serialized under an flock: without it a
-        # racing higher committer could land between our read-check and
-        # rename and be overwritten — CURRENT would move backwards (no
-        # data loss, but "current" would briefly point at an older
-        # snapshot). The version-file claim above stays lock-free.
-        import fcntl
-
-        with open(cur + ".lock", "a") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:  # never move CURRENT backwards past a racing higher commit
-                with open(cur) as f:
-                    if int(f.read().strip()) >= m.version:
-                        return
-            except (FileNotFoundError, ValueError):
-                pass
-            tmp = cur + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                f.write(str(m.version))
-            os.rename(tmp, cur)
+        """Atomic + optimistic (sink/manifest_store.py): a lost version
+        race raises CommitConflictError; the caller rebases on the fresh
+        manifest and retries."""
+        manifest_store.commit(self.path, m.version, m.to_json())
 
     # ------------------------------------------------------------------
     # read
@@ -348,13 +309,8 @@ class PagesTable:
         (Iceberg timestamp-based time travel). Driver-side walk of the
         O(retained versions) manifest JSONs; versions predating the
         commit_ts_ms metric count as arbitrarily old."""
-        vdir = os.path.join(self.path, "_versions")
         best = None
-        for fn in sorted(os.listdir(vdir)):
-            if not (fn.startswith("v") and fn.endswith(".json")):
-                continue
-            with open(os.path.join(vdir, fn)) as f:
-                mj = json.load(f)
+        for mj in manifest_store.load_all(self.path):
             cts = (mj.get("metrics") or {}).get("commit_ts_ms", 0)
             if int(cts) <= ts_ms:
                 best = int(mj["version"])
@@ -461,15 +417,8 @@ class PagesTable:
         manifest version with its commit metrics (events_in, dedup_hits,
         merge_ms, ...). Reads only the O(versions) manifest JSONs on the
         driver — no data files touched."""
-        import json as _json
-
-        vdir = os.path.join(self.path, "_versions")
         rows = []
-        for fn in sorted(os.listdir(vdir)):
-            if not (fn.startswith("v") and fn.endswith(".json")):
-                continue
-            with open(os.path.join(vdir, fn)) as f:
-                mj = _json.load(f)
+        for mj in manifest_store.load_all(self.path):
             met = mj.get("metrics") or {}
             rows.append(
                 (
@@ -578,10 +527,9 @@ class PagesTable:
         (streaming/runner.py), so the table-sized fold never sits inside
         a micro-batch trigger.
 
-        ``carry_salted``: a caller that streams many batches (plans/replay
-        serial loop, foreachBatch) can carry the skew planner's previous
-        decision here to SKIP the keys-only probe job — the same
-        amortization the pipelined path does internally; None probes.
+        ``carry_salted``: a caller that streams many batches carries its
+        ``SkewPlanner``'s decision here to SKIP the keys-only probe job
+        (``apply_batches``, the streaming foreachBatch sink); None probes.
         ``ddls``: this batch's DDL dicts when the caller pre-collected
         them for the whole log in ONE pushed-predicate scan (plans/replay)
         — skips the per-batch DDL collect job; None collects here.
@@ -632,19 +580,13 @@ class PagesTable:
             self._apply_ddl(m, d)
         mark("ddl_collect")
 
-        if cfg.skew_probe == "never":
-            carry = False if carry_salted is None else carry_salted
-        elif cfg.skew_probe == "always":
-            carry = None
-        else:
-            carry = carry_salted
         delta = self._write_batch_delta(
             row_events,
             cfg,
             dict(m.column_mapping),
             m.num_buckets,
             mark,
-            carry_salted=carry,
+            carry_salted=SkewPlanner.resolve(cfg, carry_salted),
             target_types=dict(m.schema),
             physical=dict(m.physical or {}),
         )
@@ -769,6 +711,30 @@ class PagesTable:
         self._manifest_after_commit = m
         return dict(m.metrics, skipped=False)
 
+    def apply_batches(
+        self,
+        batches,
+        cfg: TableConfig | None = None,
+        ddl_index: dict[str, list[dict]] | None = None,
+    ) -> list[dict]:
+        """Apply an ORDERED stream of ``(batch_id, events)`` batches one at
+        a time — the serial twin of ``apply_batches_pipelined``, with the
+        salting decision carried between batches by one ``SkewPlanner``.
+        ``ddl_index`` (batch_id → DDL dicts, pre-collected for the whole
+        log) skips each batch's DDL collect job; None collects per batch."""
+        cfg = cfg or TableConfig(name="web.pages")
+        planner = SkewPlanner(cfg)
+        results = []
+        for batch_id, events in batches:
+            res = self.apply_batch(
+                batch_id, events, cfg,
+                carry_salted=planner.carry(),
+                ddls=None if ddl_index is None else ddl_index.get(str(batch_id), []),
+            )
+            planner.observe(res)
+            results.append(res)
+        return results
+
     def apply_batches_pipelined(
         self,
         batches,
@@ -801,42 +767,7 @@ class PagesTable:
         ddl_index = ddl_index or {}
         results: list[dict] = []
         inflight: list[tuple[str, list[dict], float, object]] = []
-        # Adaptive skew planner state (cfg.skew_probe="auto"): the first
-        # batches probe exactly; afterwards the decision carries and each
-        # batch's observe() signal is free. A duplicate-share move of more
-        # than salt_reprobe_delta since the last probe triggers a re-probe
-        # (signal EDGES, not level — a stable-dup-share stream never pays
-        # the probe again; a hot-key flood moves the share and gets the
-        # exact per-bucket check within ~depth batches).
-        planner = {
-            "last_probe_share": None,
-            "latest_share": None,
-            "salted": False,
-            "probe_inflight": False,
-        }
-
-        def carry_for_submit() -> bool | None:
-            if cfg.skew_probe == "always":
-                return None
-            if cfg.skew_probe == "never":
-                return planner["salted"]
-            if planner["last_probe_share"] is None:
-                # exactly ONE startup probe; batches submitted while it is
-                # still in flight run optimistically unsalted (correct
-                # either way) instead of paying depth probes
-                if planner["probe_inflight"]:
-                    return False
-                planner["probe_inflight"] = True
-                return None
-            if (
-                planner["latest_share"] is not None
-                and abs(planner["latest_share"] - planner["last_probe_share"])
-                > cfg.salt_reprobe_delta
-                and not planner["probe_inflight"]
-            ):
-                planner["probe_inflight"] = True
-                return None  # signal moved → re-probe
-            return planner["salted"]
+        planner = SkewPlanner(cfg)
 
         # Async threshold compaction (Iceberg async rewrite_data_files):
         # the table-sized fold never sits in the serial commit path — it
@@ -891,11 +822,6 @@ class PagesTable:
             tw = time.time()
             delta = fut.result()
             agg["wait"] += time.time() - tw
-            if delta.get("skew_probed"):
-                planner["last_probe_share"] = delta["dup_share"]
-                planner["salted"] = delta["use_salted"]
-                planner["probe_inflight"] = False
-            planner["latest_share"] = delta["dup_share"]
             tw = time.time()
             for d in ddls:  # buffered: manifest mutates with ITS commit
                 self._apply_ddl(m, d)
@@ -904,12 +830,12 @@ class PagesTable:
             fold_compaction_if_ready(bid)
             agg["fold"] += time.time() - tw
             tw = time.time()
-            results.append(
-                self._commit_batch(
-                    m, bid, delta, len(ddls), t0, inline_compact=False,
-                    rebase=lambda fm, _ds=ddls: [self._apply_ddl(fm, d) for d in _ds],
-                )
+            res = self._commit_batch(
+                m, bid, delta, len(ddls), t0, inline_compact=False,
+                rebase=lambda fm, _ds=ddls: [self._apply_ddl(fm, d) for d in _ds],
             )
+            planner.observe(res)
+            results.append(res)
             agg["commit"] += time.time() - tw
             m = self._manifest_after_commit  # follow any conflict rebase
             tw = time.time()
@@ -931,7 +857,7 @@ class PagesTable:
                     mapping = dict(plan_m.column_mapping)
                     target_types = dict(plan_m.schema)
                     physical = dict(plan_m.physical or {})
-                    carry = carry_for_submit()  # ordered: stays on main
+                    carry = planner.carry()  # ordered: stays on main
                     t0 = time.time()
 
                     # the filter graph (F1/F3 + op routing) is built INSIDE
@@ -1576,13 +1502,8 @@ class PagesTable:
         """Data dirs referenced by ANY version file currently on disk —
         the committed universe. A dir outside it is either a crashed
         attempt or an in-flight uncommitted write."""
-        vdir = os.path.join(self.path, "_versions")
         known: set = set()
-        for fn in os.listdir(vdir):
-            if not (fn.startswith("v") and fn.endswith(".json")):
-                continue
-            with open(os.path.join(vdir, fn)) as f:
-                mj = json.load(f)
+        for mj in manifest_store.load_all(self.path):
             for lst in (mj.get("buckets") or {}).values():
                 known |= {d.split(os.sep)[1] for d in lst}
         return known
@@ -1636,12 +1557,8 @@ class PagesTable:
         for ``grace_sec`` before GC treats them as crash orphans."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        vdir = os.path.join(self.path, "_versions")
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(vdir)
-            if f.startswith("v") and f.endswith(".json")
-        )
+        vdir = manifest_store.versions_dir(self.path)
+        versions = manifest_store.versions(self.path)
         retained = versions[-keep_last:]
         # the committed universe BEFORE expiry: dirs referenced only by
         # to-be-expired versions stay "known" (removable at any age),
@@ -1764,15 +1681,11 @@ class PagesTable:
     # observability
     # ------------------------------------------------------------------
     def metrics_history(self) -> list[dict]:
-        vdir = os.path.join(self.path, "_versions")
-        out = []
-        for fn in sorted(os.listdir(vdir)):
-            if fn.startswith("v") and fn.endswith(".json"):
-                with open(os.path.join(vdir, fn)) as f:
-                    m = json.loads(f.read())
-                if m.get("metrics"):
-                    out.append(m["metrics"])
-        return out
+        return [
+            mj["metrics"]
+            for mj in manifest_store.load_all(self.path)
+            if mj.get("metrics")
+        ]
 
 
 class AsyncCompactor:
@@ -1801,18 +1714,32 @@ class AsyncCompactor:
         return folded
 
     def close(self) -> None:
-        """Drain: wait for an in-flight compute and commit its fold."""
-        if self._fut is not None:
-            self._fut.result()
-            self._fold_if_ready()
-        self._pool.shutdown(wait=True)
+        """Drain: wait for an in-flight compute and commit its fold. The
+        maintenance pool is shut down even if the fold fails."""
+        from concurrent.futures import wait
+
+        try:
+            if self._fut is not None:
+                wait([self._fut])
+                self._fold_if_ready()
+        finally:
+            self._pool.shutdown(wait=True)
 
     def _fold_if_ready(self) -> int:
         fut = self._fut
         if fut is None or not fut.done():
             return 0
-        snapshot, cdirs, crows = fut.result()
         self._fut = None
+        try:
+            snapshot, cdirs, crows = fut.result()
+        except Exception as e:
+            # best-effort maintenance never fails the run whose batches it
+            # serves (they are already committed): drop this fold — its
+            # written dirs are unreferenced orphans vacuum() removes
+            import warnings
+
+            warnings.warn(f"compaction failed, fold dropped: {e!r}", stacklevel=2)
+            return 0
         if not cdirs:
             return 0
         t = self._table

@@ -57,14 +57,11 @@ referenced fields.
 
 from __future__ import annotations
 
-import glob
-import os
-import re
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import topic_archive
 from .debezium import (
     DEBEZIUM_PAYLOAD_STRUCT as PAYLOAD_STRUCT,
 )
@@ -485,32 +482,14 @@ def encode_canal(
     return per_msg.unionByName(ddl_msgs)
 
 
+# topic archive on disk: sources/topic_archive.py, one file per binlog file
+_CODEC = topic_archive.TopicCodec(encode_canal, decode_canal, topic_archive.JSONL)
+
+
 def write_canal_json(
     events: DataFrame, out_dir: str, rows_per_message: int = 1
 ) -> list[str]:
-    """Topic archive on disk: one JSON-lines file per source binlog file
-    (``topic-{seq:06d}.jsonl``), streamed via toLocalIterator (never
-    whole-topic driver-resident)."""
-    os.makedirs(out_dir, exist_ok=True)
-    enc = encode_canal(events, rows_per_message=rows_per_message)
-    it = enc.orderBy("file_seq", "log_pos").toLocalIterator()
-    paths: list[str] = []
-    cur_seq, fh = None, None
-    try:
-        for r in it:
-            seq = int(r["file_seq"])
-            if seq != cur_seq:
-                if fh is not None:
-                    fh.close()
-                cur_seq = seq
-                path = os.path.join(out_dir, f"topic-{seq:06d}.jsonl")
-                fh = open(path, "w", encoding="utf-8")
-                paths.append(path)
-            fh.write(r["value"] + "\n")
-    finally:
-        if fh is not None:
-            fh.close()
-    return paths
+    return topic_archive.write(_CODEC, events, out_dir, rows_per_message=rows_per_message)
 
 
 def read_canal_json(
@@ -519,63 +498,10 @@ def read_canal_json(
     payload_struct: T.StructType = PAYLOAD_STRUCT,
     streaming: bool = False,
 ) -> DataFrame:
-    if streaming:
-        raw = spark.readStream.text(path)
-    else:
-        raw = spark.read.text(path)
-    return decode_canal(raw, value_col="value", payload_struct=payload_struct)
+    return topic_archive.read(_CODEC, spark, path, streaming, payload_struct=payload_struct)
 
 
 def replay_canal_json(
-    spark: SparkSession,
-    json_dir: str,
-    table_path: str,
-    cfg=None,
-    num_buckets: int = 64,
+    spark: SparkSession, json_dir: str, table_path: str, cfg=None, num_buckets: int = 64
 ) -> dict:
-    """Batch replay of an archived canal topic — same exactly-once ledger
-    keys as the Debezium/Maxwell/binlog replays, file-pruned per batch by
-    the ``topic-{seq:06d}.jsonl`` naming (O(files) total bytes; foreign
-    layouts fall back to a content filter)."""
-    from ..plans.replay import default_pages_config
-    from ..sink.pages_table import PagesTable
-
-    cfg = cfg or default_pages_config()
-    if PagesTable.exists(table_path):
-        table = PagesTable(spark, table_path)
-    else:
-        table = PagesTable.create(spark, table_path, num_buckets=num_buckets)
-    named: dict[int, str] = {}
-    for p in glob.glob(os.path.join(json_dir, "topic-*.jsonl")):
-        m = re.fullmatch(r"topic-(\d+)\.jsonl", os.path.basename(p))
-        if m:
-            named[int(m.group(1))] = p
-    if named:
-        per_seq = [
-            (seq, read_canal_json(spark, path))
-            for seq, path in sorted(named.items())
-        ]
-    else:
-        events = read_canal_json(spark, json_dir)
-        seqs = [
-            r["file_seq"]
-            for r in events.select("file_seq")
-            .distinct()
-            .orderBy("file_seq")
-            .collect()
-        ]
-        per_seq = [
-            (seq, events.filter(F.col("file_seq") == seq)) for seq in seqs
-        ]
-    results = []
-    for seq, batch_events in per_seq:
-        results.append(
-            table.apply_batch(
-                batch_id=f"fileseq-{seq}", events=batch_events, cfg=cfg
-            )
-        )
-    return {
-        "batches": len(results),
-        "events_in": sum(r.get("events_in", 0) for r in results),
-        "results": results,
-    }
+    return topic_archive.replay(_CODEC, spark, json_dir, table_path, cfg, num_buckets)

@@ -38,13 +38,12 @@ already produces.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import DDL_STRUCT
+from . import topic_archive
 
 # Engine payload (input_hint base schema + the evolvable column, same
 # shape wire_log.WIRE_PAYLOAD_STRUCT decodes to).
@@ -466,36 +465,14 @@ def encode_debezium(
     )
 
 
+# topic archive on disk: sources/topic_archive.py, one file per binlog file
+_CODEC = topic_archive.TopicCodec(encode_debezium, decode_debezium, topic_archive.JSONL)
+
+
 def write_debezium_json(
     events: DataFrame, out_dir: str, server_name: str = "mysql1"
 ) -> list[str]:
-    """Dump a typed event log as Debezium JSON-lines files, one file per
-    binlog file_seq (rotation parity with write_event_log) — the on-disk
-    shape of a topic archived by a sink like Kafka Connect S3. Driver
-    writes per rotation file (fixture-side; volumes here are test-scale)."""
-    os.makedirs(out_dir, exist_ok=True)
-    enc = encode_debezium(events, server_name)
-    # toLocalIterator streams one partition at a time to the driver —
-    # the whole topic is never resident at once (the old .collect() was a
-    # memory foot-gun sitting next to production entry points)
-    it = enc.orderBy("file_seq", "log_pos").toLocalIterator()
-    paths: list[str] = []
-    cur_seq, fh = None, None
-    try:
-        for r in it:
-            seq = int(r["file_seq"])
-            if seq != cur_seq:
-                if fh is not None:
-                    fh.close()
-                cur_seq = seq
-                path = os.path.join(out_dir, f"topic-{seq:06d}.jsonl")
-                fh = open(path, "w", encoding="utf-8")
-                paths.append(path)
-            fh.write(r["value"] + "\n")
-    finally:
-        if fh is not None:
-            fh.close()
-    return paths
+    return topic_archive.write(_CODEC, events, out_dir, server_name=server_name)
 
 
 def read_debezium_json(
@@ -504,79 +481,10 @@ def read_debezium_json(
     payload_struct: T.StructType = DEBEZIUM_PAYLOAD_STRUCT,
     streaming: bool = False,
 ) -> DataFrame:
-    """Typed event stream from a dir of Debezium JSON-lines files.
-    ``streaming=True`` returns a readStream tail (new topic-archive files
-    are discovered incrementally, same rotation semantics as the binlog
-    tail)."""
-    if streaming:
-        raw = spark.readStream.text(path)
-    else:
-        raw = spark.read.text(path)
-    return decode_debezium(raw, value_col="value", payload_struct=payload_struct)
+    return topic_archive.read(_CODEC, spark, path, streaming, payload_struct=payload_struct)
 
 
 def replay_debezium_json(
-    spark: SparkSession,
-    json_dir: str,
-    table_path: str,
-    cfg=None,
-    num_buckets: int = 64,
+    spark: SparkSession, json_dir: str, table_path: str, cfg=None, num_buckets: int = 64
 ) -> dict:
-    """Batch replay of an archived Debezium topic into a PagesTable: one
-    exactly-once commit per source binlog file (batch_id = file_seq, same
-    ledger keys as plans.replay so a later binlog/wire replay of the same
-    stream is a no-op). DDL rides in-stream and applies before each
-    batch's merge, transactionally with it.
-
-    File-pruned like plans.replay: the writer names one file per binlog
-    file_seq (``topic-{seq:06d}.jsonl``), so each batch reads EXACTLY its
-    own file — O(files) total bytes over a replay. Foreign archives whose
-    names don't follow that convention fall back to a content filter
-    (file_seq parsed out of the JSON) over the full dir, which re-scans
-    the archive once per batch — fixture-scale only."""
-    import glob
-    import re
-
-    from ..plans.replay import default_pages_config
-    from ..sink.pages_table import PagesTable
-
-    cfg = cfg or default_pages_config()
-    if PagesTable.exists(table_path):
-        table = PagesTable(spark, table_path)
-    else:
-        table = PagesTable.create(spark, table_path, num_buckets=num_buckets)
-    named: dict[int, str] = {}
-    for p in glob.glob(os.path.join(json_dir, "topic-*.jsonl")):
-        m = re.fullmatch(r"topic-(\d+)\.jsonl", os.path.basename(p))
-        if m:
-            named[int(m.group(1))] = p
-    if named:  # one-file-per-batch read: never rescans the archive
-        per_seq = [
-            (seq, read_debezium_json(spark, path))
-            for seq, path in sorted(named.items())
-        ]
-    else:  # foreign layout: content filter (O(files) scans per batch)
-        events = read_debezium_json(spark, json_dir)
-        seqs = [
-            r["file_seq"]
-            for r in events.select("file_seq")
-            .distinct()
-            .orderBy("file_seq")
-            .collect()
-        ]
-        per_seq = [
-            (seq, events.filter(F.col("file_seq") == seq)) for seq in seqs
-        ]
-    results = []
-    for seq, batch_events in per_seq:
-        res = table.apply_batch(
-            batch_id=f"fileseq-{seq}",
-            events=batch_events,
-            cfg=cfg,
-        )
-        results.append(res)
-    return {
-        "batches": len(results),
-        "events_in": sum(r.get("events_in", 0) for r in results),
-        "results": results,
-    }
+    return topic_archive.replay(_CODEC, spark, json_dir, table_path, cfg, num_buckets)

@@ -30,25 +30,23 @@ in the topic dir).
 
 Scale notes (100 TB): decode is a map-only transformation (no shuffle),
 batched through Arrow; the topic archive is one parquet file per source
-binlog file (``topic-{seq:06d}.parquet``), so replay prunes per-batch
+binlog file (``sources/topic_archive.py``), so replay prunes per-batch
 reads by FILENAME — O(files) total bytes over a replay, never an
 O(files²) archive rescan.
 """
 
 from __future__ import annotations
 
-import glob
 import json
-import os
 import re
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..xxhash import chain_hash
+from . import topic_archive
 from .debezium import DEBEZIUM_PAYLOAD_STRUCT
 from .wire_log import parse_ddl_query
 
@@ -672,67 +670,18 @@ def avro_dead_letters(
     return df.mapInPandas(mapper, schema=out_schema)
 
 
-# ---------------------------------------------------------------------------
-# topic archive on disk (parquet, one file per source binlog file)
-# ---------------------------------------------------------------------------
+# topic archive on disk: sources/topic_archive.py, one registry-framed
+# parquet file per binlog file + the registry dump _registry.json
+_CODEC = topic_archive.TopicCodec(
+    encode_debezium_avro, decode_debezium_avro, topic_archive.AVRO, default_registry
+)
+load_registry = topic_archive.load_registry
+
 
 def write_debezium_avro(
     events: DataFrame, out_dir: str, server_name: str = "mysql1"
 ) -> list[str]:
-    """Dump a typed event log as a registry-framed Avro topic archive:
-    ``topic-{seq:06d}.parquet`` (columns log_pos/key/value) + the
-    registry dump ``_registry.json``. Streams via toLocalIterator —
-    the whole topic is never driver-resident (fixture side; a real
-    deployment's producer is the Debezium connector + a Kafka S3 sink)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(out_dir, exist_ok=True)
-    payload_struct = events.schema["after"].dataType
-    with open(os.path.join(out_dir, "_registry.json"), "w") as f:
-        json.dump({str(k): v for k, v in
-                   default_registry(payload_struct).items()}, f, indent=1)
-    enc = encode_debezium_avro(events, server_name, payload_struct)
-    it = enc.orderBy("file_seq", "log_pos").toLocalIterator()
-    paths: list[str] = []
-    cur_seq = None
-    buf: dict[str, list] = {"log_pos": [], "key": [], "value": []}
-
-    def _flush(seq):
-        if seq is None or not buf["value"]:
-            return
-        path = os.path.join(out_dir, f"topic-{seq:06d}.parquet")
-        pq.write_table(
-            pa.table({
-                "log_pos": pa.array(buf["log_pos"], pa.int64()),
-                "key": pa.array(buf["key"], pa.binary()),
-                "value": pa.array(buf["value"], pa.binary()),
-            }),
-            path,
-        )
-        paths.append(path)
-        for v in buf.values():
-            v.clear()
-
-    for r in it:
-        seq = int(r["file_seq"])
-        if seq != cur_seq:
-            _flush(cur_seq)
-            cur_seq = seq
-        buf["log_pos"].append(int(r["log_pos"]))
-        buf["key"].append(bytes(r["key"]) if r["key"] is not None else None)
-        buf["value"].append(bytes(r["value"]))
-    _flush(cur_seq)
-    return paths
-
-
-def load_registry(path: str) -> dict[int, dict] | None:
-    p = os.path.join(path, "_registry.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        raw = json.load(f)
-    return {int(k): v for k, v in raw.items()}
+    return topic_archive.write(_CODEC, events, out_dir, server_name=server_name)
 
 
 def read_debezium_avro(
@@ -742,72 +691,12 @@ def read_debezium_avro(
     payload_struct: T.StructType = DEBEZIUM_PAYLOAD_STRUCT,
     streaming: bool = False,
 ) -> DataFrame:
-    """Typed event stream from an Avro topic archive dir (or one file).
-    ``streaming=True`` tails the dir with readStream (new topic files
-    discovered incrementally)."""
-    if registry is None:
-        root = path if os.path.isdir(path) else os.path.dirname(path)
-        registry = load_registry(root)
-    schema = "log_pos long, key binary, value binary"
-    if streaming:
-        raw = spark.readStream.schema(schema).parquet(path)
-    else:
-        raw = spark.read.parquet(path)
-    return decode_debezium_avro(raw, registry, payload_struct=payload_struct)
+    return topic_archive.read(
+        _CODEC, spark, path, streaming, registry, payload_struct=payload_struct
+    )
 
 
 def replay_debezium_avro(
-    spark: SparkSession,
-    avro_dir: str,
-    table_path: str,
-    cfg=None,
-    num_buckets: int = 64,
+    spark: SparkSession, avro_dir: str, table_path: str, cfg=None, num_buckets: int = 64
 ) -> dict:
-    """Batch replay of an archived Avro topic into a PagesTable — same
-    exactly-once ledger keys as the JSON and binlog replays (batch_id =
-    file_seq), file-pruned per batch by the ``topic-{seq:06d}.parquet``
-    naming (O(files) total bytes; foreign layouts fall back to a
-    content filter)."""
-    from ..plans.replay import default_pages_config
-    from ..sink.pages_table import PagesTable
-
-    cfg = cfg or default_pages_config()
-    registry = load_registry(avro_dir)
-    if PagesTable.exists(table_path):
-        table = PagesTable(spark, table_path)
-    else:
-        table = PagesTable.create(spark, table_path, num_buckets=num_buckets)
-    named: dict[int, str] = {}
-    for p in glob.glob(os.path.join(avro_dir, "topic-*.parquet")):
-        m = re.fullmatch(r"topic-(\d+)\.parquet", os.path.basename(p))
-        if m:
-            named[int(m.group(1))] = p
-    if named:
-        per_seq = [
-            (seq, read_debezium_avro(spark, path, registry))
-            for seq, path in sorted(named.items())
-        ]
-    else:
-        events = read_debezium_avro(spark, avro_dir, registry)
-        seqs = [
-            r["file_seq"]
-            for r in events.select("file_seq")
-            .distinct()
-            .orderBy("file_seq")
-            .collect()
-        ]
-        per_seq = [
-            (seq, events.filter(F.col("file_seq") == seq)) for seq in seqs
-        ]
-    results = []
-    for seq, batch_events in per_seq:
-        results.append(
-            table.apply_batch(
-                batch_id=f"fileseq-{seq}", events=batch_events, cfg=cfg
-            )
-        )
-    return {
-        "batches": len(results),
-        "events_in": sum(r.get("events_in", 0) for r in results),
-        "results": results,
-    }
+    return topic_archive.replay(_CODEC, spark, avro_dir, table_path, cfg, num_buckets)

@@ -18,14 +18,54 @@ equivalent:
 
 from __future__ import annotations
 
+import json
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import TableConfig
+from ..operators.skew import SkewPlanner
+from ..sink import manifest_store
 from ..sink.pages_table import PagesTable
 from ..sources.event_log import stream_event_log
+
+
+def batch_source_files(checkpoint_dir: str, batch_id: int) -> list[str]:
+    """The input files of trigger ``batch_id``, read from the
+    FileStreamSource metadata log of the query checkpointed at
+    ``checkpoint_dir`` — a driver-side file read, no Spark job. The
+    batch's entries are in ``sources/0/<batchId>``, or, once the log has
+    rolled up, among the entries of ``sources/0/<batchId>.compact`` (each
+    entry carries its batchId). Entries are URIs, so ``file:`` paths are
+    decoded with ``urlparse`` + ``unquote`` (a space is ``%20`` there);
+    other schemes are returned as written.
+
+    Reading only ``sources/0`` is correct because the runner uses footer
+    DDLs only when it built the query's one source itself (no ``source``
+    or ``transform`` argument): a query with a single source checkpoints
+    it as source 0."""
+    d = os.path.join(checkpoint_dir, "sources", "0")
+    out: list[str] = []
+    for fn in (str(batch_id), f"{batch_id}.compact"):
+        p = os.path.join(d, fn)
+        if not os.path.exists(p):
+            continue
+        with open(p) as f:
+            for line in f:
+                line = line.strip()
+                if not line.startswith("{"):
+                    continue  # the log's version header
+                e = json.loads(line)
+                if fn.endswith(".compact") and e.get("batchId") != batch_id:
+                    continue
+                u = urlparse(e.get("path", ""))
+                out.append(
+                    unquote(u.path) if u.scheme in ("", "file") else e["path"]
+                )
+        break
+    return out
 
 
 def start_streaming_replay(
@@ -69,48 +109,13 @@ def start_streaming_replay(
         from ..plans.replay import default_pages_config
 
         cfg = default_pages_config()
-    if PagesTable.exists(table_path):
-        table = PagesTable(spark, table_path)
-    else:
-        table = PagesTable.create(spark, table_path, num_buckets=num_buckets)
-
-    # micro-batch skew planner: probe the first batch, carry the salting
-    # decision, re-probe on duplicate-share signal edges — the same
-    # amortization the batch paths use; one Spark job per steady micro-batch
-    planner = {"last_probe_share": None, "salted": False, "latest": None}
+    table = PagesTable.open(spark, table_path, num_buckets)
+    planner = SkewPlanner(cfg)
     # threshold compaction runs on a maintenance thread and commits
     # between micro-batches — the trigger never pays the table-sized fold
     # (the cause of the round-5 p95 spikes: a fold landing INSIDE a
     # micro-batch tripled its latency)
     compactor = table.async_compactor()
-
-    def _batch_source_files(batch_id: int) -> list[str]:
-        """The trigger's input files from the FileStreamSource metadata
-        log (``<checkpoint>/sources/0/<batchId>``) — a driver-side file
-        read, no Spark job. Entries may live in a ``.compact`` rollup
-        instead; both carry per-entry batchIds."""
-        import json as _json
-
-        d = os.path.join(checkpoint_dir, "sources", "0")
-        out: list[str] = []
-        for fn in (str(batch_id), f"{batch_id}.compact"):
-            p = os.path.join(d, fn)
-            if not os.path.exists(p):
-                continue
-            with open(p) as f:
-                for line in f:
-                    line = line.strip()
-                    if not line.startswith("{"):
-                        continue
-                    e = _json.loads(line)
-                    if fn.endswith(".compact") and e.get("batchId") != batch_id:
-                        continue
-                    path = e.get("path", "")
-                    if path.startswith("file:"):
-                        path = path[len("file:"):]
-                    out.append(path)
-            break
-        return out
 
     def _footer_ddls(batch_id: int) -> list | None:
         """Micro-batch DDL rows from the source files' parquet footers —
@@ -120,7 +125,7 @@ def start_streaming_replay(
         from ..plans.replay import _BINLOG_RE, ddl_rows_from_footers
 
         try:
-            files = _batch_source_files(batch_id)
+            files = batch_source_files(checkpoint_dir, batch_id)
         except Exception:
             return None
         if not files or not all(_BINLOG_RE.search(f) for f in files):
@@ -132,23 +137,10 @@ def start_streaming_replay(
         if partial:
             from ..operators.partial import apply_partial_batch
 
-            res = apply_partial_batch(
-                table, f"stream-{batch_id}", batch_df, cfg
-            )
-            planner["latest"] = res.get("dup_share")
+            apply_partial_batch(table, f"stream-{batch_id}", batch_df, cfg)
             return
-        if cfg.skew_probe != "auto" or planner["last_probe_share"] is None:
-            carry = None
-        elif (
-            planner["latest"] is not None
-            and abs(planner["latest"] - planner["last_probe_share"])
-            > cfg.salt_reprobe_delta
-        ):
-            carry = None
-        else:
-            carry = planner["salted"]
         res = table.apply_batch(
-            f"stream-{batch_id}", batch_df, cfg, carry_salted=carry,
+            f"stream-{batch_id}", batch_df, cfg, carry_salted=planner.carry(),
             ddls=(
                 None
                 if transform is not None or source is not None
@@ -156,11 +148,8 @@ def start_streaming_replay(
             ),
             inline_compact=False,
         )
+        planner.observe(res)
         if not res.get("skipped"):
-            if res.get("skew_probed"):
-                planner["last_probe_share"] = res.get("dup_share")
-                planner["salted"] = bool(res.get("salted_merge"))
-            planner["latest"] = res.get("dup_share")
             compactor.tick()
 
     stream = (
@@ -280,7 +269,7 @@ def start_corpus_ingest(
     ``dir/*.parquet`` pointing at the part files."""
     from ..sink.corpus_table import CorpusTable
 
-    if os.path.exists(os.path.join(table_path, "_versions", "CURRENT")):
+    if manifest_store.exists(table_path):
         table = CorpusTable(spark, table_path)
     else:
         table = CorpusTable.create(spark, table_path, k=k, bands=bands)

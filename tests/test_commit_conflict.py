@@ -5,6 +5,8 @@ retries; a concurrently-committed identical batch id is skipped
 import os
 import tempfile
 
+import pytest
+
 from mysql_syncer_spark.generator import GenSpec, generate_events, write_event_log
 from mysql_syncer_spark.sink.pages_table import (
     CommitConflictError,
@@ -89,7 +91,50 @@ def test_exclusive_create_raises_conflict(spark, tmp_path):
     t._commit(m)
     m2 = t.manifest()  # same version target from a second handle
     m2.version = m.version
-    import pytest
-
     with pytest.raises(CommitConflictError):
         t._commit(m2)
+
+
+@pytest.mark.parametrize("kind", ["pages", "corpus"])
+def test_current_never_moves_backwards(spark, tmp_path, monkeypatch, kind):
+    """Writer v1 pauses at its CURRENT rename while writer v2 commits:
+    CURRENT must end at 2 for both table kinds (the pointer advance is
+    serialized, so v2 waits for v1 instead of being overwritten by it)."""
+    import threading
+
+    from mysql_syncer_spark.sink.corpus_table import CorpusTable
+
+    path = str(tmp_path / kind)
+    if kind == "pages":
+        t = PagesTable.create(spark, path, num_buckets=2)
+    else:
+        t = CorpusTable.create(spark, path)
+    m1, m2 = t.manifest(), t.manifest()
+    m1.version, m2.version = 1, 2
+
+    at_rename, v2_done = threading.Event(), threading.Event()
+    real_rename = os.rename
+
+    def paused_rename(src, dst):
+        if dst.endswith("CURRENT") and threading.current_thread().name == "v1":
+            at_rename.set()
+            # with the pointer lock held, v2 cannot finish: give up waiting
+            v2_done.wait(timeout=2.0)
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", paused_rename)
+    w1 = threading.Thread(target=t._commit, args=(m1,), name="v1")
+    w1.start()
+    assert at_rename.wait(timeout=30)
+
+    def commit_v2():
+        t._commit(m2)
+        v2_done.set()
+
+    w2 = threading.Thread(target=commit_v2, name="v2")
+    w2.start()
+    w1.join(timeout=30)
+    w2.join(timeout=30)
+    with open(os.path.join(path, "_versions", "CURRENT")) as f:
+        assert int(f.read().strip()) == 2
+    assert t.manifest().version == 2

@@ -226,3 +226,33 @@ def test_maxwell_read_helper(spark):
     assert sorted(_norm_event(r) for r in back.collect()) == sorted(
         _norm_event(r) for r in events.collect()
     )
+
+
+def test_maxwell_replay_foreign_layout_filters_by_content(spark, tmp_path):
+    """An archive whose files don't follow the topic naming (a connector's
+    own layout) still replays one batch per source binlog file, via the
+    file_seq carried in the messages, to the same state."""
+    tbl = generate_events(GenSpec(n_events=600, events_per_file=200))
+    d_typed = tempfile.mkdtemp(prefix="mx_foreign_typed_")
+    write_event_log(tbl, d_typed)
+    d_named = str(tmp_path / "named")
+    paths = write_maxwell_json(read_event_log(spark, d_typed), d_named)
+    d_foreign = str(tmp_path / "foreign")
+    os.makedirs(d_foreign)
+    for k, p in enumerate(paths):
+        os.link(p, os.path.join(d_foreign, f"maxwell+0+{k * 1000:010d}.json"))
+
+    named = replay_maxwell_json(spark, d_named, str(tmp_path / "a"), num_buckets=4)
+    foreign = replay_maxwell_json(spark, d_foreign, str(tmp_path / "b"), num_buckets=4)
+    assert foreign["batches"] == named["batches"] == 3
+    assert [r["batch_id"] for r in foreign["results"]] == [
+        r["batch_id"] for r in named["results"]
+    ]
+
+    def state(path):
+        return sorted(
+            (r["url"], r["lang"], r["text"])
+            for r in PagesTable(spark, path).read().collect()
+        )
+
+    assert state(str(tmp_path / "b")) == state(str(tmp_path / "a"))

@@ -174,3 +174,65 @@ def test_progress_listener_filters_other_queries(spark, tmp_path):
     started_ids = {r["id"] for r in rows if r["event"] == "started"}
     term_ids = {r["id"] for r in rows if r["event"] == "terminated"}
     assert term_ids <= started_ids, (term_ids, started_ids)
+
+
+def test_batch_source_files_decodes_uris_and_reads_compact_rollups(tmp_path):
+    """Hand-written FileStreamSource log: entries are URIs (a space is
+    %20), and once rolled up a batch's entries live in ``<N>.compact``
+    among other batches' entries."""
+    import json
+
+    from mysql_syncer_spark.streaming.runner import batch_source_files
+
+    d = tmp_path / "ckpt" / "sources" / "0"
+    d.mkdir(parents=True)
+
+    def entry(path, batch_id):
+        return json.dumps({"path": path, "timestamp": 1, "batchId": batch_id})
+
+    (d / "0").write_text(
+        "v1\n" + entry("file:///data/event%20log/binlog-000000.parquet", 0) + "\n"
+    )
+    (d / "9.compact").write_text(
+        "v1\n"
+        + "\n".join(
+            entry(f"file:/data/log/binlog-{i:06d}.parquet", i) for i in range(10)
+        )
+        + "\n"
+    )
+    ckpt = str(tmp_path / "ckpt")
+    assert batch_source_files(ckpt, 0) == ["/data/event log/binlog-000000.parquet"]
+    assert batch_source_files(ckpt, 9) == ["/data/log/binlog-000009.parquet"]
+    assert batch_source_files(ckpt, 10) == []
+
+
+def test_failed_compaction_never_fails_the_stream(spark, tmp_path, monkeypatch):
+    """A raising fold compute on the maintenance thread is warned about
+    and dropped; every micro-batch still commits and the final state
+    matches the oracle."""
+    import pytest
+
+    from mysql_syncer_spark.generator import GenSpec, generate_events, write_event_log
+
+    tbl = generate_events(GenSpec(n_events=1200, events_per_file=300))
+    log_dir = str(tmp_path / "log")
+    write_event_log(tbl, log_dir)
+    table_path = str(tmp_path / "pages")
+    # threshold 1: every bucket is past it from the second batch on
+    PagesTable.create(spark, table_path, num_buckets=2, compact_threshold=1)
+
+    calls = []
+
+    def failing_compute(self, *args, **kwargs):
+        calls.append(1)
+        raise OSError("disk full")
+
+    monkeypatch.setattr(PagesTable, "_compact_compute", failing_compute)
+    with pytest.warns(UserWarning, match="compaction failed"):
+        res = run_streaming_replay(
+            spark, log_dir, table_path, str(tmp_path / "ckpt"), num_buckets=2
+        )
+    assert calls
+    assert res["n_commits"] == 4
+    oracle, _, _ = sequential_replay(tbl)
+    assert_state_equal(PagesTable(spark, table_path).read().collect(), oracle)
