@@ -79,6 +79,41 @@ def _token_array(text: Column) -> Column:
     )
 
 
+def _signature_cols(toks: Column, k: int) -> list[Column]:
+    """The K MinHash slots of a token-array column: slot i is
+    min(md5("mh{i}|" || token)) over the array — the one definition of
+    the signature, shared by :func:`minhash_signatures` and the corpus
+    sink's per-batch materialization. NULL for an empty array."""
+    def _seeded(i: int):
+        seed = F.lit(f"mh{i}|")
+        # single-parameter lambda: a 2-arg lambda would be treated as the
+        # (element, index) form by transform()
+        return lambda t: F.md5(F.concat(seed, t))
+
+    return [F.array_min(F.transform(toks, _seeded(i))) for i in range(k)]
+
+
+def _band_key_cols(sig: list[Column], bands: int) -> list[Column]:
+    """The LSH band keys of a signature: band b hashes its rows_per_band =
+    k/bands consecutive slots — the one definition shared by
+    :func:`minhash_bands`, :func:`_banded_keys` and :func:`_band_key_array`."""
+    rows_per_band = len(sig) // bands
+    return [
+        F.md5(F.concat_ws("|", *sig[b * rows_per_band:(b + 1) * rows_per_band]))
+        for b in range(bands)
+    ]
+
+
+def _band_key_array(toks: Column, k: int, bands: int) -> Column:
+    """The per-doc ARRAY of band keys straight from a token-array column
+    (signature slots inlined, never materialized as columns). NULL for an
+    empty token set, which has no signature (see
+    :func:`minhash_signatures`), so it explodes to no band rows."""
+    return F.when(
+        F.size(toks) > 0, F.array(*_band_key_cols(_signature_cols(toks, k), bands))
+    )
+
+
 def minhash_signatures(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 8
 ) -> DataFrame:
@@ -97,15 +132,9 @@ def minhash_signatures(
     (doc, mapper) for zero semantic gain (the min is per-doc local).
     Identical output: same token-set semantics (docs with an empty token
     set emit nothing), same min-over-md5 values, same column order."""
-    def _seeded(i: int):
-        seed = F.lit(f"mh{i}|")
-        # single-parameter lambda: a 2-arg lambda would be treated as the
-        # (element, index) form by transform()
-        return lambda t: F.md5(F.concat(seed, t))
-
     sig_cols = [
-        F.array_min(F.transform(F.col("_toks"), _seeded(i))).alias(f"mh{i}")
-        for i in range(k)
+        c.alias(f"mh{i}")
+        for i, c in enumerate(_signature_cols(F.col("_toks"), k))
     ]
     return (
         _spread_small_scan(df)
@@ -115,6 +144,10 @@ def minhash_signatures(
     )
 
 
+def _slots(k: int) -> list[Column]:
+    return [F.col(f"mh{i}") for i in range(k)]
+
+
 def minhash_bands(
     signatures: DataFrame, id_col: str = "doc_id", k: int = 8, bands: int = 4
 ) -> DataFrame:
@@ -122,38 +155,35 @@ def minhash_bands(
     k/bands signature slots hash into each band key. Write this table
     bucketed by (band, key) and incremental dedup becomes an equi-join of
     new docs' bands against it (see incremental_near_duplicates)."""
-    rows_per_band = k // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *parts)).alias("key"))
-        )
+    band_cols = [
+        F.struct(F.lit(b).alias("band"), key.alias("key"))
+        for b, key in enumerate(_band_key_cols(_slots(k), bands))
+    ]
     return signatures.select(
         F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
     ).select(id_col, "bk.band", "bk.key")
+
+
+def _exploded_band_keys(df: DataFrame, id_col: str) -> DataFrame:
+    """(id, _keys, band, key) — one row per band of each row's ``_keys``
+    array (rows whose array is NULL emit none), with the array carried
+    alongside so a downstream self-join can test "did any EARLIER band
+    already match" without a second lookup."""
+    return df.select(
+        id_col, "_keys", F.posexplode("_keys").alias("band", "key")
+    )
 
 
 def _banded_keys(
     signatures: DataFrame, id_col: str, k: int, bands: int
 ) -> DataFrame:
     """(id, _keys, band, key) — the band keys of :func:`minhash_bands`
-    with the per-doc key ARRAY carried alongside each exploded row, so a
-    downstream self-join can test "did any EARLIER band already match"
-    without a second lookup."""
-    rows_per_band = k // bands
-    key_exprs = [
-        F.md5(
-            F.concat_ws(
-                "|",
-                *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)],
-            )
-        )
-        for b in range(bands)
-    ]
-    return (
-        signatures.select(F.col(id_col), F.array(*key_exprs).alias("_keys"))
-        .select(id_col, "_keys", F.posexplode("_keys").alias("band", "key"))
+    via :func:`_exploded_band_keys`."""
+    return _exploded_band_keys(
+        signatures.select(
+            F.col(id_col), F.array(*_band_key_cols(_slots(k), bands)).alias("_keys")
+        ),
+        id_col,
     )
 
 

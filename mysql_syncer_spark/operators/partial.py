@@ -254,6 +254,4 @@ def apply_partial_batch(
     enriched = event_rows(False).unionByName(event_rows(True))
     # ddls=[] — DDL was refused above, and it spares apply_batch's DDL
     # collect from requiring a `ddl` column the enriched events don't have
-    return table.apply_batch(
-        batch_id, enriched, cfg, server_id=server_id, ddls=[]
-    )
+    return table.apply_batch(batch_id, enriched, cfg, ddls=[])

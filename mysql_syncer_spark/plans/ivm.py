@@ -26,6 +26,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sink import manifest_store
+
 
 def view_delta(
     changelog: DataFrame,
@@ -127,7 +129,9 @@ def sync_view(
     notification.
 
     Layout: ``<view_path>/view-v<N>/`` parquet snapshots + an atomically
-    renamed ``CURRENT`` JSON recording {table_version, dir}. Crash-safe
+    renamed ``CURRENT`` JSON recording {table_version, dir}, advanced
+    under the manifest store's ``flock`` and never backwards, so two
+    concurrent syncers cannot leave it at the older head. Crash-safe
     and idempotent: the fold is a deterministic function of (old view,
     changelog range), and CURRENT flips only after the new snapshot is
     fully written — a re-run after any crash folds the same range again
@@ -156,8 +160,12 @@ def sync_view(
     new_view = maintain_view(table, dim, metrics, last, head, view=view)
     rel = f"view-v{head}-{uuid.uuid4().hex[:8]}"
     new_view.write.mode("error").parquet(os.path.join(view_path, rel))
-    tmp = cur_path + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump({"table_version": head, "dir": rel}, f)
-    os.replace(tmp, cur_path)
-    return {"synced_to": head, "from": last, "dir": rel, "skipped": False}
+    # a concurrent syncer that already advanced CURRENT to >= head wins;
+    # this sync's snapshot is then an unreferenced orphan
+    moved = manifest_store.advance(
+        cur_path,
+        head,
+        json.dumps({"table_version": head, "dir": rel}),
+        lambda t: json.loads(t)["table_version"],
+    )
+    return {"synced_to": head, "from": last, "dir": rel, "skipped": not moved}

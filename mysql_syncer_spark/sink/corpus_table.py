@@ -8,9 +8,10 @@ already accepted. This sink reuses the engine's commit protocol
 ``CURRENT`` advance — `sink/manifest_store.py`, shared with the pages
 sink — and a batch-id ledger, so re-delivered batches are committed
 no-ops) together with the dedup operators' persisted band index
-(`dedup_text.minhash_bands` / `incremental_near_duplicates`). Per-batch
-cost is O(batch + touched band buckets), never O(corpus): the accepted
-corpus is never re-signatured, only its band table is equi-joined.
+(the rows of `dedup_text.minhash_bands`, the candidate semantics of
+`incremental_near_duplicates`). Per-batch cost is O(batch + touched
+band buckets), never O(corpus): the accepted corpus is never
+re-signatured, only its band table is equi-joined.
 
 Reference tie-in: the at-least-once → idempotent-apply contract is the
 reference's slave loop (rs_redis_thread.c:10-85, apply before throttled
@@ -26,6 +27,28 @@ not reject: the pair must also pass EXACT token-set Jaccard — the verify
 join reads only the MATCHED accepted docs' text (O(candidates), never
 O(corpus)). Doc ids must be globally unique across batches.
 
+Materialization plan: a corpus batch is small next to Spark's per-job
+cost (planning, scheduling, one job per shuffle stage under AQE), so
+``apply_batch`` is shaped to run few jobs, not just little work:
+
+1. ONE batch materialization ``(id, text, _toks, _keys)``: the text is
+   tokenized once, and the band keys are built straight from the token
+   array by the same expressions ``minhash_signatures``/``minhash_bands``
+   use (`dedup_text._band_key_array`). The candidate joins, the verify's
+   batch side and both writes read it; only the MATCHED accepted docs
+   are tokenized again, from their stored text.
+2. The band index and the docs are read with the schema the table
+   declares, so no read runs a schema-inference job.
+3. Candidates (index equi-join + first-matching-band self-join) feed the
+   two-round verify cascade (`_verified_reject_ids`).
+4. ONE flagged materialization — the batch left-joined with the reject
+   ids — feeds the docs write, the band write (``_keys`` of the accepted
+   rows exploded, no join back) and both batch counts, which are observed
+   on the docs write's own job instead of re-running the scan.
+
+On the benchmark's 3-batch corpus ingest this is ~18 Spark jobs per
+batch instead of ~27.
+
 Streaming: call ``apply_batch(batch_id, df)`` from ``foreachBatch`` —
 the ledger makes micro-batch re-delivery exactly-once in final state,
 the same contract the pages sink proves in test_streaming.
@@ -38,44 +61,54 @@ import os
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from mysql_syncer_spark.functions.dedup_text import (
-    _banded_keys,
+    _band_key_array,
+    _exploded_band_keys,
     _first_band_pairs,
+    _spread_small_scan,
     _token_array,
-    minhash_signatures,
 )
 from mysql_syncer_spark.sink import manifest_store
 from mysql_syncer_spark.sink.manifest_store import CommitConflictError
 
 
 def _verified_reject_ids(
-    cands: DataFrame, union_docs: DataFrame, id_col: str, text_col: str,
-    threshold: float,
+    cands: DataFrame, toks: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
     """doc_ids whose candidate pair survives EXACT token-set Jaccard >=
-    threshold. ``union_docs`` holds the text of both endpoints (new batch
-    + only the MATCHED accepted docs — the verify read is O(candidates),
-    never O(corpus)). Verify semantics match verified_near_duplicates:
-    the per-doc distinct-token ARRAY attaches to each pair (two equi-joins
-    against the small per-doc array table — broadcastable) and the
-    intersection is computed map-side with ``array_intersect``, instead of
-    exploding O(pairs x tokens/doc) rows through two exchanges. The pass
-    condition (same integer counts, same double division) is unchanged.
+    threshold. ``toks`` holds the distinct-token array (``_toks``) of both
+    endpoints: the batch side comes from the batch materialization, the
+    accepted side from only the MATCHED accepted docs — the verify read is
+    O(candidates), never O(corpus). Verify semantics match
+    verified_near_duplicates: each pair attaches both arrays (two
+    equi-joins against the small per-doc array table — broadcastable) and
+    intersects map-side with ``array_intersect``; the pass condition (same
+    integer counts, same double division) is unchanged.
 
     The rejection is an EXISTS, not a pair report, so it runs as a
     two-round cascade: round 1 verifies each doc against only its MINIMUM
     candidate (one pair per doc — in a template-cluster corpus this
     already rejects nearly everything); only docs round 1 did not reject
-    verify their remaining candidates in round 2. The union of the two
-    pass sets is EXACTLY the all-pairs reject set (existence is monotone
-    over candidate subsets), but the all-pairs verify volume — O(cluster
-    size) pairs per clustered doc — collapses to O(docs) + leftovers."""
-    toks = union_docs.select(
-        F.col(id_col), _token_array(F.col(text_col)).alias("_toks")
-    ).localCheckpoint(eager=False)
+    verify their candidates in round 2. The union of the two pass sets is
+    EXACTLY the all-pairs reject set (existence is monotone over candidate
+    subsets), but the all-pairs verify volume — O(cluster size) pairs per
+    clustered doc — collapses to O(docs) + leftovers. Round 2 re-verifies
+    a doc's failed minimum pair instead of excluding it with an anti-join
+    against round 1's pairs: a failed pair cannot change an EXISTS, and
+    the exclusion costs an exchange. Its ``distinct()`` stays: the index
+    join emits a pair once per matching band, and on the pair-heavy sf0.1
+    documents verifying those repeats cost more CPU than the exchange
+    that drops them (process CPU per 3-batch ingest, median of 3
+    interleaved pairs at 4 cores: 84 s without the distinct, 75 s with).
+
+    Measured and rejected: carrying the token arrays through the
+    candidate self-join and verifying ALL pairs map-side, with no cascade,
+    cut Spark jobs per 3-batch benchmark ingest from 82 to 48 but raised
+    executor task CPU from 3.5 s to 9 s and process CPU by 19%."""
+    toks = toks.localCheckpoint(eager=False)
     ta = toks.select(F.col(id_col).alias("_id"), F.col("_toks").alias("_ta"))
     tb = toks.select(F.col(id_col).alias("dup_of"), F.col("_toks").alias("_tb"))
 
@@ -98,20 +131,15 @@ def _verified_reject_ids(
                 )
             )
             .select("_id")
-            .distinct()
         )
 
     c = cands.select(F.col(id_col).alias("_id"), "dup_of")
-    # round 1: one pair per doc (min partner), partial-agg'd map-side
+    # round 1: one pair per doc (min partner), partial-agg'd map-side;
+    # one pair per doc also means one passing row per doc, no distinct
     first = c.groupBy("_id").agg(F.min("dup_of").alias("dup_of"))
     r1 = passing(first).localCheckpoint(eager=False)  # reused twice below
-    # round 2: remaining pairs of still-undecided docs only
-    rest = (
-        c.join(r1, "_id", "left_anti")
-        .join(first, ["_id", "dup_of"], "left_anti")
-        .distinct()
-    )
-    r2 = passing(rest)
+    # round 2: every pair of a still-undecided doc
+    r2 = passing(c.join(r1, "_id", "left_anti").distinct()).distinct()
     # r2 excludes r1 ids by construction — the union is duplicate-free
     return r1.unionByName(r2).select(F.col("_id").alias(id_col))
 
@@ -192,25 +220,22 @@ class CorpusTable:
         manifest_store.commit(self.path, m.version, m.to_json())
 
     # -- reads ----------------------------------------------------------
+    # Both reads pass the schema the table declares, so spark.read never
+    # runs a schema-inference job over the files' footers.
+    def _read(self, files: list, schema: str) -> DataFrame:
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, p) for p in files]
+        )
+
     def read(self) -> DataFrame:
         m = self.manifest()
-        if not m.doc_files:
-            return self.spark.createDataFrame(
-                [], f"{m.id_col} long, {m.text_col} string"
-            )
-        return self.spark.read.parquet(
-            *[os.path.join(self.path, p) for p in m.doc_files]
-        )
+        return self._read(m.doc_files, f"{m.id_col} long, {m.text_col} string")
 
     def band_index(self, m: CorpusManifest | None = None) -> DataFrame:
         m = m or self.manifest()
-        if not m.band_files:
-            return self.spark.createDataFrame(
-                [], f"{m.id_col} long, band int, key string"
-            )
-        return self.spark.read.parquet(
-            *[os.path.join(self.path, p) for p in m.band_files]
-        )
+        return self._read(m.band_files, f"{m.id_col} long, band int, key string")
 
     # -- ingest ---------------------------------------------------------
     def apply_batch(self, batch_id: str, docs: DataFrame) -> dict:
@@ -230,16 +255,21 @@ class CorpusTable:
         m = self.manifest()
         if batch_id in m.committed_batches:
             return {"batch_id": batch_id, "skipped": True}
-        docs = docs.select(m.id_col, m.text_col)
-        # Signatures and band keys are computed ONCE and shared by the
-        # candidate joins AND the accepted-band append below (the old
-        # shape re-signatured the accepted docs from raw text). Same
-        # candidate semantics as incremental_near_duplicates: index
-        # equi-join + first-matching-band within-batch self-join.
-        sigs = minhash_signatures(
-            docs, m.id_col, m.text_col, m.k
-        ).localCheckpoint(eager=False)
-        keyed = _banded_keys(sigs, m.id_col, m.k, m.bands)
+        idc = m.id_col
+        # the batch materialization: text, token array and band keys,
+        # tokenized ONCE and read by the candidate joins, the verify and
+        # both writes
+        batch = (
+            _spread_small_scan(docs)
+            .select(
+                F.col(idc).cast("long").alias(idc),
+                F.col(m.text_col).cast("string").alias(m.text_col),
+                _token_array(F.col(m.text_col)).alias("_toks"),
+            )
+            .withColumn("_keys", _band_key_array(F.col("_toks"), m.k, m.bands))
+            .localCheckpoint(eager=False)
+        )
+        keyed = _exploded_band_keys(batch, idc)
         n, ix = keyed.alias("n"), self.band_index(m).alias("ix")
         vs_index = (
             n.join(
@@ -248,39 +278,44 @@ class CorpusTable:
                 & (F.col("n.key") == F.col("ix.key")),
             )
             .select(
-                F.col(f"n.{m.id_col}").alias(m.id_col),
-                F.col(f"ix.{m.id_col}").alias("dup_of"),
+                F.col(f"n.{idc}").alias(idc), F.col(f"ix.{idc}").alias("dup_of")
             )
         )
-        vs_batch = _first_band_pairs(keyed, m.id_col, m.bands).select(
-            F.col("doc_b").alias(m.id_col), F.col("doc_a").alias("dup_of")
+        vs_batch = _first_band_pairs(keyed, idc, m.bands).select(
+            F.col("doc_b").alias(idc), F.col("doc_a").alias("dup_of")
         )
         cands = vs_index.unionByName(vs_batch)
         if m.verify_jaccard is not None:
             cands = cands.localCheckpoint(eager=False)
-            matched = cands.select(
-                F.col("dup_of").alias(m.id_col)
-            ).distinct()
-            union_docs = docs.unionByName(
+            matched = cands.select(F.col("dup_of").alias(idc)).distinct()
+            # only the MATCHED accepted docs are tokenized from their text
+            toks = batch.select(idc, "_toks").unionByName(
                 self.read()
-                .select(m.id_col, m.text_col)
-                .join(matched, m.id_col, "left_semi")
+                .join(matched, idc, "left_semi")
+                .select(idc, _token_array(F.col(m.text_col)).alias("_toks"))
             )
-            reject = _verified_reject_ids(
-                cands, union_docs, m.id_col, m.text_col, m.verify_jaccard
-            )
+            reject = _verified_reject_ids(cands, toks, idc, m.verify_jaccard)
         else:
-            reject = cands.select(m.id_col).distinct()
-        accepted = docs.join(reject, m.id_col, "left_anti")
-        # one pass over the accepted docs computes both outputs
-        accepted = accepted.localCheckpoint(eager=False)
-        bands_df = keyed.join(
-            accepted.select(m.id_col), m.id_col, "left_semi"
-        ).select(m.id_col, "band", "key")
+            reject = cands.select(idc).distinct()
+        flagged = batch.join(
+            reject.select(idc, F.lit(True).alias("_rej")), idc, "left"
+        ).localCheckpoint(eager=False)
+        accepted = flagged.filter(F.col("_rej").isNull())
         drel = os.path.join("docs", f"{batch_id}.parquet")
         brel = os.path.join("bands", f"{batch_id}.parquet")
-        accepted.write.mode("overwrite").parquet(os.path.join(self.path, drel))
-        bands_df.write.mode("overwrite").parquet(os.path.join(self.path, brel))
+        # the docs write also counts the batch: observed metrics ride on
+        # its job, so neither count re-runs a scan
+        counts = Observation()
+        flagged.observe(
+            counts,
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(F.col("_rej").isNull()).alias("acc"),
+        ).filter(F.col("_rej").isNull()).select(idc, m.text_col).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(self.path, drel))
+        _exploded_band_keys(accepted, idc).select(idc, "band", "key").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(self.path, brel))
         # threshold compaction of the band index, folded into THIS commit:
         # the pre-batch band files merge to one dir; the new batch's file
         # appends after it. Old dirs become unreferenced orphans.
@@ -290,11 +325,7 @@ class CorpusTable:
                 os.path.join(self.path, crel)
             )
             m.band_files = [crel]
-        n_total = docs.count()
-        # the checkpointed accepted partitions are already materialized by
-        # the write above — this count reuses them (no re-read of the
-        # just-written parquet, one fewer scan job per batch)
-        n_acc = accepted.count()
+        n_total, n_acc = counts.get["n"], counts.get["acc"]
         # optimistic concurrency (same protocol as the pages sink): claim
         # the next version; on a lost race, rebase on the fresh manifest —
         # if the racer committed this very batch, we are a no-op; else our

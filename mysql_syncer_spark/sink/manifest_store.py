@@ -8,10 +8,12 @@ and a ``_versions/CURRENT`` head pointer. A commit of version N:
    private temp file, which fails if a concurrent writer already holds
    version N. The loser gets ``CommitConflictError``, reloads the head,
    rebases and retries (Iceberg's optimistic concurrency protocol);
-2. advances ``CURRENT`` to N under an ``flock``, never backwards. Without
-   the lock a writer that read ``CURRENT`` before a higher committer's
-   rename could overwrite it afterwards, and ``CURRENT`` would point at
-   an older snapshot (no data loss, but "current" goes stale).
+2. advances ``CURRENT`` to N under an ``flock``, never backwards
+   (:func:`advance`, also used by ``plans/ivm.sync_view``'s view pointer).
+   Without the lock a writer that read ``CURRENT`` before a higher
+   committer's rename could overwrite it afterwards, and ``CURRENT``
+   would point at an older snapshot (no data loss, but "current" goes
+   stale).
 
 Readers load ``CURRENT`` then the version file it names; version files
 are never rewritten, so a reader always sees one complete snapshot.
@@ -23,6 +25,7 @@ import fcntl
 import json
 import os
 import uuid
+from typing import Callable
 
 
 class CommitConflictError(RuntimeError):
@@ -82,16 +85,31 @@ def commit(path: str, version: int, text: str) -> None:
         raise CommitConflictError(version)
     finally:
         os.unlink(tmp)
-    cur = os.path.join(vdir, "CURRENT")
-    with open(cur + ".lock", "a") as lk:
+    advance(os.path.join(vdir, "CURRENT"), version, str(version))
+
+
+def advance(
+    pointer: str,
+    version: int,
+    text: str,
+    version_of: Callable[[str], int] = lambda t: int(t.strip()),
+) -> bool:
+    """Atomically replace the head-pointer file ``pointer`` with ``text``,
+    which records ``version``, unless it already records a version >=
+    ``version`` (read with ``version_of``). Serialized by an ``flock`` on
+    ``<pointer>.lock``, so a writer that read the pointer before a higher
+    writer's rename can never overwrite it afterwards. Returns whether
+    the pointer moved."""
+    with open(pointer + ".lock", "a") as lk:
         fcntl.flock(lk, fcntl.LOCK_EX)
-        try:  # never move CURRENT backwards past a racing higher commit
-            with open(cur) as f:
-                if int(f.read().strip()) >= version:
-                    return
+        try:  # never move the pointer backwards past a racing higher one
+            with open(pointer) as f:
+                if version_of(f.read()) >= version:
+                    return False
         except (FileNotFoundError, ValueError):
             pass
-        tmp = cur + f".tmp.{uuid.uuid4().hex}"
+        tmp = pointer + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            f.write(str(version))
-        os.rename(tmp, cur)
+            f.write(text)
+        os.rename(tmp, pointer)
+        return True

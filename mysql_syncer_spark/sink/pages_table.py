@@ -60,6 +60,21 @@ from ..operators.skew import SkewPlanner
 from . import manifest_store
 from .manifest_store import CommitConflictError
 
+
+def _fold_result(fut):
+    """(snapshot, dirs, rows) of a finished fold compute, or None when it
+    failed. Best-effort maintenance never fails the run whose batches it
+    serves (they are already committed): the fold is dropped with a
+    warning, and its written dirs are unreferenced orphans vacuum()
+    removes."""
+    try:
+        return fut.result()
+    except Exception as e:
+        import warnings
+
+        warnings.warn(f"compaction failed, fold dropped: {e!r}", stacklevel=3)
+        return None
+
 BASE_SCHEMA: list[list[str]] = [
     ["url", "string"],
     ["warc_ts", "timestamp"],
@@ -514,7 +529,6 @@ class PagesTable:
         batch_id: int | str,
         events: DataFrame,
         cfg: TableConfig | None = None,
-        server_id: int | None = None,
         carry_salted: bool | None = None,
         ddls: list[dict] | None = None,
         inline_compact: bool = True,
@@ -759,7 +773,7 @@ class PagesTable:
         visibility stays behind the exactly-once ledger across a crash.
         Exactly-once: commits happen strictly in order; a crash leaves only
         orphan delta dirs (vacuum()-able), never a half commit."""
-        from concurrent.futures import ThreadPoolExecutor
+        from concurrent.futures import ThreadPoolExecutor, wait
 
         cfg = cfg or TableConfig(name="web.pages")
         m = self.manifest()
@@ -778,18 +792,24 @@ class PagesTable:
         compaction: dict = {"fut": None}
         maintenance = ThreadPoolExecutor(max_workers=1)
 
-        def fold_compaction_if_ready(bid: str) -> None:
+        def fold_compaction_if_ready(bid: str) -> bool:
+            """Fold a finished compute into ``m``; False when none was
+            ready or it failed (dropped)."""
             fut = compaction["fut"]
             if fut is None or not fut.done():
-                return
-            snapshot, cdirs, crows = fut.result()
+                return False
             compaction["fut"] = None
+            res = _fold_result(fut)
+            if res is None:
+                return False
+            snapshot, cdirs, crows = res
             for b, old in snapshot.items():
                 if b not in cdirs:
                     continue
                 tail = [x for x in m.buckets.get(b, []) if x not in old]
                 m.buckets[b] = [cdirs[b]] + tail
                 m.lineage[b] = {"batch_id": bid, "rows": crows.get(b, 0)}
+            return True
 
         def schedule_compaction_if_needed() -> None:
             if compaction["fut"] is not None:
@@ -897,9 +917,10 @@ class PagesTable:
             # drain: a pending fold commits as its own maintenance version
             # so the work is never thrown away
             while compaction["fut"] is not None:
-                compaction["fut"].result()
+                wait([compaction["fut"]])
+                if not fold_compaction_if_ready(f"compact-v{m.version + 1}"):
+                    break  # dropped: a later replay retries the fold
                 m.version += 1
-                fold_compaction_if_ready(f"compact-v{m.version}")
                 self._commit(m)
                 schedule_compaction_if_needed()
         finally:
@@ -1730,16 +1751,10 @@ class AsyncCompactor:
         if fut is None or not fut.done():
             return 0
         self._fut = None
-        try:
-            snapshot, cdirs, crows = fut.result()
-        except Exception as e:
-            # best-effort maintenance never fails the run whose batches it
-            # serves (they are already committed): drop this fold — its
-            # written dirs are unreferenced orphans vacuum() removes
-            import warnings
-
-            warnings.warn(f"compaction failed, fold dropped: {e!r}", stacklevel=2)
+        res = _fold_result(fut)
+        if res is None:
             return 0
+        snapshot, cdirs, crows = res
         if not cdirs:
             return 0
         t = self._table

@@ -618,52 +618,26 @@ def _binary_files(
     from_file_seq: int | None = None,
     to_file_seq: int | None = None,
 ) -> DataFrame:
-    from pyspark.sql import functions as F
+    """(path, content) of the dir's ``mysql-bin.NNNNNN`` files whose seq is
+    in range. The files are listed on the driver and loaded as an explicit
+    list: range pruning happens at the SOURCE (resume never reads
+    pre-offset bytes), and Spark is never handed a glob — a glob load logs
+    a FileStreamSink warning with a FileNotFoundException stack trace on
+    every read. An empty range is an empty frame with no load at all."""
 
     def in_range(seq: int) -> bool:
         return (from_file_seq is None or seq >= from_file_seq) and (
             to_file_seq is None or seq <= to_file_seq
         )
 
-    if from_file_seq is not None or to_file_seq is not None:
-        # prune at the SOURCE via the rotation index (S2): resume never
-        # reads pre-offset files' bytes at all — the file-level analogue
-        # of partition pruning. Falls back to the glob if no index.
-        idx = os.path.join(path, "mysql-bin.index")
-        if os.path.exists(idx):
-            with open(idx) as f:
-                names = [ln.strip() for ln in f if ln.strip()]
-            keep = [
-                os.path.join(path, nm)
-                for nm in names
-                if in_range(_file_seq_of(nm))
-            ]
-            if not keep:
-                return (
-                    spark.read.format("binaryFile")
-                    .load(os.path.join(path, "mysql-bin.*"))
-                    .where(F.lit(False))
-                    .select("path", "content")
-                )
-            return (
-                spark.read.format("binaryFile")
-                .load(keep)
-                .select("path", "content")
-            )
-    df = (
-        spark.read.format("binaryFile")
-        .load(os.path.join(path, "mysql-bin.*"))
-        .where(~F.col("path").endswith(".index"))
+    keep = sorted(
+        os.path.join(path, nm)
+        for nm in os.listdir(path)
+        if _BIN_FILE_RE.fullmatch(nm) and in_range(_file_seq_of(nm))
     )
-    if from_file_seq is not None or to_file_seq is not None:
-        seq = F.regexp_extract(F.col("path"), r"mysql-bin\.(\d+)$", 1).cast(
-            "int"
-        )
-        if from_file_seq is not None:
-            df = df.where(seq >= from_file_seq)
-        if to_file_seq is not None:
-            df = df.where(seq <= to_file_seq)
-    return df.select("path", "content")
+    if not keep:
+        return spark.createDataFrame([], "path string, content binary")
+    return spark.read.format("binaryFile").load(keep).select("path", "content")
 
 
 def _file_seq_of(path: str) -> int:

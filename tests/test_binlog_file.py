@@ -115,6 +115,36 @@ def test_envelope_decode_matches_typed_stream(spark, typed_table, bin_dir):
         assert g["ts_us"] == us, (g["url"], g["ts_us"], us)
 
 
+def test_reads_list_files_instead_of_a_glob(spark, bin_dir, monkeypatch):
+    """Unpruned, ranged and empty-range reads load an explicit list of the
+    dir's binlog files (never a ``mysql-bin.*`` glob, nor the index); an
+    empty range is an empty envelope frame that loads nothing."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    loaded = []
+    real_load = DataFrameReader.load
+
+    def recording_load(self, path=None, *args, **kwargs):
+        loaded.append(path)
+        return real_load(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "load", recording_load)
+
+    def seqs(df):
+        return sorted(r[0] for r in df.select("file_seq").distinct().collect())
+
+    full = read_binlog_files(spark, bin_dir)
+    assert seqs(full) == [0, 1, 2]
+    names = sorted(os.path.basename(p) for p in loaded[-1])
+    assert names == [f"mysql-bin.00000{i}" for i in range(3)]
+    assert seqs(read_binlog_files(spark, bin_dir, from_file_seq=1, to_file_seq=1)) == [1]
+    assert [os.path.basename(p) for p in loaded[-1]] == ["mysql-bin.000001"]
+    n_loads = len(loaded)
+    empty = read_binlog_files(spark, bin_dir, from_file_seq=7)
+    assert len(loaded) == n_loads
+    assert empty.schema == full.schema and empty.count() == 0
+
+
 def test_full_replay_from_file_bytes(spark, typed_table, bin_dir):
     """The engine replay driven from RAW FILE BYTES equals the replay of
     the typed parquet log — final state, per url."""

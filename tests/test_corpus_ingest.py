@@ -8,7 +8,9 @@ import tempfile
 from pyspark.sql import functions as F
 
 from mysql_syncer_spark.functions.dedup_text import (
+    incremental_near_duplicates,
     lsh_candidate_pairs,
+    minhash_bands,
     minhash_signatures,
 )
 from mysql_syncer_spark.sink.corpus_table import CorpusTable
@@ -142,19 +144,9 @@ def test_streamed_corpus_ingest_kill_resume(spark, tmp_path):
     assert tbl.manifest().committed_batches == [f"stream-{i}" for i in range(3)]
 
 
-def test_corpus_ingest_verified_gate(spark):
-    """With verify_jaccard set, only pairs passing EXACT token-set
-    Jaccard reject — ground truth is the same greedy fold over the
-    VERIFIED collision relation (LSH candidates ∩ jaccard >= t)."""
-    docs, batches = _batches(spark)
-    t = 0.5
-    tbl = CorpusTable.create(
-        spark, tempfile.mkdtemp() + "/corpus", verify_jaccard=t
-    )
-    for i, b in enumerate(batches):
-        tbl.apply_batch(f"b{i}", b)
-    got = {r["doc_id"] for r in tbl.read().select("doc_id").collect()}
-
+def _verified_greedy(docs, batches, t):
+    """Accepted ids of the greedy fold over the VERIFIED collision relation
+    (LSH candidates ∩ exact token-set jaccard >= t)."""
     # python truth: token sets once, jaccard only on LSH candidate pairs
     toksets = {
         r["doc_id"]: set(r["text"].lower().split())
@@ -181,7 +173,22 @@ def test_corpus_ingest_verified_gate(spark):
             ):
                 continue
             accepted.add(d)
-    assert got == accepted
+    return accepted
+
+
+def test_corpus_ingest_verified_gate(spark):
+    """With verify_jaccard set, only pairs passing EXACT token-set
+    Jaccard reject — ground truth is the same greedy fold over the
+    VERIFIED collision relation (LSH candidates ∩ jaccard >= t)."""
+    docs, batches = _batches(spark)
+    t = 0.5
+    tbl = CorpusTable.create(
+        spark, tempfile.mkdtemp() + "/corpus", verify_jaccard=t
+    )
+    for i, b in enumerate(batches):
+        tbl.apply_batch(f"b{i}", b)
+    got = {r["doc_id"] for r in tbl.read().select("doc_id").collect()}
+    assert got == _verified_greedy(docs, batches, t)
     # the verified gate keeps strictly more than the candidate-only gate
     cand_tbl = CorpusTable.create(spark, tempfile.mkdtemp() + "/corpus2")
     for i, b in enumerate(batches):
@@ -242,3 +249,88 @@ def test_band_index_threshold_compaction(spark, tmp_path):
     assert {r["doc_id"] for r in tbl.read().collect()} == {
         r["doc_id"] for r in ref.read().collect()
     }
+
+
+def test_candidate_gate_equals_incremental_near_duplicates(spark, tmp_path):
+    """verify_jaccard=None: each batch rejects exactly the docs that the
+    public signature path (``incremental_near_duplicates`` against the
+    band index as of batch start) reports, and the band index the sink
+    writes from its token arrays equals ``minhash_bands`` over the
+    accepted docs' ``minhash_signatures``."""
+    docs, batches = _batches(spark)
+    tbl = CorpusTable.create(spark, str(tmp_path / "c"))
+    for i, b in enumerate(batches):
+        index = tbl.band_index().localCheckpoint()
+        want = {
+            r["doc_id"]
+            for r in incremental_near_duplicates(b, index)
+            .select("doc_id").collect()
+        }
+        res = tbl.apply_batch(f"b{i}", b)
+        ids = {r["doc_id"] for r in b.select("doc_id").collect()}
+        kept = {r["doc_id"] for r in tbl.read().select("doc_id").collect()}
+        assert ids - kept == want
+        assert (res["accepted"], res["rejected"]) == (
+            len(ids) - len(want), len(want)
+        )
+    accepted = docs.join(tbl.read().select("doc_id"), "doc_id", "left_semi")
+    got = {tuple(r) for r in tbl.band_index().collect()}
+    assert got == {
+        tuple(r) for r in minhash_bands(minhash_signatures(accepted)).collect()
+    }
+
+
+def test_verified_gate_over_compacted_band_index(spark, tmp_path):
+    """verify_jaccard set and band_compact_threshold=2: from the third
+    batch on the gate reads a compacted band dir, and the accepted set
+    still equals the verified greedy fold and an uncompacted table."""
+    docs, batches = _batches(spark)
+    t = 0.5
+    tbl = CorpusTable.create(
+        spark, str(tmp_path / "c"), verify_jaccard=t, band_compact_threshold=2
+    )
+    ref = CorpusTable.create(
+        spark, str(tmp_path / "ref"), verify_jaccard=t,
+        band_compact_threshold=10**9,
+    )
+    for i, b in enumerate(batches):
+        assert tbl.apply_batch(f"b{i}", b) == ref.apply_batch(f"b{i}", b)
+    assert any("compact-" in f for f in tbl.manifest().band_files)
+    got = {r["doc_id"] for r in tbl.read().select("doc_id").collect()}
+    assert got == _verified_greedy(docs, batches, t)
+    assert {tuple(r) for r in tbl.band_index().collect()} == {
+        tuple(r) for r in ref.band_index().collect()
+    }
+    m = tbl.manifest()
+    assert (m.n_docs, m.n_rejected) == (len(got), docs.count() - len(got))
+
+
+# Spark jobs one verified-gate batch may run: the batch materialization,
+# the candidate joins, the two verify rounds, the flag join and the two
+# writes (the counts ride on the docs write). This suite's session runs
+# 21-22 per batch (29-30 before the one-materialization plan); the bound
+# is the larger count plus 2.
+MAX_JOBS_PER_BATCH = 24
+
+
+def test_corpus_batch_job_floor(spark, tmp_path):
+    """A small 3-batch verified ingest runs at most MAX_JOBS_PER_BATCH
+    Spark jobs per batch (jobs under the batch's job group, plus jobs
+    started without a group while it ran)."""
+    docs, batches = _batches(spark)
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    tbl = CorpusTable.create(spark, str(tmp_path / "c"), verify_jaccard=0.5)
+    for i, b in enumerate(batches):
+        group = f"corpus-job-floor-{tmp_path.name}-{i}"
+        before = set(st.getJobIdsForGroup(None))
+        sc.setJobGroup(group, group)
+        try:
+            tbl.apply_batch(f"b{i}", b)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = set(st.getJobIdsForGroup(group)) | (
+            set(st.getJobIdsForGroup(None)) - before
+        )
+        assert len(jobs) <= MAX_JOBS_PER_BATCH, (i, len(jobs))

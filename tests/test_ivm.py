@@ -154,6 +154,81 @@ def test_sync_view_follows_streaming_replay(spark, event_log_dir):
     assert view_now() == want
 
 
+def test_sync_view_current_never_moves_backwards(spark, replayed, monkeypatch):
+    """A syncer at an older head pauses at its CURRENT rename while a
+    syncer at the newer head finishes: CURRENT must end at the newer head
+    (the pointer advance is serialized and never moves backwards)."""
+    import fcntl
+    import json
+    import threading
+
+    from mysql_syncer_spark.plans.ivm import sync_view
+
+    class AtHead:
+        """The table as a syncer that read its manifest at ``version``
+        sees it."""
+
+        def __init__(self, table, version):
+            self.table, self.version, self.spark = table, version, table.spark
+
+        def manifest(self):
+            m = self.table.manifest()
+            m.version = self.version
+            return m
+
+        def changes_between(self, *args, **kwargs):
+            return self.table.changes_between(*args, **kwargs)
+
+    head = replayed.manifest().version
+    assert head >= 2
+    vpath = os.path.join(tempfile.mkdtemp(prefix="ivmrace_"), "view")
+    # "old" holds its rename until "new" has finished or waits at the
+    # pointer lock (where a serialized advance must hold it)
+    at_rename, new_blocked = threading.Event(), threading.Event()
+    real = {"rename": os.rename, "replace": os.replace, "flock": fcntl.flock}
+
+    def pausing(kind):
+        def move(src, dst):
+            if dst.endswith("CURRENT") and threading.current_thread().name == "old":
+                at_rename.set()
+                new_blocked.wait(timeout=120)
+            return real[kind](src, dst)
+
+        return move
+
+    def flock(fd, op):
+        if threading.current_thread().name == "new":
+            new_blocked.set()
+        return real["flock"](fd, op)
+
+    monkeypatch.setattr(os, "rename", pausing("rename"))
+    monkeypatch.setattr(os, "replace", pausing("replace"))
+    monkeypatch.setattr(fcntl, "flock", flock)
+    errors = []
+
+    def sync_at(version):
+        try:
+            sync_view(AtHead(replayed, version), vpath, _dim, METRICS)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+        finally:
+            new_blocked.set()
+
+    old = threading.Thread(target=sync_at, args=(head - 1,), name="old")
+    old.start()
+    assert at_rename.wait(timeout=120)
+    new = threading.Thread(target=sync_at, args=(head,), name="new")
+    new.start()
+    old.join(timeout=120)
+    new.join(timeout=120)
+    assert not old.is_alive() and not new.is_alive()
+    assert not errors
+    cur = json.load(open(os.path.join(vpath, "CURRENT")))
+    assert cur["table_version"] == head
+    got = _as_dict(spark.read.parquet(os.path.join(vpath, cur["dir"])))
+    assert got == _recompute(replayed, head)
+
+
 def test_stepwise_null_dim_folds_into_one_group(spark, replayed):
     """A nullable dim (lang ships as NULL) must fold into ONE group per
     sync: plain equality in merge_view never matches NULL, which would

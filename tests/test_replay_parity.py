@@ -148,6 +148,36 @@ def test_pipelined_replay_matches_oracle_and_is_idempotent(
     assert_state_equal(t.read().collect(), oracle)
 
 
+def test_failed_compaction_never_fails_a_pipelined_replay(
+    spark, tmp_path, monkeypatch
+):
+    """A raising fold compute in the pipelined replay is warned about and
+    dropped, on the commit path and in the drain: every batch commits
+    and the final state matches the oracle."""
+    from mysql_syncer_spark.generator import GenSpec, generate_events, write_event_log
+
+    tbl = generate_events(GenSpec(n_events=1200, events_per_file=300))
+    log_dir = str(tmp_path / "log")
+    write_event_log(tbl, log_dir)
+    path = str(tmp_path / "pages")
+    # threshold 1: every bucket is past it from the second batch on
+    PagesTable.create(spark, path, num_buckets=2, compact_threshold=1)
+    calls = []
+
+    def failing_compute(self, *args, **kwargs):
+        calls.append(1)
+        raise OSError("disk full")
+
+    monkeypatch.setattr(PagesTable, "_compact_compute", failing_compute)
+    with pytest.warns(UserWarning, match="compaction failed"):
+        res = replay(spark, log_dir, path, num_buckets=2, pipeline_depth=2)
+    assert calls
+    assert res["n_batches"] == 4
+    assert not any(b.get("skipped") for b in res["batches"])
+    oracle, _, _ = sequential_replay(tbl)
+    assert_state_equal(PagesTable(spark, path).read().collect(), oracle)
+
+
 def test_point_lookup_prunes_to_one_bucket(spark, replayed, event_table):
     """lookup(url) reads only the key's bucket and returns exactly the
     live row (or nothing for tombstoned/unknown urls)."""
