@@ -3,9 +3,15 @@
 The reference requires a hand-written C struct + five callbacks per table,
 registered in a compile-time array (/root/reference/src/slave/
 rs_register_tables.c:6-36, exemplar rs_mysql_test_test.c:102-118). Here a
-table is a dataclass in a dict: key columns, LWW ordering, delete policy,
-optional vectorized transform. Adding a table = adding a dict entry, no
-recompile.
+table is a dataclass in a dict: key columns, delete policy, optional
+vectorized transform and the columns it derives. Adding a table = adding
+a dict entry, no recompile.
+
+The LWW order is not configurable: every sink ranks events by the
+hidden ``(_lww_ts_us, _lww_file, _lww_pos)`` columns. Skew is not
+configurable either: the pages sink picks its one skew mechanism, the
+winner pre-filter, from the keys-only probe of each stream's first batch
+(sink/pages_table.py, ``_write_batch_delta``).
 """
 
 from __future__ import annotations
@@ -29,46 +35,12 @@ class TableConfig:
 
     name: str  # "web.pages"
     key_columns: tuple[str, ...] = ("url",)
-    # LWW order: later wins; compared lexicographically as a struct.
-    order_columns: tuple[str, ...] = ("warc_ts", "log_pos")
     on_delete: str = "delete"
     # Optional vectorized payload transform (e.g. html→text extraction),
     # applied to the batch DataFrame before merge. Must be pure/deterministic.
     transform: Callable[[DataFrame], DataFrame] | None = field(
         default=None, compare=False
     )
-    # Skew planner (D2): if any single key holds >= salt_threshold_share of
-    # a batch AND the batch is at least salt_min_rows, the sink switches the
-    # merge to the salted two-phase aggregate (operators/dedup.py 'salted').
-    # The detection piggybacks on the existing keys-only stats pass.
-    salt_threshold_share: float = 0.05
-    salt_min_rows: int = 50_000
-    salt_buckets: int = 16
-    # Probe policy for the keys-only per-bucket stats pass:
-    #   "always" — run it for every batch (exact planner input, one extra
-    #              column-pruned job per batch);
-    #   "auto"   — run it for the FIRST batch of a pipelined stream and
-    #              whenever the free observe()-based duplicate-share signal
-    #              moves more than salt_reprobe_delta since the last probe;
-    #              between probes the previous salting decision carries
-    #              (skew in a CDC stream is persistent — hot domains);
-    #   "never"  — trust observe() only, never salt proactively.
-    # Single-batch apply_batch always probes under "always"/"auto" (it has
-    # no stream state to amortize against).
-    skew_probe: str = "auto"
-    salt_reprobe_delta: float = 0.10
-    # Winner pre-filter (probed batches only): when the keys-only stats
-    # show the batch is duplicate-heavy (dup_share >= prefilter_min_
-    # dup_share) and its distinct keys fit a broadcast (estimated
-    # <= prefilter_max_keys), the merge first computes each key's winning
-    # rank from a COLUMN-PRUNED scan and semi-joins it (broadcast,
-    # null-safe) against the full rows — so the one payload exchange
-    # carries only winner rows instead of every event. At dup_share 0.8
-    # that is a 5x cut of payload shuffle bytes; identical winners (the
-    # argmax set is preserved, the final max_by still runs). Set
-    # prefilter_min_dup_share > 1.0 to disable.
-    prefilter_min_dup_share: float = 0.30
-    prefilter_max_keys: int = 5_000_000
     # Columns `transform` DERIVES from other payload columns (derived wire
     # field -> source wire fields). Consulted by the MINIMAL-row-image
     # path (operators/partial.py): when an event writes a source but not
@@ -81,8 +53,6 @@ class TableConfig:
     def __post_init__(self) -> None:
         if self.on_delete not in ("delete", "ignore"):
             raise ValueError(f"on_delete must be delete|ignore, got {self.on_delete}")
-        if self.skew_probe not in ("always", "auto", "never"):
-            raise ValueError(f"skew_probe must be always|auto|never, got {self.skew_probe}")
 
 
 # Default registry — the analogue of rs_register_tables.c:6-9.

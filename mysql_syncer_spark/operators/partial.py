@@ -144,7 +144,7 @@ def apply_partial_batch(
 
     fold (1 shuffle) → enrich to full images against the live state of
     only the touched buckets (partition-pruned, O(touched buckets)) →
-    ``PagesTable.apply_batch`` (exactly-once ledger, skew planner, DDL
+    ``PagesTable.apply_batch`` (exactly-once ledger, skew probe, DDL
     machinery all reused). DDL events are NOT supported on this path —
     MINIMAL images and in-flight schema changes must be serialized by
     the caller (apply the DDL through a normal batch first).

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from ..config import TableConfig
 from ..functions.text import with_extracted_text, with_filled_text
-from ..operators.skew import SkewPlanner
 from ..sink.pages_table import PagesTable
 from ..sources.event_log import read_event_log
 
@@ -699,7 +698,9 @@ def replay_binlog_multi(
         )
         for name in registry
     }
-    planners = {name: SkewPlanner(cfg) for name, cfg in registry.items()}
+    # per table, only the first batch that is not skipped probes (as in
+    # PagesTable.apply_batches)
+    probe = dict.fromkeys(registry, True)
     results: dict[str, list] = {name: [] for name in registry}
     for seq in seqs:
         env = read_binlog_files(
@@ -716,8 +717,8 @@ def replay_binlog_multi(
                 f"fileseq-{seq}",
                 events.filter(F.col("table") == name),
                 cfg,
-                carry_salted=planners[name].carry(),
+                probe=probe[name],
             )
-            planners[name].observe(res)
+            probe[name] = probe[name] and bool(res.get("skipped"))
             results[name].append(res)
     return results

@@ -56,7 +56,6 @@ from ..model import DDL_DTYPES
 from ..operators.filters import op_filter, oversized_ddl_filter, table_filter
 from ..operators.merge import batch_to_state, live_view
 from ..operators.routing import split_row_and_ddl
-from ..operators.skew import SkewPlanner
 from . import manifest_store
 from .manifest_store import CommitConflictError
 
@@ -92,6 +91,15 @@ _HIDDEN_DDL = [
 # Tiered compaction: a fold touches the bucket's base vintage only when
 # the delta tail has grown to this fraction of it (see _plan_fold).
 _MAJOR_FOLD_RATIO = 0.5
+
+# Winner pre-filter gate (probed batches, see _write_batch_delta): a batch
+# is pre-filtered when it is duplicate-heavy (dup_share at least
+# PREFILTER_MIN_DUP_SHARE) or one key holds at least HOT_KEY_SHARE of it,
+# and its estimated distinct keys fit a broadcast (at most
+# PREFILTER_MAX_KEYS).
+PREFILTER_MIN_DUP_SHARE = 0.30
+HOT_KEY_SHARE = 0.05
+PREFILTER_MAX_KEYS = 5_000_000
 
 
 @dataclass
@@ -314,10 +322,13 @@ class PagesTable:
         an older committed version."""
         st = self.state(version)
         if st is None:
-            m = self.manifest(version)
-            fields = ", ".join(f"`{n}` {t}" for n, t in m.schema)
-            return self.spark.createDataFrame([], schema=fields)
+            return self._empty_view(self.manifest(version))
         return live_view(st)
+
+    def _empty_view(self, m: Manifest) -> DataFrame:
+        """A read with no rows, in the snapshot's public schema."""
+        fields = ", ".join(f"`{n}` {t}" for n, t in m.schema)
+        return self.spark.createDataFrame([], schema=fields)
 
     def version_as_of(self, ts_ms: int) -> int:
         """Newest committed version whose commit wall clock is <= ts_ms
@@ -462,40 +473,22 @@ class PagesTable:
         )
 
     def lookup(self, key_value) -> DataFrame:
-        """Point read by key: hash to the bucket LOCALLY (pure-Python
-        xxhash64 twin — no Spark job on the probe path; ~100 ms of driver
-        latency per read saved), scan ONLY that bucket's delta dirs
-        (manifest-level pruning — the Iceberg partition-pruned point
-        lookup), LWW-merge its vintages, filter live. At any table size
-        the scan touches one bucket's files."""
-        from ..xxhash import bucket_of, canary_hash
-
-        m = self.manifest()
-        stored = getattr(m, "xxh64_canary", None)
-        if stored is not None and int(stored) != canary_hash():
-            raise RuntimeError(
-                "local xxhash64 twin disagrees with the JVM canary stored "
-                "at table create — refusing to route a point read"
-            )
-        bucket = bucket_of([key_value], m.num_buckets)
-        raw = self._read_buckets(m, [int(bucket)])
-        if raw is None:
-            fields = ", ".join(f"`{n}` {t}" for n, t in m.schema)
-            return self.spark.createDataFrame([], schema=fields)
-        raw = raw.filter(F.col(m.key_columns[0]) == key_value)
-        from ..operators.dedup import lww_dedup  # local: avoid cycle
-
-        merged = lww_dedup(
-            raw, list(m.key_columns), ["_lww_ts_us", "_lww_file", "_lww_pos"]
-        )
-        return live_view(merged)
+        """Point read by key: ``lookup_many`` of one key. Hashes to the
+        bucket LOCALLY (pure-Python xxhash64 twin — no Spark job on the
+        probe path; ~100 ms of driver latency per read saved), scans ONLY
+        that bucket's delta dirs (manifest-level pruning — the Iceberg
+        partition-pruned point lookup), LWW-merges its vintages, filters
+        live. At any table size the scan touches one bucket's files; the
+        optimizer rewrites the one-element ``IN`` as ``=``."""
+        return self.lookup_many([key_value])
 
     def lookup_many(self, key_values: list) -> DataFrame:
         """Batched point reads: hash every key LOCALLY, scan only the
         union of touched buckets (k keys touch ≤ min(k, num_buckets)
         buckets — at production bucket counts a 100-key batch reads a
-        handful of files), LWW-merge, filter to the key set. Same
-        local-hash canary guard as lookup()."""
+        handful of files), LWW-merge, filter to the key set. The local
+        hash is trusted only while it matches the JVM canary stored at
+        table create."""
         from ..operators.dedup import lww_dedup  # local: avoid cycle
         from ..xxhash import bucket_of, canary_hash
 
@@ -507,14 +500,10 @@ class PagesTable:
                 "at table create — refusing to route point reads"
             )
         keys = list(dict.fromkeys(key_values))
-        if not keys:
-            fields = ", ".join(f"`{n}` {t}" for n, t in m.schema)
-            return self.spark.createDataFrame([], schema=fields)
         buckets = sorted({bucket_of([k], m.num_buckets) for k in keys})
         raw = self._read_buckets(m, [int(b) for b in buckets])
         if raw is None:
-            fields = ", ".join(f"`{n}` {t}" for n, t in m.schema)
-            return self.spark.createDataFrame([], schema=fields)
+            return self._empty_view(m)
         raw = raw.filter(F.col(m.key_columns[0]).isin(*keys))
         merged = lww_dedup(
             raw, list(m.key_columns), ["_lww_ts_us", "_lww_file", "_lww_pos"]
@@ -529,7 +518,7 @@ class PagesTable:
         batch_id: int | str,
         events: DataFrame,
         cfg: TableConfig | None = None,
-        carry_salted: bool | None = None,
+        probe: bool = True,
         ddls: list[dict] | None = None,
         inline_compact: bool = True,
     ) -> dict:
@@ -541,18 +530,19 @@ class PagesTable:
         (streaming/runner.py), so the table-sized fold never sits inside
         a micro-batch trigger.
 
-        ``carry_salted``: a caller that streams many batches carries its
-        ``SkewPlanner``'s decision here to SKIP the keys-only probe job
-        (``apply_batches``, the streaming foreachBatch sink); None probes.
+        ``probe=False``: skip the keys-only probe job that decides the
+        winner pre-filter (see ``_write_batch_delta``). Callers that stream
+        many batches probe only their first batch that is not skipped
+        (``apply_batches``, the streaming foreachBatch sink).
         ``ddls``: this batch's DDL dicts when the caller pre-collected
         them for the whole log in ONE pushed-predicate scan (plans/replay)
         — skips the per-batch DDL collect job; None collects here.
 
         Pipeline — ONE payload shuffle total:
         filter (F1-F4) → split row/DDL → DDL → manifest schema (D3) →
-        project via column mapping → [light keys-only pass: touched buckets
-        + event counts, column-pruned scan, no payload] → union touched-
-        bucket state → repartition by bucket (the one payload shuffle) →
+        project via column mapping → [light keys-only probe: event counts
+        + distinct-key estimates, column-pruned scan, no payload] →
+        [winner pre-filter] → repartition by bucket (the one payload shuffle) →
         groupBy(bucket, key) LWW max_by — batch dedup and merge collapse
         into one aggregate, and hash(bucket) already satisfies its
         distribution so NO second exchange → transform (D4: extraction
@@ -561,13 +551,6 @@ class PagesTable:
         commit (ledger + lineage).
         """
         t0 = time.time()
-        profile = os.environ.get("MSSS_PROFILE") == "1"
-        marks: list[tuple[str, float]] = []
-
-        def mark(label: str) -> None:
-            if profile:
-                marks.append((label, time.time() - t0))
-
         bid = str(batch_id)
         m = self.manifest()
         cfg = cfg or TableConfig(name="web.pages")
@@ -592,30 +575,21 @@ class PagesTable:
         n_ddl = len(ddls)
         for d in ddls:
             self._apply_ddl(m, d)
-        mark("ddl_collect")
 
         delta = self._write_batch_delta(
             row_events,
             cfg,
             dict(m.column_mapping),
             m.num_buckets,
-            mark,
-            carry_salted=SkewPlanner.resolve(cfg, carry_salted),
+            probe=probe,
             target_types=dict(m.schema),
             physical=dict(m.physical or {}),
         )
-        res = self._commit_batch(
-            m, bid, delta, n_ddl, t0, mark,
+        return self._commit_batch(
+            m, bid, delta, n_ddl, t0,
             inline_compact=inline_compact,
             rebase=lambda fm: [self._apply_ddl(fm, d) for d in ddls],
         )
-        if profile:
-            deltas = [
-                f"{label}={t - (marks[i-1][1] if i else 0):.1f}s"
-                for i, (label, t) in enumerate(marks)
-            ]
-            print(f"[profile batch {bid}] " + " ".join(deltas), flush=True)
-        return res
 
     def _commit_batch(
         self,
@@ -624,7 +598,6 @@ class PagesTable:
         delta: dict,
         n_ddl: int,
         t0: float,
-        mark=lambda label: None,
         inline_compact: bool = True,
         rebase=None,
     ) -> dict:
@@ -667,7 +640,6 @@ class PagesTable:
                         m, list(fold_map), bid, fold_map=fold_map
                     )
                     n_compacted = len(fold_map)
-                    mark("compaction")
             m.committed_batches.append(bid)
             # inline ledger fold: contiguous numeric ids collapse into the
             # prefix watermark ON EVERY COMMIT, so the manifest stays
@@ -698,7 +670,7 @@ class PagesTable:
                     int((m.metrics or {}).get("max_event_ts_us", 0) or 0),
                 ),
                 "commit_ts_ms": int(time.time() * 1000),
-                "salted_merge": bool(delta["use_salted"]),
+                "prefiltered": bool(delta.get("prefiltered")),
                 "max_key_rows": delta["max_key_rows"],
                 "skew_probed": bool(delta.get("skew_probed", True)),
                 "dup_share": delta.get("dup_share", 0.0),
@@ -719,7 +691,6 @@ class PagesTable:
                 if rebase is not None:
                     rebase(fresh)
                 m = fresh
-        mark("commit")
         # pipelined callers rebind their shared manifest to this object
         # after a rebase (the original reference is stale post-conflict)
         self._manifest_after_commit = m
@@ -732,20 +703,22 @@ class PagesTable:
         ddl_index: dict[str, list[dict]] | None = None,
     ) -> list[dict]:
         """Apply an ORDERED stream of ``(batch_id, events)`` batches one at
-        a time — the serial twin of ``apply_batches_pipelined``, with the
-        salting decision carried between batches by one ``SkewPlanner``.
+        a time — the serial twin of ``apply_batches_pipelined``. Only the
+        first batch that is not skipped runs the keys-only probe (skew in
+        a CDC stream is persistent: hot domains stay hot, so one probe
+        decides whether the stream is pre-filter territory).
         ``ddl_index`` (batch_id → DDL dicts, pre-collected for the whole
         log) skips each batch's DDL collect job; None collects per batch."""
         cfg = cfg or TableConfig(name="web.pages")
-        planner = SkewPlanner(cfg)
+        probe = True
         results = []
         for batch_id, events in batches:
             res = self.apply_batch(
                 batch_id, events, cfg,
-                carry_salted=planner.carry(),
+                probe=probe,
                 ddls=None if ddl_index is None else ddl_index.get(str(batch_id), []),
             )
-            planner.observe(res)
+            probe = probe and bool(res.get("skipped"))
             results.append(res)
         return results
 
@@ -760,7 +733,9 @@ class PagesTable:
         to ``depth`` delta writes in flight (merge-on-read makes batch
         deltas independent: only the manifest commit must stay ordered,
         like the reference's pipelined group commit —
-        /root/reference/src/slave/rs_redis_thread.h:10, depth 36).
+        /root/reference/src/slave/rs_redis_thread.h:10, depth 36). Only the
+        first submitted batch runs the keys-only probe, as in
+        ``apply_batches``.
 
         DDL ordering: callers pass ``ddl_index`` (batch_id → DDL dicts,
         pre-collected in ONE pushed-predicate scan of the whole log). Each
@@ -772,8 +747,14 @@ class PagesTable:
         schema changes from later, not-yet-committed batches, and schema
         visibility stays behind the exactly-once ledger across a crash.
         Exactly-once: commits happen strictly in order; a crash leaves only
-        orphan delta dirs (vacuum()-able), never a half commit."""
-        from concurrent.futures import ThreadPoolExecutor, wait
+        orphan delta dirs (vacuum()-able), never a half commit.
+
+        Threshold compaction runs on an ``AsyncCompactor`` (Iceberg async
+        rewrite_data_files): the table-sized fold never sits in the serial
+        commit path, and a finished fold lands inside the next batch's
+        ordered commit. Vintage count can exceed compact_threshold by the
+        batches that land while a fold is in flight — still bounded."""
+        from concurrent.futures import ThreadPoolExecutor
 
         cfg = cfg or TableConfig(name="web.pages")
         m = self.manifest()
@@ -781,58 +762,12 @@ class PagesTable:
         ddl_index = ddl_index or {}
         results: list[dict] = []
         inflight: list[tuple[str, list[dict], float, object]] = []
-        planner = SkewPlanner(cfg)
+        probe = True
+        compactor = self.async_compactor()
 
-        # Async threshold compaction (Iceberg async rewrite_data_files):
-        # the table-sized fold never sits in the serial commit path — it
-        # runs on a maintenance thread over a FROZEN vintage snapshot and
-        # its result folds into a later ordered commit. Vintage count can
-        # exceed compact_threshold by the batches that land while a fold
-        # is in flight — still bounded.
-        compaction: dict = {"fut": None}
-        maintenance = ThreadPoolExecutor(max_workers=1)
-
-        def fold_compaction_if_ready(bid: str) -> bool:
-            """Fold a finished compute into ``m``; False when none was
-            ready or it failed (dropped)."""
-            fut = compaction["fut"]
-            if fut is None or not fut.done():
-                return False
-            compaction["fut"] = None
-            res = _fold_result(fut)
-            if res is None:
-                return False
-            snapshot, cdirs, crows = res
-            for b, old in snapshot.items():
-                if b not in cdirs:
-                    continue
-                tail = [x for x in m.buckets.get(b, []) if x not in old]
-                m.buckets[b] = [cdirs[b]] + tail
-                m.lineage[b] = {"batch_id": bid, "rows": crows.get(b, 0)}
-            return True
-
-        def schedule_compaction_if_needed() -> None:
-            if compaction["fut"] is not None:
-                return
-            over = [
-                b for b, lst in m.buckets.items() if len(lst) > m.compact_threshold
-            ]
-            if over:
-                fold_map = self._plan_fold(m, over)
-                if not fold_map:
-                    return
-                frozen = Manifest.from_json(m.to_json())
-                compaction["fut"] = maintenance.submit(
-                    self._compact_compute,
-                    frozen,
-                    list(fold_map),
-                    fold_map=fold_map,
-                )
-
-        # MSSS_PROFILE=1: decompose the serial (ordered-commit) floor —
-        # wait = head delta not ready (pipeline starved, parallel work),
-        # the rest is true main-thread serial cost per batch
-        prof = os.environ.get("MSSS_PROFILE") == "1"
+        # decomposition of the serial (ordered-commit) floor: wait = head
+        # delta not ready (pipeline starved, parallel work), the rest is
+        # true main-thread serial cost per batch
         agg = {"wait": 0.0, "ddl": 0.0, "fold": 0.0, "commit": 0.0,
                "sched": 0.0, "submit": 0.0}
 
@@ -847,19 +782,18 @@ class PagesTable:
                 self._apply_ddl(m, d)
             agg["ddl"] += time.time() - tw
             tw = time.time()
-            fold_compaction_if_ready(bid)
+            compactor.fold_into(m, bid)
             agg["fold"] += time.time() - tw
             tw = time.time()
             res = self._commit_batch(
                 m, bid, delta, len(ddls), t0, inline_compact=False,
                 rebase=lambda fm, _ds=ddls: [self._apply_ddl(fm, d) for d in _ds],
             )
-            planner.observe(res)
             results.append(res)
             agg["commit"] += time.time() - tw
             m = self._manifest_after_commit  # follow any conflict rebase
             tw = time.time()
-            schedule_compaction_if_needed()
+            compactor.schedule(m)
             agg["sched"] += time.time() - tw
 
         try:
@@ -877,7 +811,6 @@ class PagesTable:
                     mapping = dict(plan_m.column_mapping)
                     target_types = dict(plan_m.schema)
                     physical = dict(plan_m.physical or {})
-                    carry = planner.carry()  # ordered: stays on main
                     t0 = time.time()
 
                     # the filter graph (F1/F3 + op routing) is built INSIDE
@@ -888,7 +821,7 @@ class PagesTable:
                     def work(
                         events=events,
                         mapping=mapping,
-                        carry=carry,
+                        probe=probe,
                         target_types=target_types,
                         physical=physical,
                     ):
@@ -902,12 +835,13 @@ class PagesTable:
                             cfg,
                             mapping,
                             m.num_buckets,
-                            carry_salted=carry,
+                            probe=probe,
                             target_types=target_types,
                             physical=physical,
                         )
 
                     fut = ex.submit(work)
+                    probe = False
                     agg["submit"] += time.time() - t0
                     inflight.append((bid, ddls, t0, fut))
                     while len(inflight) >= depth:
@@ -915,16 +849,12 @@ class PagesTable:
                 while inflight:
                     commit_head()
             # drain: a pending fold commits as its own maintenance version
-            # so the work is never thrown away
-            while compaction["fut"] is not None:
-                wait([compaction["fut"]])
-                if not fold_compaction_if_ready(f"compact-v{m.version + 1}"):
-                    break  # dropped: a later replay retries the fold
-                m.version += 1
-                self._commit(m)
-                schedule_compaction_if_needed()
+            # so the work is never thrown away; a dropped (failed) fold
+            # stops the drain, and a later replay retries it
+            while compactor.commit_fold(wait=True):
+                compactor.schedule(self.manifest())
         finally:
-            maintenance.shutdown(wait=True)
+            compactor.shutdown()
         n = max(1, len([r for r in results if not r.get("skipped")]))
         # always-on floor telemetry (cheap): everything except `wait`
         # is true main-thread serial cost; `wait` is head-delta compute
@@ -937,44 +867,15 @@ class PagesTable:
             "head_wait_sec_per_batch": round(agg["wait"] / n, 3),
             "sections": {k: round(v, 3) for k, v in agg.items()},
         }
-        if prof:
-            per = " ".join(f"{k}={v:.2f}s({v / n:.3f}s/b)"
-                           for k, v in agg.items())
-            print(f"[profile pipelined n={n}] {per}", flush=True)
         return results
 
-    def _bucket_merge(
-        self,
-        src: DataFrame,
-        key_columns: list[str],
-        salted: bool = False,
-        salt_buckets: int = 16,
-    ) -> DataFrame:
+    def _bucket_merge(self, src: DataFrame, key_columns: list[str]) -> DataFrame:
         """One winner per (bucket, key): repartition by bucket so the
-        aggregate AND the partitionBy write share one exchange. The salted
-        variant (planner-selected for flooded keys) spreads a hot bucket
-        over (bucket, salt) reducers first — one extra payload exchange,
-        only paid when the batch is actually hot."""
+        aggregate AND the partitionBy write share one exchange."""
         from ..operators.dedup import rank_struct  # local: avoid cycle
 
         data_cols = [c for c in src.columns if c != "_bucket"]
         rank = rank_struct(src, ["_lww_ts_us", "_lww_file", "_lww_pos"])
-        if salted:
-            salt = F.pmod(F.xxhash64(rank), F.lit(salt_buckets))
-            partial = (
-                src.withColumn("_salt", salt)
-                .repartition("_bucket", "_salt")
-                .groupBy("_bucket", *key_columns, "_salt")
-                .agg(F.max_by(F.struct(*data_cols), rank).alias("_w"))
-                .select("_bucket", "_w.*")
-            )
-            rank2 = rank_struct(partial, ["_lww_ts_us", "_lww_file", "_lww_pos"])
-            return (
-                partial.repartition("_bucket")
-                .groupBy("_bucket", *key_columns)
-                .agg(F.max_by(F.struct(*data_cols), rank2).alias("_w"))
-                .select("_bucket", "_w.*")
-            )
         return (
             src.repartition("_bucket")
             .groupBy("_bucket", *key_columns)
@@ -988,8 +889,7 @@ class PagesTable:
         cfg: TableConfig,
         column_mapping: dict[str, str],
         num_buckets: int,
-        mark=lambda label: None,
-        carry_salted: bool | None = None,
+        probe: bool = True,
         target_types: dict[str, str] | None = None,
         physical: dict | None = None,
     ) -> dict:
@@ -998,16 +898,17 @@ class PagesTable:
         several batches can run concurrently (apply_batches_pipelined);
         the caller serializes manifest mutation + commit.
 
-        Skew planning (D2): with ``carry_salted=None`` a keys-only probe
-        job runs first — Catalyst prunes the scan to the key/op columns,
-        per-bucket count + HLL distinct partial-combine map-side, and
-        (rows - distinct_keys) per bucket upper-bounds the duplicate mass
-        one flooded key can contribute there. With ``carry_salted`` set
-        (pipelined streams between probe points) the probe job is SKIPPED
-        entirely: the carried decision drives the merge, and exact
-        events_in plus a global duplicate-share signal come for FREE from
-        an ``observe`` node evaluated by the write job itself — the
-        per-batch serial floor drops by one full scan."""
+        Skew (D2): with ``probe`` a keys-only probe job runs first —
+        Catalyst prunes the scan to the key/op columns, per-bucket count +
+        HLL distinct partial-combine map-side, and (rows - distinct_keys)
+        per bucket upper-bounds the duplicate mass one flooded key can
+        contribute there. A duplicate-heavy or hot-keyed batch then takes
+        the winner pre-filter, the sink's one skew mechanism: a flooded
+        key's losing rows never reach the payload exchange. Without
+        ``probe`` the probe job is SKIPPED entirely and the merge runs
+        plain: exact events_in plus a global duplicate-share signal come
+        for FREE from an ``observe`` node evaluated by the write job
+        itself — the per-batch serial floor drops by one full scan."""
         from pyspark.sql import Observation
 
         batch_state = batch_to_state(
@@ -1018,8 +919,8 @@ class PagesTable:
         ).cast("int")
         wb = batch_state.withColumn("_bucket", bucket_col)
 
-        probed = carry_salted is None
-        if probed:
+        prefiltered = False
+        if probe:
             stats = (
                 wb.groupBy("_bucket")
                 .agg(
@@ -1037,18 +938,20 @@ class PagesTable:
             max_key_rows = int(
                 max((r["n"] - min(r["nk"], r["n"]) + 1 for r in stats), default=0)
             )
-            use_salted = (
-                events_in >= cfg.salt_min_rows
-                and max_key_rows >= cfg.salt_threshold_share * events_in
+            nk_total = int(sum(min(r["nk"], r["n"]) for r in stats))
+            dup_share = (events_in - nk_total) / events_in if events_in else 0.0
+            # a batch without a duplicate key has nothing to drop (and the
+            # +1 above makes max_key_rows pass the hot-key share on any
+            # batch under 1 / HOT_KEY_SHARE events)
+            prefiltered = (
+                0 < nk_total < events_in
+                and nk_total <= PREFILTER_MAX_KEYS
+                and (
+                    dup_share >= PREFILTER_MIN_DUP_SHARE
+                    or max_key_rows >= HOT_KEY_SHARE * events_in
+                )
             )
-            dup_share = (
-                (events_in - sum(min(r["nk"], r["n"]) for r in stats)) / events_in
-                if events_in
-                else 0.0
-            )
-            mark("key_stats")
         else:
-            use_salted = bool(carry_salted)
             obs = Observation()
             wb = wb.observe(
                 obs,
@@ -1059,53 +962,45 @@ class PagesTable:
 
         new_dirs: dict[str, str] = {}
         lineage_rows: dict[str, int] = {}
-        if probed and not events_in:
+        if probe and not events_in:
             pass  # heartbeat batch: no write job at all
         else:
             src = wb
-            if probed:
-                nk_total = int(sum(min(r["nk"], r["n"]) for r in stats))
-                if (
-                    dup_share >= cfg.prefilter_min_dup_share
-                    and 0 < nk_total <= cfg.prefilter_max_keys
-                ):
-                    # Winner pre-filter (guide-§8 shape: decide on keys,
-                    # move payloads once): the winning rank per key comes
-                    # from a column-pruned scan (Catalyst prunes to the
-                    # key + order columns), broadcasts, and drops losing
-                    # rows BEFORE the payload exchange. The final max_by
-                    # still runs over the surviving argmax set, so ties
-                    # resolve exactly as before.
-                    from ..operators.dedup import rank_struct  # local: cycle
+            if prefiltered:
+                # Winner pre-filter (guide-§8 shape: decide on keys, move
+                # payloads once): the winning rank per key comes from a
+                # column-pruned scan (Catalyst prunes to the key + order
+                # columns; the aggregate collapses a hot key map-side),
+                # broadcasts, and drops losing rows BEFORE the payload
+                # exchange. The final max_by still runs over the surviving
+                # argmax set, so ties resolve exactly as before.
+                from ..operators.dedup import rank_struct  # local: cycle
 
-                    rank = rank_struct(
-                        wb, ["_lww_ts_us", "_lww_file", "_lww_pos"]
-                    )
-                    winners = wb.groupBy(*cfg.key_columns).agg(
-                        F.max(rank).alias("_pf_rank")
-                    )
-                    winners = winners.select(
-                        *[
-                            F.col(k).alias(f"_pf_{k}")
-                            for k in cfg.key_columns
-                        ],
-                        "_pf_rank",
-                    )
-                    cond = rank == F.col("_pf_rank")
-                    for k in cfg.key_columns:
-                        cond &= F.col(k).eqNullSafe(F.col(f"_pf_{k}"))
-                    src = (
-                        wb.join(F.broadcast(winners), cond)
-                        .drop("_pf_rank", *[f"_pf_{k}" for k in cfg.key_columns])
-                    )
-            merged = self._bucket_merge(
-                src, list(cfg.key_columns), use_salted, cfg.salt_buckets
-            )
+                rank = rank_struct(
+                    wb, ["_lww_ts_us", "_lww_file", "_lww_pos"]
+                )
+                winners = wb.groupBy(*cfg.key_columns).agg(
+                    F.max(rank).alias("_pf_rank")
+                )
+                winners = winners.select(
+                    *[
+                        F.col(k).alias(f"_pf_{k}")
+                        for k in cfg.key_columns
+                    ],
+                    "_pf_rank",
+                )
+                cond = rank == F.col("_pf_rank")
+                for k in cfg.key_columns:
+                    cond &= F.col(k).eqNullSafe(F.col(f"_pf_{k}"))
+                src = (
+                    wb.join(F.broadcast(winners), cond)
+                    .drop("_pf_rank", *[f"_pf_{k}" for k in cfg.key_columns])
+                )
+            merged = self._bucket_merge(src, list(cfg.key_columns))
             if cfg.transform is not None:
                 merged = cfg.transform(merged)
             new_dirs, lineage_rows = self._write_snapshot(merged, physical)
-            mark("merge_write")
-        if not probed:
+        if not probe:
             if new_dirs:
                 got = obs.get
                 events_in = int(got["n"])
@@ -1125,8 +1020,8 @@ class PagesTable:
             "lineage_rows": lineage_rows,
             "events_in": events_in,
             "max_key_rows": max_key_rows,
-            "use_salted": use_salted,
-            "skew_probed": probed,
+            "prefiltered": prefiltered,
+            "skew_probed": probe,
             "dup_share": round(dup_share, 4),
             "max_event_ts_us": max_event_ts_us,
         }
@@ -1261,13 +1156,12 @@ class PagesTable:
 
     def async_compactor(self) -> "AsyncCompactor":
         """Maintenance-thread threshold compaction for single-batch
-        callers (the streaming foreachBatch sink): the same async
-        schedule → compute-over-frozen-snapshot → fold pattern
-        ``apply_batches_pipelined`` runs inline, but the fold lands as
-        its OWN maintenance commit between micro-batches, so the
-        table-sized merge never executes inside a trigger. Call
-        ``tick()`` after every committed batch; ``close()`` when the
-        stream stops (a pending compute is drained and committed)."""
+        callers (the streaming foreachBatch sink): the same compactor
+        ``apply_batches_pipelined`` drives, but the fold lands as its OWN
+        maintenance commit between micro-batches, so the table-sized
+        merge never executes inside a trigger. Call ``tick()`` after
+        every committed batch; ``close()`` when the stream stops (a
+        pending compute is drained and committed)."""
         return AsyncCompactor(self)
 
     def compact(self, buckets: list[int] | None = None) -> dict:
@@ -1710,14 +1604,17 @@ class PagesTable:
 
 
 class AsyncCompactor:
-    """Off-trigger threshold compaction (see PagesTable.async_compactor).
+    """Off-trigger threshold compaction: the one schedule → compute over a
+    frozen snapshot → fold cycle, for the pipelined replay (whose folds
+    land inside its next ordered commit, ``fold_into``) and the streaming
+    sink (whose folds land as their own maintenance commit, ``tick``).
 
-    Exactly-once safety mirrors the pipelined path: the compute reads a
-    FROZEN committed vintage snapshot (LWW merge-on-read makes folding any
-    vintage subset order-insensitive), and the fold rewrites only bucket
-    lists that still contain the folded dirs — a crash between compute
-    and fold leaves unreferenced orphan dirs (vacuum territory), never a
-    wrong manifest."""
+    Exactly-once safety: the compute reads a FROZEN committed vintage
+    snapshot (LWW merge-on-read makes folding any vintage subset
+    order-insensitive), and the fold rewrites only bucket lists that still
+    contain the folded dirs — a crash between compute and fold leaves
+    unreferenced orphan dirs (vacuum territory), never a wrong manifest.
+    A failed compute is dropped with a warning (``_fold_result``)."""
 
     def __init__(self, table: PagesTable):
         from concurrent.futures import ThreadPoolExecutor
@@ -1726,68 +1623,12 @@ class AsyncCompactor:
         self._pool = ThreadPoolExecutor(max_workers=1)
         self._fut = None
 
-    def tick(self) -> int:
-        """Fold a finished compute into its own maintenance commit, then
-        schedule a new compute if any bucket is past threshold. Returns
-        the number of buckets folded this call (telemetry)."""
-        folded = self._fold_if_ready()
-        self._schedule_if_needed()
-        return folded
-
-    def close(self) -> None:
-        """Drain: wait for an in-flight compute and commit its fold. The
-        maintenance pool is shut down even if the fold fails."""
-        from concurrent.futures import wait
-
-        try:
-            if self._fut is not None:
-                wait([self._fut])
-                self._fold_if_ready()
-        finally:
-            self._pool.shutdown(wait=True)
-
-    def _fold_if_ready(self) -> int:
-        fut = self._fut
-        if fut is None or not fut.done():
-            return 0
-        self._fut = None
-        res = _fold_result(fut)
-        if res is None:
-            return 0
-        snapshot, cdirs, crows = res
-        if not cdirs:
-            return 0
-        t = self._table
-        while True:
-            m = t.manifest()
-            n = 0
-            for b, old in snapshot.items():
-                if b not in cdirs:
-                    continue
-                cur = m.buckets.get(b, [])
-                if not all(x in cur for x in old):
-                    continue  # a racer already folded these vintages
-                tail = [x for x in cur if x not in old]
-                m.buckets[b] = [cdirs[b]] + tail
-                m.lineage[b] = {
-                    "batch_id": f"compact-v{m.version + 1}",
-                    "rows": crows.get(b, 0),
-                }
-                n += 1
-            if n == 0:
-                return 0
-            m.version += 1
-            try:
-                t._commit(m)
-                return n
-            except CommitConflictError:
-                continue  # re-read and re-apply onto the fresh manifest
-
-    def _schedule_if_needed(self) -> None:
+    def schedule(self, m: Manifest) -> None:
+        """Start a fold compute over a frozen copy of ``m`` when none is in
+        flight and some bucket is past ``compact_threshold``."""
         if self._fut is not None:
             return
         t = self._table
-        m = t.manifest()
         over = [
             b for b, lst in m.buckets.items() if len(lst) > m.compact_threshold
         ]
@@ -1800,3 +1641,78 @@ class AsyncCompactor:
         self._fut = self._pool.submit(
             t._compact_compute, frozen, list(fold_map), fold_map=fold_map
         )
+
+    def fold_into(self, m: Manifest, bid: str) -> int:
+        """Fold a finished compute into ``m`` in memory, lineage under
+        ``bid``; the caller's next commit carries it. Returns the number
+        of buckets folded (0 when none was ready or it failed)."""
+        res = self._take()
+        return 0 if res is None else self._apply(m, res, bid)
+
+    def commit_fold(self, wait: bool = False) -> int:
+        """Fold a finished compute (with ``wait``, the in-flight one) into
+        its own maintenance commit. Returns the number of buckets folded."""
+        res = self._take(wait)
+        if res is None:
+            return 0
+        t = self._table
+        while True:
+            m = t.manifest()
+            n = self._apply(m, res, f"compact-v{m.version + 1}")
+            if n == 0:
+                return 0
+            m.version += 1
+            try:
+                t._commit(m)
+                return n
+            except CommitConflictError:
+                continue  # re-read and re-apply onto the fresh manifest
+
+    def tick(self) -> int:
+        """Fold a finished compute into its own maintenance commit, then
+        schedule a new compute if any bucket is past threshold. Returns
+        the number of buckets folded this call (telemetry)."""
+        folded = self.commit_fold()
+        self.schedule(self._table.manifest())
+        return folded
+
+    def close(self) -> None:
+        """Drain: wait for an in-flight compute and commit its fold. The
+        maintenance pool is shut down even if the fold fails."""
+        try:
+            self.commit_fold(wait=True)
+        finally:
+            self.shutdown()
+
+    def shutdown(self) -> None:
+        """Stop the maintenance thread; an in-flight fold is awaited and
+        left uncommitted (its dirs are orphans for vacuum())."""
+        self._pool.shutdown(wait=True)
+
+    def _take(self, wait: bool = False):
+        """The finished compute's (snapshot, dirs, rows), or None when none
+        is in flight, it is still running (and not ``wait``), or it
+        failed."""
+        fut = self._fut
+        if fut is None or not (wait or fut.done()):
+            return None
+        self._fut = None
+        return _fold_result(fut)
+
+    @staticmethod
+    def _apply(m: Manifest, res, bid: str) -> int:
+        """Swap each folded bucket's vintages in ``m`` for the compacted
+        dir; returns the number of buckets folded."""
+        snapshot, cdirs, crows = res
+        n = 0
+        for b, old in snapshot.items():
+            if b not in cdirs:
+                continue
+            cur = m.buckets.get(b, [])
+            if not all(x in cur for x in old):
+                continue  # a racer already folded these vintages
+            tail = [x for x in cur if x not in old]
+            m.buckets[b] = [cdirs[b]] + tail
+            m.lineage[b] = {"batch_id": bid, "rows": crows.get(b, 0)}
+            n += 1
+        return n

@@ -26,7 +26,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import TableConfig
-from ..operators.skew import SkewPlanner
 from ..sink import manifest_store
 from ..sink.pages_table import PagesTable
 from ..sources.event_log import stream_event_log
@@ -110,7 +109,9 @@ def start_streaming_replay(
 
         cfg = default_pages_config()
     table = PagesTable.open(spark, table_path, num_buckets)
-    planner = SkewPlanner(cfg)
+    # only the first trigger that is not skipped runs the keys-only probe
+    # (as in PagesTable.apply_batches)
+    probe = True
     # threshold compaction runs on a maintenance thread and commits
     # between micro-batches — the trigger never pays the table-sized fold
     # (the cause of the round-5 p95 spikes: a fold landing INSIDE a
@@ -133,6 +134,7 @@ def start_streaming_replay(
         return ddl_rows_from_footers(files, cfg.name)
 
     def apply(batch_df, batch_id: int) -> None:
+        nonlocal probe
         # batchId is stable across checkpointed restarts → the ledger key.
         if partial:
             from ..operators.partial import apply_partial_batch
@@ -140,7 +142,7 @@ def start_streaming_replay(
             apply_partial_batch(table, f"stream-{batch_id}", batch_df, cfg)
             return
         res = table.apply_batch(
-            f"stream-{batch_id}", batch_df, cfg, carry_salted=planner.carry(),
+            f"stream-{batch_id}", batch_df, cfg, probe=probe,
             ddls=(
                 None
                 if transform is not None or source is not None
@@ -148,8 +150,8 @@ def start_streaming_replay(
             ),
             inline_compact=False,
         )
-        planner.observe(res)
         if not res.get("skipped"):
+            probe = False
             compactor.tick()
 
     stream = (

@@ -56,7 +56,7 @@ def test_manifest_size_stays_flat_over_many_commits(spark, tmp_table_path):
     for k in range(200):
         empty_delta = {
             "new_dirs": {}, "lineage_rows": {}, "events_in": 0,
-            "max_key_rows": 0, "use_salted": False,
+            "max_key_rows": 0,
         }
         t._commit_batch(m, f"fileseq-{k}", empty_delta, 0, 0.0)
         sizes.append(len(m.to_json()))
@@ -68,8 +68,8 @@ def test_manifest_size_stays_flat_over_many_commits(spark, tmp_table_path):
     assert sizes[-1] - sizes[99] <= 8, (sizes[99], sizes[-1])
     # out-of-order ids stay explicitly listed until the gap closes
     t._commit_batch(m, "fileseq-250", dict(
-        new_dirs={}, lineage_rows={}, events_in=0, max_key_rows=0,
-        use_salted=False), 0, 0.0)
+        new_dirs={}, lineage_rows={}, events_in=0, max_key_rows=0),
+        0, 0.0)
     assert t.manifest().committed_batches == ["fileseq-250"]
     assert t.manifest().ledger_watermarks["fileseq"] == 199
 

@@ -8,10 +8,19 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from mysql_syncer_spark.config import TableConfig
 from mysql_syncer_spark.generator import GenSpec, generate_events, write_event_log
 from mysql_syncer_spark.plans.replay import replay
+from mysql_syncer_spark.sink import pages_table
 from mysql_syncer_spark.sink.pages_table import PagesTable
+
+
+def _force(monkeypatch, on: bool) -> None:
+    """Pre-filter every probed batch with duplicates (on), or none (off)."""
+    if on:
+        monkeypatch.setattr(pages_table, "PREFILTER_MIN_DUP_SHARE", 0.0)
+    else:
+        monkeypatch.setattr(pages_table, "PREFILTER_MIN_DUP_SHARE", 2.0)
+        monkeypatch.setattr(pages_table, "HOT_KEY_SHARE", 2.0)
 
 
 def _rows(spark, path):
@@ -30,29 +39,36 @@ def dup_heavy_log():
     return d
 
 
-def test_prefilter_on_off_identical_state(spark, dup_heavy_log):
-    on = TableConfig(name="web.pages", prefilter_min_dup_share=0.0)
-    off = TableConfig(name="web.pages", prefilter_min_dup_share=2.0)
+def test_prefilter_on_off_identical_state(spark, dup_heavy_log, monkeypatch):
     p_on = os.path.join(tempfile.mkdtemp(), "pages_on")
     p_off = os.path.join(tempfile.mkdtemp(), "pages_off")
-    replay(spark, dup_heavy_log, p_on, cfg=on, num_buckets=8)
-    replay(spark, dup_heavy_log, p_off, cfg=off, num_buckets=8)
+    with monkeypatch.context() as mp:
+        _force(mp, True)
+        res = replay(spark, dup_heavy_log, p_on, num_buckets=8)
+    assert res["batches"][0]["prefiltered"] is True
+    with monkeypatch.context() as mp:
+        _force(mp, False)
+        res = replay(spark, dup_heavy_log, p_off, num_buckets=8)
+    assert not any(b["prefiltered"] for b in res["batches"])
     assert _rows(spark, p_on) == _rows(spark, p_off)
 
 
-def test_prefilter_gate_respects_max_keys(spark, dup_heavy_log):
-    """prefilter_max_keys=0 must behave exactly like disabled."""
-    tiny = TableConfig(name="web.pages", prefilter_min_dup_share=0.0,
-                       prefilter_max_keys=0)
-    off = TableConfig(name="web.pages", prefilter_min_dup_share=2.0)
+def test_prefilter_gate_respects_max_keys(spark, dup_heavy_log, monkeypatch):
+    """PREFILTER_MAX_KEYS=0 must behave exactly like disabled."""
     p_a = os.path.join(tempfile.mkdtemp(), "pages_a")
     p_b = os.path.join(tempfile.mkdtemp(), "pages_b")
-    replay(spark, dup_heavy_log, p_a, cfg=tiny, num_buckets=8)
-    replay(spark, dup_heavy_log, p_b, cfg=off, num_buckets=8)
+    with monkeypatch.context() as mp:
+        _force(mp, True)
+        mp.setattr(pages_table, "PREFILTER_MAX_KEYS", 0)
+        res = replay(spark, dup_heavy_log, p_a, num_buckets=8)
+    assert not any(b["prefiltered"] for b in res["batches"])
+    with monkeypatch.context() as mp:
+        _force(mp, False)
+        replay(spark, dup_heavy_log, p_b, num_buckets=8)
     assert _rows(spark, p_a) == _rows(spark, p_b)
 
 
-def test_prefilter_exact_rank_ties_keep_one_row(spark):
+def test_prefilter_exact_rank_ties_keep_one_row(spark, monkeypatch):
     """Rows tying on the FULL rank (same ts/file/pos) survive the filter
     together and the final max_by still emits exactly one winner."""
     tbl = PagesTable.create(
@@ -88,11 +104,9 @@ def test_prefilter_exact_rank_ties_keep_one_row(spark):
             "struct<kind:string,col:string,new_name:string,dtype:string>"
         ).alias("ddl"),
     )
-    cfg = TableConfig(
-        name="web.pages", prefilter_min_dup_share=0.0, salt_min_rows=10**9
-    )
-    res = tbl.apply_batch("b0", events, cfg)
-    assert not res.get("skipped")
+    _force(monkeypatch, True)
+    res = tbl.apply_batch("b0", events)
+    assert not res.get("skipped") and res["prefiltered"] is True
     rows = tbl.read().select("url", "html").collect()
     assert sorted(r["url"] for r in rows) == ["u1", "u2"]
     assert {bytes(r["html"]) for r in rows} == {b"<b>a</b>", b"<b>b</b>"}

@@ -67,54 +67,71 @@ def test_hot_key_detection_single_scan(spark):
     assert "ReusedExchange" in plan, plan
 
 
-def test_sink_switches_to_salted_merge_on_flood(spark, tmp_path):
-    """Zipf-flood batch: the planner must pick the salted two-phase merge
-    and produce the same final state as the plain plan."""
+_EVENT_SCHEMA = (
+    "log_pos long, file_seq int, server_id int, op string, table string,"
+    "tx_id long, before struct<url:string,warc_ts:timestamp,html:binary,"
+    "text:string,lang:string>, after struct<url:string,warc_ts:timestamp,"
+    "html:binary,text:string,lang:string>, ddl struct<kind:string,"
+    "col:string,new_name:string,dtype:string>"
+)
+
+
+def _insert_events(spark, urls, seq=0):
+    """One INSERT per url, in order, one second apart."""
     import datetime as dt
 
-    from mysql_syncer_spark.config import TableConfig
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    rows = [
+        (
+            seq * 100_000 + i * 97 + 4, seq, 1, "I", "web.pages", i // 7, None,
+            (url, t0 + dt.timedelta(seconds=i), b"<p>x</p>", None, "en"),
+            None,
+        )
+        for i, url in enumerate(urls)
+    ]
+    return spark.createDataFrame(rows, _EVENT_SCHEMA)
+
+
+def test_sink_switches_to_salted_merge_on_flood(spark, tmp_path, monkeypatch):
+    """A flooded key sends the batch to the winner pre-filter, the sink's
+    one skew mechanism, even when the batch's duplicate share is under the
+    duplicate gate (the hot-key share decides), and the final state equals
+    the plain merge's (pre-filter forced off)."""
+    from mysql_syncer_spark.sink import pages_table
     from mysql_syncer_spark.sink.pages_table import PagesTable
 
-    def mkevents():
-        rows = []
-        for i in range(600):
-            url = "https://hot.example.com/" if i % 2 == 0 else f"https://u{i}.example.com/"
-            rows.append(
-                (
-                    i * 97 + 4, 0, 1, "I", "web.pages", i // 7,
-                    None,
-                    (url, dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-                     + dt.timedelta(seconds=i), b"<p>x</p>", None, "en"),
-                    None,
-                )
+    shapes = {
+        "half_hot": (600, 2),  # half the batch on one key: dup_share ~0.5
+        "low_dup": (1000, 10),  # one key at 10%, the rest unique: ~0.1
+    }
+    for name, (n, hot_every) in shapes.items():
+        ev = _insert_events(spark, [
+            "https://hot.example.com/" if i % hot_every == 0
+            else f"https://u{i}.example.com/"
+            for i in range(n)
+        ])
+        t_hot = PagesTable.create(spark, str(tmp_path / name / "hot"), num_buckets=4)
+        res_hot = t_hot.apply_batch("b0", ev)
+        assert res_hot["skew_probed"] is True, name
+        assert res_hot["prefiltered"] is True, name
+        hot_rows = n // hot_every
+        # max_key_rows is the (rows - distinct) flood-mass ESTIMATE (HLL ±2%)
+        assert 0.8 * hot_rows <= res_hot["max_key_rows"] <= 1.1 * hot_rows, name
+        if name == "low_dup":
+            assert res_hot["dup_share"] < pages_table.PREFILTER_MIN_DUP_SHARE
+
+        with monkeypatch.context() as mp:
+            mp.setattr(pages_table, "PREFILTER_MAX_KEYS", 0)
+            t_plain = PagesTable.create(
+                spark, str(tmp_path / name / "plain"), num_buckets=4
             )
-        return spark.createDataFrame(
-            rows,
-            "log_pos long, file_seq int, server_id int, op string, table string,"
-            "tx_id long, before struct<url:string,warc_ts:timestamp,html:binary,"
-            "text:string,lang:string>, after struct<url:string,warc_ts:timestamp,"
-            "html:binary,text:string,lang:string>, ddl struct<kind:string,"
-            "col:string,new_name:string,dtype:string>",
-        )
+            res_plain = t_plain.apply_batch("b0", ev)
+        assert res_plain["prefiltered"] is False, name
 
-    ev = mkevents()
-    hot_cfg = TableConfig(name="web.pages", salt_min_rows=100,
-                          salt_threshold_share=0.05, salt_buckets=4)
-    plain_cfg = TableConfig(name="web.pages", salt_min_rows=10**9)
-
-    t_hot = PagesTable.create(spark, str(tmp_path / "hot"), num_buckets=4)
-    res_hot = t_hot.apply_batch("b0", ev, cfg=hot_cfg)
-    assert res_hot["salted_merge"] is True
-    # max_key_rows is the (rows - distinct) flood-mass ESTIMATE (HLL ±2%)
-    assert 250 <= res_hot["max_key_rows"] <= 330
-
-    t_plain = PagesTable.create(spark, str(tmp_path / "plain"), num_buckets=4)
-    res_plain = t_plain.apply_batch("b0", ev, cfg=plain_cfg)
-    assert res_plain["salted_merge"] is False
-
-    a = {(r["url"], r["warc_ts"], r["lang"]) for r in t_hot.read().collect()}
-    b = {(r["url"], r["warc_ts"], r["lang"]) for r in t_plain.read().collect()}
-    assert a == b and len(a) == 301  # 300 cold urls + 1 hot winner
+        a = {(r["url"], r["warc_ts"], r["lang"]) for r in t_hot.read().collect()}
+        b = {(r["url"], r["warc_ts"], r["lang"]) for r in t_plain.read().collect()}
+        # cold urls + 1 hot winner
+        assert a == b and len(a) == n - hot_rows + 1, name
 
 
 def test_iceberg_golden_sql_edge_cases():
@@ -158,57 +175,46 @@ def test_iceberg_golden_sql_edge_cases():
 
 
 def test_adaptive_planner_skips_probe_between_edges(spark, tmp_path):
-    """Pipelined auto mode: the first batches probe, a stable duplicate
-    share carries the decision with NO probe job (observe-only, exact
-    events_in), and a hot-key flood moves the share enough to force a
-    re-probe that flips the merge to salted."""
-    import datetime as dt
-
-    from mysql_syncer_spark.config import TableConfig
+    """A multi-batch replay probes only its first batch that is not
+    skipped: carried batches skip the probe job and still report an exact
+    events_in (from the write's observe node), even when a hot-key flood
+    arrives later; a first batch that is already committed passes the
+    probe on to the next batch."""
     from mysql_syncer_spark.sink.pages_table import PagesTable
 
-    schema = (
-        "log_pos long, file_seq int, server_id int, op string, table string,"
-        "tx_id long, before struct<url:string,warc_ts:timestamp,html:binary,"
-        "text:string,lang:string>, after struct<url:string,warc_ts:timestamp,"
-        "html:binary,text:string,lang:string>, ddl struct<kind:string,"
-        "col:string,new_name:string,dtype:string>"
-    )
-
     def mk(seq, hot=False):
-        rows = []
-        for i in range(300):
-            url = (
+        return _insert_events(
+            spark,
+            [
                 "https://hot.example.com/" if hot and i % 2 == 0
                 else f"https://u{seq}-{i}.example.com/"
-            )
-            rows.append(
-                (seq * 1000 + i, seq, 1, "I", "web.pages", None, None,
-                 (url, dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-                  + dt.timedelta(seconds=i), b"<p>x</p>", None, "en"), None)
-            )
-        return spark.createDataFrame(rows, schema)
+                for i in range(300)
+            ],
+            seq,
+        )
 
-    cfg = TableConfig(name="web.pages", salt_min_rows=100,
-                      salt_threshold_share=0.05, salt_buckets=4,
-                      skew_probe="auto", salt_reprobe_delta=0.10)
-    t = PagesTable.create(spark, str(tmp_path / "adaptive"), num_buckets=4)
-    # depth=1 so planner state updates before each next submit
-    batches = [(f"b-{k}", mk(k)) for k in range(3)] + [("b-3", mk(3, hot=True)), ("b-4", mk(4, hot=True))]
-    res = t.apply_batches_pipelined(batches, cfg=cfg, depth=1)
-    by_id = {r["batch_id"]: r for r in res}
-    assert by_id["b-0"]["skew_probed"] is True      # first batch probes
-    assert by_id["b-1"]["skew_probed"] is False     # stable share carries
-    assert by_id["b-2"]["skew_probed"] is False
-    assert by_id["b-3"]["skew_probed"] is False     # flood batch itself ran carried...
-    assert by_id["b-4"]["skew_probed"] is True      # ...its share moved → re-probe
-    assert by_id["b-4"]["salted_merge"] is True     # and the probe flips to salted
-    # events_in stays EXACT in observe-only batches
-    assert by_id["b-1"]["events_in"] == 300
-    # final state correct: 5*150-ish cold urls + hot winner
-    urls = {r["url"] for r in t.read().collect()}
-    assert "https://hot.example.com/" in urls
-    assert len(urls) == 3 * 300 + 2 * 150 + 1
+    batches = [(f"b-{k}", mk(k)) for k in range(3)] + [
+        ("b-3", mk(3, hot=True)), ("b-4", mk(4, hot=True))
+    ]
+    for loop in ("serial", "pipelined"):
+        t = PagesTable.create(spark, str(tmp_path / loop), num_buckets=4)
+        # b-0 is committed before the replay, so the replay skips it
+        assert t.apply_batch("b-0", batches[0][1])["skew_probed"] is True
+        res = (
+            t.apply_batches_pipelined(batches, depth=2)
+            if loop == "pipelined"
+            else t.apply_batches(batches)
+        )
+        by_id = {r["batch_id"]: r for r in res}
+        assert by_id["b-0"]["skipped"] is True, loop
+        assert by_id["b-1"]["skew_probed"] is True, loop  # the probe passed on
+        for k in (2, 3, 4):  # carried, the floods included
+            r = by_id[f"b-{k}"]
+            assert r["skew_probed"] is False and r["prefiltered"] is False, (loop, k)
+            assert r["events_in"] == 300, (loop, k)
+        urls = {r["url"] for r in t.read().collect()}
+        assert "https://hot.example.com/" in urls, loop
+        assert len(urls) == 3 * 300 + 2 * 150 + 1, loop
 
 
 def test_iceberg_apply_batch_executes_when_available(spark):
