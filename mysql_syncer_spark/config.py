@@ -9,9 +9,11 @@ a dict entry, no recompile.
 
 The LWW order is not configurable: every sink ranks events by the
 hidden ``(_lww_ts_us, _lww_file, _lww_pos)`` columns. Skew is not
-configurable either: the pages sink picks its one skew mechanism, the
-winner pre-filter, from the keys-only probe of each stream's first batch
-(sink/pages_table.py, ``_write_batch_delta``).
+configurable either: the pages sink's one skew mechanism, the winner
+pre-filter, is decided by a keys-only probe, and only the probed batch
+can take it. A multi-batch replay or stream probes only its first batch
+that is not skipped, so its later batches always merge without the
+pre-filter (sink/pages_table.py, ``_write_batch_delta``).
 """
 
 from __future__ import annotations

@@ -566,57 +566,6 @@ def simhash_near_pairs(
     return pairs
 
 
-def _word_ngram_hashes(
-    df: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """(id, gram_hash) pairs: xxhash64 of each word n-gram, distinct
-    within the doc before the shuffle (map-side array_distinct)."""
-    toks = F.filter(F.split(normalized(F.col(text_col)), " "), lambda x: x != "")
-    grams = F.when(F.size(toks) >= n, F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-        lambda i: F.xxhash64(
-            F.concat_ws(" ", *[F.element_at(toks, i + k) for k in range(n)])
-        ),
-    )).otherwise(F.array().cast("array<bigint>"))
-    return df.select(
-        F.col(id_col), F.explode(F.array_distinct(grams)).alias("gram_hash")
-    )
-
-
-def contaminated_docs(
-    df: DataFrame,
-    benchmark: DataFrame,
-    n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
-    broadcast_benchmark: bool = True,
-) -> DataFrame:
-    """Benchmark decontamination — the training-set hygiene step every LLM
-    data pipeline runs (GPT-3 §C / PaLM style: flag a training document
-    when it shares ANY word ``n``-gram, default 13, with an eval set).
-
-    Shape: hash each side's n-grams (xxhash64 — 64-bit, corpus-scale
-    collision odds negligible for flagging), LEFT SEMI join training grams
-    against benchmark grams. The benchmark side is tiny next to a 100 TB
-    corpus, so it is broadcast by default — the training side streams
-    through map-side, NO shuffle of corpus data at all; set
-    ``broadcast_benchmark=False`` to fall back to a hash join when the
-    eval suite itself is huge.
-
-    Returns (id_col, n_shared_grams) — one row per CONTAMINATED doc;
-    anti-join the result against the corpus to keep the clean remainder.
-    """
-    train = _word_ngram_hashes(df, id_col, text_col, n)
-    bench = _word_ngram_hashes(
-        benchmark.select(F.col(bench_text_col)), bench_text_col, bench_text_col, n
-    ).select("gram_hash").distinct()
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
-    hits = train.join(bench, "gram_hash", "left_semi")
-    return hits.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shared_grams"))
-
-
 def span_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",

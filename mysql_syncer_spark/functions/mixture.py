@@ -1,153 +1,23 @@
-"""Training-data mixing, splitting, and sequence packing for a web corpus.
+"""Training-data quality bucketing and sequence packing for a web corpus.
 
 Not in the reference (no scalar operators at all — SURVEY §2.4); these are
-the last-mile ops an LLM data pipeline runs after filtering/dedup: decide
-how many epochs of each domain enter the mix, carve a held-out set, and
-pack documents into fixed token-budget training shards.
+last-mile ops an LLM data pipeline runs after filtering/dedup: label each
+document by its quality rank within its domain, and pack documents into
+fixed token-budget training shards.
 
-Scale design:
-- mixing / splitting are MAP-ONLY — a per-row hash compare, zero shuffle
-  at any corpus size, and deterministic (same seed → same sample on every
-  run and every engine).
-- packing is bucketed: documents hash into 256 independent pack groups and
-  a window runs WITHIN each group, so no global sort exists anywhere and
-  per-task state is one running sum.
-
-Determinism/portability contract: all randomness derives from md5 hex
-(lowercase, engine-portable). A uniform draw is the FIRST 13 HEX CHARS of
-md5(seed|key) compared lexicographically against a precomputed 13-char
-threshold — fixed-width lowercase hex compares exactly like the 52-bit
-integer it spells, so no float parsing, no rounding, bit-identical in
-Spark and any SQL oracle.
+Scale design: packing is bucketed — documents hash into 256 independent
+pack groups and a window runs WITHIN each group, so no global sort exists
+anywhere and per-task state is one running sum. All randomness derives
+from md5 hex (lowercase, engine-portable), so the packing is
+bit-identical in Spark and any SQL oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mysql_syncer_spark.functions.text import token_count
-
-_HEX13 = 16**13
-
-
-def uniform_hex(seed: str, key: Column) -> Column:
-    """13-char lowercase hex of md5(seed|key): a uniform 52-bit draw in
-    string space."""
-    return F.substring(
-        F.md5(F.concat(F.lit(seed + "|"), key.cast("string"))), 1, 13
-    )
-
-
-def threshold_hex(frac: float) -> str:
-    """The 13-char hex threshold t with P(draw < t) == frac."""
-    if not 0.0 <= frac <= 1.0:
-        raise ValueError(f"fraction out of range: {frac}")
-    return format(min(int(frac * _HEX13), _HEX13 - 1) if frac < 1.0 else _HEX13 - 1, "013x")
-
-
-def hash_split(
-    df: DataFrame,
-    holdout: float,
-    id_col: str = "doc_id",
-    seed: str = "split1",
-) -> DataFrame:
-    """Deterministic train/holdout split (e.g. a validation carve-out).
-    Adds ``split`` ('train' | 'holdout'); membership depends only on
-    (seed, id), so late-arriving data lands consistently and re-runs can
-    never leak holdout docs into train. Map-only."""
-    u = uniform_hex(seed, F.col(id_col))
-    return df.withColumn(
-        "split",
-        F.when(u < F.lit(threshold_hex(holdout)), F.lit("holdout")).otherwise(
-            F.lit("train")
-        ),
-    )
-
-
-def mixture_sample(
-    df: DataFrame,
-    rates: dict[str, float],
-    domain_col: str = "source",
-    id_col: str = "doc_id",
-    seed: str = "mix1",
-    default_rate: float = 0.0,
-) -> DataFrame:
-    """Domain-weighted epoch sampling — the data-mixing step of corpus
-    assembly. ``rates[domain] = 2.3`` means every doc of that domain
-    appears twice and a deterministic 30 % of them a third time
-    (fractional epochs via the hash draw); ``0.15`` downsamples to 15 %.
-    Unlisted domains get ``default_rate``.
-
-    Adds ``n_copies`` (>= 1; zero-copy rows are dropped). Emitting a
-    count instead of exploding keeps the op map-only — repeat at shard
-    write time. Same seed → the same sample on every run."""
-    w_expr, t_expr = None, None
-    for dom, rate in rates.items():
-        if rate < 0:
-            raise ValueError(f"negative rate for {dom!r}")
-        whole, frac = int(rate), rate - int(rate)
-        cond = F.col(domain_col) == dom
-        w_expr = (F.when if w_expr is None else w_expr.when)(cond, whole)
-        t_expr = (F.when if t_expr is None else t_expr.when)(
-            cond, threshold_hex(frac)
-        )
-    d_whole, d_frac = int(default_rate), default_rate - int(default_rate)
-    w_expr = F.lit(d_whole) if w_expr is None else w_expr.otherwise(d_whole)
-    t_expr = (
-        F.lit(threshold_hex(d_frac))
-        if t_expr is None
-        else t_expr.otherwise(threshold_hex(d_frac))
-    )
-    u = uniform_hex(seed, F.col(id_col))
-    out = df.withColumn(
-        "n_copies",
-        (w_expr + F.when(u < t_expr, 1).otherwise(0)).cast("bigint"),
-    )
-    return out.filter(F.col("n_copies") >= 1)
-
-
-def cap_per_domain(
-    df: DataFrame,
-    cap: int,
-    domain_col: str = "source",
-    id_col: str = "doc_id",
-    seed: str = "cap1",
-    exact: bool = False,
-) -> DataFrame:
-    """Per-domain volume cap — the anti-spam step that stops one crawl
-    host from dominating the mix. Two shapes:
-
-    - ``exact=False`` (default, the 100 TB shape): pass 1 counts docs per
-      domain (partial-agg'd; result is one tiny row per domain, broadcast
-      back); domains within cap keep everything, oversized domains keep
-      docs whose hash draw < cap/count — an EXPECTED-cap downsample,
-      map-only after the count, deterministic, and no domain is ever
-      sorted in one task. The threshold is derived IN-PLAN
-      (hex arithmetic on the draw), so there is no driver loop at all.
-    - ``exact=True``: per-domain hash-rank window keeps exactly min(cap,
-      count) docs — the test-scale oracle; one sort per domain.
-
-    Both orders docs by the same hash draw, so the exact form's keep-set
-    is a superset refinement of what the expected form targets."""
-    u = uniform_hex(seed, F.col(id_col))
-    if exact:
-        w = Window.partitionBy(domain_col).orderBy(u, F.col(id_col))
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= cap)
-            .drop("_rn")
-        )
-    counts = df.groupBy(domain_col).agg(F.count(F.lit(1)).alias("_dom_n"))
-    frac = F.least(F.lit(1.0), F.lit(float(cap)) / F.col("_dom_n"))
-    thr = F.lower(
-        F.lpad(F.hex((frac * F.lit(float(_HEX13))).cast("bigint")), 13, "0")
-    )
-    return (
-        df.join(F.broadcast(counts), domain_col)
-        .filter((F.col("_dom_n") <= cap) | (u < thr))
-        .drop("_dom_n")
-    )
 
 
 def quality_buckets(
@@ -166,10 +36,7 @@ def quality_buckets(
 
     Adds ``q_rank`` (percent_rank, rounded 6) and ``bucket``. This exact
     form sorts each domain in one window partition — fine up to the
-    largest domain a task can sort. The 100 TB shape is the 2-pass twin:
-    aggregate per-domain cutoff scores with approx_percentile (one tiny
-    result), broadcast them back, label map-only; this rank-exact form
-    is its oracle at test scale."""
+    largest domain a task can sort."""
     order = F.col(score_col) if ascending_is_better else F.col(score_col).desc()
     w = Window.partitionBy(by).orderBy(order)
     pr = F.round(F.percent_rank().over(w), 6)
@@ -179,37 +46,6 @@ def quality_buckets(
         F.when(F.col("q_rank") < lo, F.lit("head"))
         .when(F.col("q_rank") < hi, F.lit("middle"))
         .otherwise(F.lit("tail")),
-    )
-
-
-def quality_buckets_2pass(
-    df: DataFrame,
-    score_col: str,
-    by: str = "source",
-    cuts: tuple[float, float] = (1.0 / 3.0, 2.0 / 3.0),
-    accuracy: int = 10000,
-) -> DataFrame:
-    """The 100 TB twin of :func:`quality_buckets`: pass 1 aggregates
-    per-domain cutoff scores with approx_percentile (partial-combined —
-    one tiny row per domain reaches the driver side of the plan), pass 2
-    broadcast-joins them back and labels MAP-ONLY. No domain is ever
-    sorted in one task, so the largest domain can be the whole corpus.
-    Buckets agree with the rank-exact form except within the sketch's
-    rank-error band around each cutoff (tested). Adds ``bucket``."""
-    lo, hi = cuts
-    cutoffs = df.groupBy(by).agg(
-        F.percentile_approx(score_col, lo, accuracy).alias("_cut_lo"),
-        F.percentile_approx(score_col, hi, accuracy).alias("_cut_hi"),
-    )
-    return (
-        df.join(F.broadcast(cutoffs), by)
-        .withColumn(
-            "bucket",
-            F.when(F.col(score_col) < F.col("_cut_lo"), F.lit("head"))
-            .when(F.col(score_col) < F.col("_cut_hi"), F.lit("middle"))
-            .otherwise(F.lit("tail")),
-        )
-        .drop("_cut_lo", "_cut_hi")
     )
 
 

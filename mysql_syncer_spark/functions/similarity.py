@@ -372,124 +372,3 @@ def ann_topk_lsh(
     bucketed = with_lsh_bucket(df, dim, n_planes, seed, vec_col)
     cand = bucketed.filter(F.col("bucket").isin(probes))
     return cosine_topk(cand, query, k, id_col, vec_col)
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (IVF-PQ's compression half): 100 TB of float32
-# embeddings do not fit hot storage; PQ codes them at m bytes/vector and
-# scores candidates with an ADC lookup table — entirely JVM-side.
-# ---------------------------------------------------------------------------
-
-
-def train_pq_codebooks(
-    df: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    sample_rows: int = 2048,
-    iters: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Per-subspace codebooks (m, k, dim/m): split each vector into m
-    equal subvectors, k-means each on the SAME deterministic lowest-id
-    sample the IVF trainer uses. Returns float64 centroids."""
-    sample = df.orderBy(id_col).limit(sample_rows).select(vec_col).collect()
-    x = np.array([r[0] for r in sample], dtype=np.float64)
-    dim = x.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    return np.stack(
-        [kmeans_np(x[:, j * dsub : (j + 1) * dsub], k, iters, seed + j)
-         for j in range(m)]
-    )
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "pq_code",
-) -> DataFrame:
-    """Quantize vectors to m small ints (nearest centroid per subspace) —
-    one numpy distance matrix per subspace per Arrow batch. The coded
-    column is what a 100 TB deployment persists; raw vectors stay in cold
-    storage for the optional exact re-rank."""
-    books = codebooks.astype(np.float64)
-    m, _k, dsub = books.shape
-
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def encode_udf(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        codes = np.empty((len(mat), m), dtype=np.int32)
-        for j in range(m):
-            sub = mat[:, j * dsub : (j + 1) * dsub]
-            cent = books[j]
-            d2 = (
-                (sub**2).sum(1)[:, None]
-                - 2 * sub @ cent.T
-                + (cent**2).sum(1)[None, :]
-            )
-            codes[:, j] = d2.argmin(1)
-        return pd.Series(list(codes))
-
-    return df.withColumn(out_col, encode_udf(F.col(vec_col)))
-
-
-def pq_topk(
-    df_coded: DataFrame,
-    query: list[float],
-    codebooks: np.ndarray,
-    k: int = 10,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: the query builds an
-    (m × k) lookup table of squared subdistances ONCE on the driver; each
-    row's approximate distance is m array lookups + adds, embedded as a
-    nested array LITERAL in the plan — whole-stage codegen, no Python, no
-    raw vectors read. orderBy+limit is a TakeOrdered (no global sort)."""
-    books = codebooks.astype(np.float64)
-    m, _kc, dsub = books.shape
-    q = np.asarray(query, dtype=np.float64)
-    luts = [
-        ((books[j] - q[j * dsub : (j + 1) * dsub]) ** 2).sum(1) for j in range(m)
-    ]
-    lut_lit = F.array(
-        *[F.array(*[F.lit(float(d)) for d in row]) for row in luts]
-    )
-    code = F.col(code_col)
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0).cast("double"),
-        lambda acc, i: acc
-        + F.element_at(F.element_at(lut_lit, i + 1), F.element_at(code, i + 1) + 1),
-    )
-    return (
-        df_coded.select(F.col(id_col), F.round(dist, 4).alias("pq_dist"))
-        .orderBy(F.asc("pq_dist"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def pq_topk_rerank(
-    df: DataFrame,
-    query: list[float],
-    codebooks: np.ndarray,
-    k: int = 10,
-    overfetch: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """The production PQ shape: ADC over the CODES selects overfetch·k
-    candidates (cheap, compressed, JVM-only), then ONLY those k·overfetch
-    rows read their raw vectors for an exact cosine re-rank. Quantization
-    error costs candidate-set recall, not final ranking precision — within-
-    cluster noise below the quantization cell size is unrankable by ADC
-    alone, which is why plain pq_topk is a candidate generator, not a
-    ranker."""
-    cand = pq_topk(df, query, codebooks, k * overfetch, id_col, code_col)
-    picked = df.join(F.broadcast(cand.select(id_col)), id_col, "left_semi")
-    return cosine_topk(picked, query, k, id_col, vec_col)

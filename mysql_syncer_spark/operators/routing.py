@@ -4,8 +4,8 @@ The reference dispatches through a 27-entry function table
 (/root/reference/src/master/rs_parse_binlog.c:5-57) and a per-table hash
 registry (/root/reference/src/slave/rs_register_tables.c:11-36). Columnar
 equivalent: ``op`` / ``table`` are plain columns — routing is a filter or a
-``when`` branch, and "dispatch to handler" is a driver-side dict lookup over
-the (tiny) distinct table set of the batch.
+``when`` branch, and "dispatch to handler" is a driver-side dict lookup
+(``plans.replay.replay_multi``, one target table per registered config).
 """
 
 from __future__ import annotations
@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import TableConfig
 from ..model import ROW_OPS
+from .filters import op_filter, oversized_ddl_filter, table_filter
 
 
 def split_row_and_ddl(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -24,26 +24,20 @@ def split_row_and_ddl(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return df.filter(F.col("op").isin(list(ROW_OPS))), df.filter(F.col("op") == "DDL")
 
 
-def op_counts(df: DataFrame) -> DataFrame:
-    """Observability: events per op code (partial-aggregated map-side)."""
-    return df.groupBy("op").agg(F.count("*").alias("n_events"))
+def filter_and_split(df: DataFrame, table: str) -> tuple[DataFrame, DataFrame]:
+    """A sink's filter chain for one batch of ``table``: F1 table filter →
+    F3 oversized-DDL skip → split → F2 on the row side. Returns
+    (row_events, ddl_events)."""
+    rows, ddl = split_row_and_ddl(oversized_ddl_filter(table_filter(df, [table])))
+    return op_filter(rows), ddl
 
 
-def tables_in_batch(df: DataFrame) -> list[str]:
-    """Distinct table names of a batch — the driver-side routing key set.
-    Bounded by the registry size, so collect() is safe at any data scale."""
-    return [r[0] for r in df.select("table").distinct().collect()]
-
-
-def route_tables(
-    df: DataFrame, registry: dict[str, TableConfig]
-) -> dict[str, tuple[TableConfig, DataFrame]]:
-    """R1 — db.tb → (config, per-table slice). Unregistered tables are
-    skipped, mirroring the reference's hash-miss behavior
-    (/root/reference/src/slave/rs_redis_thread.c:108-111)."""
-    out: dict[str, tuple[TableConfig, DataFrame]] = {}
-    for name in tables_in_batch(df):
-        cfg = registry.get(name)
-        if cfg is not None:
-            out[name] = (cfg, df.filter(F.col("table") == name))
-    return out
+def ordered_ddls(ddl_events: DataFrame) -> list[dict]:
+    """A batch's DDL rows as dicts, in log order (file_seq, log_pos) — the
+    order its schema changes must apply in."""
+    return [
+        r.asDict()
+        for r in ddl_events.select("ddl.*", "file_seq", "log_pos")
+        .orderBy("file_seq", "log_pos")
+        .collect()
+    ]

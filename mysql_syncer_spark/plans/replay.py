@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..config import TableConfig
 from ..functions.text import with_extracted_text, with_filled_text
+from ..operators.routing import filter_and_split, ordered_ddls
 from ..sink.pages_table import PagesTable
 from ..sources.event_log import read_event_log
 
@@ -274,7 +275,7 @@ def replay(
     so each batch still projects with the schema at its log position.
 
     ``event_filter`` (DataFrame -> DataFrame, serial path only) narrows
-    each batch before apply — the targeted-repair hook; it must keep
+    each batch before apply — the snapshot-bootstrap hook; it must keep
     non-row events (DDL etc.) or schema history is lost."""
     cfg = cfg or default_pages_config()
     if event_filter is not None and pipeline_depth > 1:
@@ -284,7 +285,7 @@ def replay(
     # ONE pushed-predicate scan collects every batch's DDL up front (both
     # paths) — DDL events are never transaction-deferred (tx_id is NULL),
     # so the per-file grouping matches the batch boundaries exactly. With
-    # an event_filter active (repair / bootstrap trims events) the serial
+    # an event_filter active (bootstrap trims events) the serial
     # loop falls back to per-batch collection so filtered-out DDL is
     # never applied.
     ddl_index: dict[str, list[dict]] = {}
@@ -308,21 +309,11 @@ def replay(
             # apply_batch's own filtering, and in a multi-table log an
             # unfiltered index would apply every OTHER table's DDL to
             # this target (schema corruption).
-            from ..operators.filters import oversized_ddl_filter, table_filter
-
-            ddl_rows = (
-                oversized_ddl_filter(
-                    table_filter(read_event_log(spark, event_dir), [cfg.name])
-                )
-                .filter(F.col("op") == "DDL")
-                .select("ddl.*", "file_seq", "log_pos")
-                .orderBy("file_seq", "log_pos")
-                .collect()
+            _, ddl_events = filter_and_split(
+                read_event_log(spark, event_dir), cfg.name
             )
-            for r in ddl_rows:
-                ddl_index.setdefault(
-                    f"fileseq-{r['file_seq']}", []
-                ).append(r.asDict())
+            for d in ordered_ddls(ddl_events):
+                ddl_index.setdefault(f"fileseq-{d['file_seq']}", []).append(d)
             have_index = True
 
     gated = (
@@ -348,83 +339,6 @@ def replay(
     if pipeline_depth > 1 and prof:
         out["pipeline_profile"] = prof
     return out
-
-
-def repair_bucket(
-    spark: SparkSession,
-    event_dir: str,
-    table_path: str,
-    bucket_id: int,
-    cfg: TableConfig | None = None,
-) -> dict:
-    """Targeted disaster recovery: rebuild ONE bucket's data from the raw
-    binlog parquet without replaying the whole table (a lost/corrupted
-    data directory in a 10^5-bucket table should cost one bucket's merge,
-    not a full-table replay).
-
-    Mechanism: run the normal replay pipeline into a scratch table with
-    an event filter that keeps every NON-ROW event (DDL — so the rebuilt
-    bucket sees the same schema history) plus only the row events whose
-    key hashes to the target bucket; compact; verify the rebuilt manifest
-    reached the same schema/column-mapping as the live table; then splice
-    the rebuilt bucket's single vintage into the live manifest as a new
-    atomic commit. Cost: one full log SCAN (column-pruned, predicate on a
-    hash of the key) but merge/write work proportional to the one bucket.
-    Other buckets' dirs are untouched — time travel to pre-repair
-    versions still reads the old (possibly corrupt) files."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
-    table = PagesTable(spark, table_path)
-    m = table.manifest()
-    key_cols = list(m.key_columns)
-    nb = m.num_buckets
-
-    def only_bucket(df: DataFrame) -> DataFrame:
-        key = F.col(f"after.{key_cols[0]}")
-        b = F.pmod(F.xxhash64(*[f"after.{k}" for k in key_cols]), F.lit(nb))
-        return df.filter(key.isNull() | (b == bucket_id))
-
-    work = tempfile.mkdtemp(prefix="msss_repair_")
-    try:
-        scratch = os.path.join(work, "rebuild")
-        replay(
-            spark, event_dir, scratch, cfg=cfg, num_buckets=nb,
-            event_filter=only_bucket,
-        )
-        tmp = PagesTable(spark, scratch)
-        tmp.compact([bucket_id])
-        tm = tmp.manifest()
-        if (
-            tm.schema != m.schema
-            or tm.column_mapping != m.column_mapping
-            or (tm.physical or {}) != (m.physical or {})
-        ):
-            raise RuntimeError(
-                "rebuilt schema diverges from live manifest — the event log "
-                f"does not match this table ({tm.schema} vs {m.schema})"
-            )
-        src_dirs = tm.buckets.get(str(bucket_id), [])
-        new_dirs = []
-        for d in src_dirs:
-            rel = f"repair-{_uuid.uuid4().hex[:8]}-b{bucket_id}"
-            shutil.copytree(
-                os.path.join(scratch, d), os.path.join(table_path, rel)
-            )
-            new_dirs.append(rel)
-        rows = tm.lineage.get(str(bucket_id), {}).get("rows", 0)
-        m2 = table.manifest()  # re-read: commit against the freshest version
-        m2.version += 1
-        m2.buckets[str(bucket_id)] = new_dirs
-        m2.lineage[str(bucket_id)] = {
-            "batch_id": f"repair-v{m2.version}",
-            "rows": rows,
-        }
-        table._commit(m2)
-        return {"bucket": bucket_id, "rows": rows, "version": m2.version}
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def snapshot_events(

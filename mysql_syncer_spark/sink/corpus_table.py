@@ -58,7 +58,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -350,124 +349,3 @@ class CorpusTable:
             "accepted": n_acc,
             "rejected": n_total - n_acc,
         }
-
-    # -- maintenance ------------------------------------------------------
-    def forget(self, batch_id: str, ids: DataFrame | list) -> dict:
-        """Remove documents by id from the corpus AND its dedup band
-        index — the right-to-be-forgotten / re-crawl-invalidation
-        maintenance op a long-lived training corpus needs (the CDC
-        bridge, plans/corpus_sync.py, calls it for DELETEd and UPDATEd
-        urls before re-gating the new content). Ledgered and atomic like
-        ``apply_batch``: re-delivery of a committed ``batch_id`` is a
-        no-op; rewritten files land before the manifest references them,
-        so a crash leaves only orphans.
-
-        Scale: FILE-PRUNED — the forget-id set (small by nature: a
-        delete/re-crawl delta) is checked against each doc file's
-        parquet footer min/max id statistics, and only files that could
-        contain a forgotten id are rewritten; untouched files keep their
-        manifest entries byte-identical. Cost is O(doc_files footer
-        reads + touched-file rewrites), never O(corpus). The band index
-        (4 tiny rows per doc) anti-joins and consolidates wholesale —
-        it is the compacted small side by construction."""
-        while True:
-            m = self.manifest()
-            if batch_id in m.committed_batches:
-                return {"batch_id": batch_id, "skipped": True}
-            if isinstance(ids, list):
-                id_set = {int(i) for i in ids}
-            else:
-                id_set = {
-                    int(r[0]) for r in ids.select(m.id_col).distinct().collect()
-                }
-            if not id_set:
-                touched = []
-            else:
-                touched = [
-                    rel
-                    for rel in m.doc_files
-                    if self._file_may_contain(rel, m.id_col, id_set)
-                ]
-            ids_df = self.spark.createDataFrame(
-                [(i,) for i in sorted(id_set)], f"{m.id_col} long"
-            )
-            suffix = uuid.uuid4().hex[:8]
-            new_files = dict.fromkeys(m.doc_files)
-            n_forgot = 0
-            for k, rel in enumerate(touched):
-                src = self.spark.read.parquet(os.path.join(self.path, rel))
-                nrel = os.path.join("docs", f"forget-{suffix}-{k}.parquet")
-                src.join(F.broadcast(ids_df), m.id_col, "left_anti").write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(self.path, nrel))
-                kept = self.spark.read.parquet(
-                    os.path.join(self.path, nrel)
-                ).count()
-                n_forgot += src.count() - kept
-                new_files[rel] = nrel
-            if touched:
-                brel = os.path.join("bands", f"forget-{suffix}.parquet")
-                self.band_index(m).join(
-                    F.broadcast(ids_df), m.id_col, "left_anti"
-                ).write.mode("overwrite").parquet(os.path.join(self.path, brel))
-            m.version += 1
-            m.doc_files = [new_files[rel] or rel for rel in m.doc_files]
-            if touched:
-                m.band_files = [brel]
-            m.committed_batches.append(batch_id)
-            m.n_docs -= n_forgot
-            try:
-                self._commit(m)
-                return {
-                    "batch_id": batch_id,
-                    "skipped": False,
-                    "forgotten": n_forgot,
-                    "files_rewritten": len(touched),
-                    "files_pruned": len(m.doc_files) - len(touched),
-                }
-            except CommitConflictError:
-                # a racer appended files our rewrite map does not cover —
-                # re-read the fresh manifest and redo (a plain re-append
-                # rebase would drop the racer's docs)
-                continue
-
-    def _file_may_contain(
-        self, rel: str, id_col: str, id_set: set[int]
-    ) -> bool:
-        """Footer-statistics prune: False only when the file's row-group
-        min/max ranges exclude EVERY forgotten id (absent stats → must
-        rewrite). Driver-side metadata reads, no data scan."""
-        import pyarrow.parquet as pq
-
-        path = os.path.join(self.path, rel)
-        parts = (
-            [
-                os.path.join(path, fn)
-                for fn in os.listdir(path)
-                if fn.endswith(".parquet")
-            ]
-            if os.path.isdir(path)
-            else [path]
-        )
-        lo, hi = min(id_set), max(id_set)
-        for part in parts:
-            md = pq.ParquetFile(part).metadata
-            idx = next(
-                (
-                    i
-                    for i in range(md.num_columns)
-                    if md.schema.column(i).name == id_col
-                ),
-                None,
-            )
-            if idx is None:
-                return True
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return True
-                if st.max < lo or st.min > hi:
-                    continue
-                if any(st.min <= i <= st.max for i in id_set):
-                    return True
-        return False

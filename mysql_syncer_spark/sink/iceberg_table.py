@@ -19,13 +19,11 @@ unit-tested in-sandbox; execution requires the jars:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import TableConfig
 from ..operators.dedup import lww_dedup
-from ..operators.filters import op_filter, table_filter
 from ..operators.merge import batch_to_state
-from ..operators.routing import split_row_and_ddl
+from ..operators.routing import filter_and_split, ordered_ddls
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -88,11 +86,10 @@ def apply_batch_iceberg(
             "in-sandbox (semantically equivalent), or launch with the "
             "iceberg-spark-runtime package (see module docstring)."
         )
-    events = table_filter(events, [cfg.name])
-    row_events, ddl_events = split_row_and_ddl(events)
-    for r in ddl_events.select("ddl.*").collect():
-        spark.sql(build_ddl_sql(table_ident, r.asDict()))
-    state = batch_to_state(op_filter(row_events), column_mapping, cfg.on_delete)
+    row_events, ddl_events = filter_and_split(events, cfg.name)
+    for d in ordered_ddls(ddl_events):
+        spark.sql(build_ddl_sql(table_ident, d))
+    state = batch_to_state(row_events, column_mapping, cfg.on_delete)
     deduped = lww_dedup(
         state, list(cfg.key_columns), ["_lww_ts_us", "_lww_file", "_lww_pos"]
     )

@@ -9,7 +9,7 @@ and a ``_versions/CURRENT`` head pointer. A commit of version N:
    version N. The loser gets ``CommitConflictError``, reloads the head,
    rebases and retries (Iceberg's optimistic concurrency protocol);
 2. advances ``CURRENT`` to N under an ``flock``, never backwards
-   (:func:`advance`, also used by ``plans/ivm.sync_view``'s view pointer).
+   (:func:`advance`).
    Without the lock a writer that read ``CURRENT`` before a higher
    committer's rename could overwrite it afterwards, and ``CURRENT``
    would point at an older snapshot (no data loss, but "current" goes
@@ -25,7 +25,6 @@ import fcntl
 import json
 import os
 import uuid
-from typing import Callable
 
 
 class CommitConflictError(RuntimeError):
@@ -85,31 +84,24 @@ def commit(path: str, version: int, text: str) -> None:
         raise CommitConflictError(version)
     finally:
         os.unlink(tmp)
-    advance(os.path.join(vdir, "CURRENT"), version, str(version))
+    advance(os.path.join(vdir, "CURRENT"), version)
 
 
-def advance(
-    pointer: str,
-    version: int,
-    text: str,
-    version_of: Callable[[str], int] = lambda t: int(t.strip()),
-) -> bool:
-    """Atomically replace the head-pointer file ``pointer`` with ``text``,
-    which records ``version``, unless it already records a version >=
-    ``version`` (read with ``version_of``). Serialized by an ``flock`` on
-    ``<pointer>.lock``, so a writer that read the pointer before a higher
-    writer's rename can never overwrite it afterwards. Returns whether
-    the pointer moved."""
+def advance(pointer: str, version: int) -> None:
+    """Atomically replace the head-pointer file ``pointer`` with
+    ``version``, unless it already records a version >= ``version``.
+    Serialized by an ``flock`` on ``<pointer>.lock``, so a writer that read
+    the pointer before a higher writer's rename can never overwrite it
+    afterwards."""
     with open(pointer + ".lock", "a") as lk:
         fcntl.flock(lk, fcntl.LOCK_EX)
         try:  # never move the pointer backwards past a racing higher one
             with open(pointer) as f:
-                if version_of(f.read()) >= version:
-                    return False
+                if int(f.read().strip()) >= version:
+                    return
         except (FileNotFoundError, ValueError):
             pass
         tmp = pointer + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            f.write(text)
+            f.write(str(version))
         os.rename(tmp, pointer)
-        return True

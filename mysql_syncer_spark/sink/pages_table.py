@@ -55,7 +55,7 @@ from ..config import TableConfig
 from ..model import DDL_DTYPES
 from ..operators.filters import op_filter, oversized_ddl_filter, table_filter
 from ..operators.merge import batch_to_state, live_view
-from ..operators.routing import split_row_and_ddl
+from ..operators.routing import filter_and_split, ordered_ddls
 from . import manifest_store
 from .manifest_store import CommitConflictError
 
@@ -360,22 +360,14 @@ class PagesTable:
             return None
         return max(0, cts - wm_us // 1000)
 
-    def changes_between(
-        self, v_from: int, v_to: int | None = None, with_before: bool = False
-    ) -> DataFrame:
+    def changes_between(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Incremental changelog (CDC OUT — Iceberg incremental read): the
         net change per key between two committed snapshots, classified as
         I (new/resurrected live row), U (live row whose LWW rank advanced),
         D (live row tombstoned). Unchanged keys are excluded, so a reader
         consuming the changelog applies exactly the delta. Implemented as
         one full-outer join of the two snapshot states on the key —
-        tombstones persist across snapshots, so no key silently vanishes.
-
-        ``with_before=True`` adds ``before_<col>`` columns carrying the
-        v_from live payload (NULL for I rows) — the Debezium-style before
-        image that retraction consumers (incremental view maintenance,
-        downstream deletes) need: a D/U row's new-side payload cannot tell
-        you which group/amount to retract."""
+        tombstones persist across snapshots, so no key silently vanishes."""
         m = self.manifest()
         key = m.key_columns[0]
         rank_cols = ["_lww_ts_us", "_lww_file", "_lww_pos"]
@@ -391,33 +383,16 @@ class PagesTable:
             F.col("_deleted").alias("_d1"),
             *[c for c in s1.columns if not c.startswith("_")],
         )
-        before_cols = []
         if s0 is None:
             j = new.withColumn("_k0", F.lit(None).cast("string")).withColumn(
                 "_r0", F.lit(None).cast(new.schema["_r1"].dataType)
             ).withColumn("_d0", F.lit(None).cast("boolean"))
-            if with_before:
-                for c in payload:
-                    j = j.withColumn(
-                        f"before_{c}", F.lit(None).cast(s1.schema[c].dataType)
-                    )
-                    before_cols.append(f"before_{c}")
         else:
-            old_sel = [
+            old = s0.select(
                 F.col(key).alias("_k0"),
                 F.struct(*rank_cols).alias("_r0"),
                 F.col("_deleted").alias("_d0"),
-            ]
-            if with_before:
-                for c in payload:
-                    if c in s0.columns:
-                        old_sel.append(F.col(c).alias(f"before_{c}"))
-                    else:  # column added by post-v_from DDL
-                        old_sel.append(
-                            F.lit(None).cast(s1.schema[c].dataType).alias(f"before_{c}")
-                        )
-                    before_cols.append(f"before_{c}")
-            old = s0.select(*old_sel)
+            )
             j = new.join(old, new._k1 == old._k0, "full_outer")
         live0 = F.col("_k0").isNotNull() & ~F.coalesce(F.col("_d0"), F.lit(True))
         live1 = F.col("_k1").isNotNull() & ~F.coalesce(F.col("_d1"), F.lit(True))
@@ -433,7 +408,6 @@ class PagesTable:
                 F.coalesce(F.col("_k1"), F.col("_k0")).alias(key),
                 "change_op",
                 *payload,
-                *before_cols,
             )
         )
 
@@ -558,20 +532,12 @@ class PagesTable:
             return {"batch_id": bid, "skipped": True, "reason": "already committed"}
         self._check_ledger_gap(m, bid)
 
-        events = table_filter(events, [cfg.name])
-        events = oversized_ddl_filter(events)
-        row_events, ddl_events = split_row_and_ddl(events)
-        row_events = op_filter(row_events)
+        row_events, ddl_events = filter_and_split(events, cfg.name)
 
         # --- DDL → schema/mapping mutation (applied before the merge,
         # committed atomically with it) --------------------------------
         if ddls is None:
-            ddls = [
-                r.asDict()
-                for r in ddl_events.select("ddl.*", "file_seq", "log_pos")
-                .orderBy("file_seq", "log_pos")
-                .collect()
-            ]
+            ddls = ordered_ddls(ddl_events)
         n_ddl = len(ddls)
         for d in ddls:
             self._apply_ddl(m, d)
@@ -704,9 +670,10 @@ class PagesTable:
     ) -> list[dict]:
         """Apply an ORDERED stream of ``(batch_id, events)`` batches one at
         a time — the serial twin of ``apply_batches_pipelined``. Only the
-        first batch that is not skipped runs the keys-only probe (skew in
-        a CDC stream is persistent: hot domains stay hot, so one probe
-        decides whether the stream is pre-filter territory).
+        first batch that is not skipped runs the keys-only probe, and only
+        that batch can take the winner pre-filter: the probe's decision is
+        not carried, so every later batch merges without the pre-filter,
+        whatever its skew.
         ``ddl_index`` (batch_id → DDL dicts, pre-collected for the whole
         log) skips each batch's DDL collect job; None collects per batch."""
         cfg = cfg or TableConfig(name="web.pages")
@@ -734,7 +701,8 @@ class PagesTable:
         deltas independent: only the manifest commit must stay ordered,
         like the reference's pipelined group commit —
         /root/reference/src/slave/rs_redis_thread.h:10, depth 36). Only the
-        first submitted batch runs the keys-only probe, as in
+        first submitted batch runs the keys-only probe and can take the
+        winner pre-filter; later batches merge without it, as in
         ``apply_batches``.
 
         DDL ordering: callers pass ``ddl_index`` (batch_id → DDL dicts,

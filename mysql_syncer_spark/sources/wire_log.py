@@ -442,153 +442,6 @@ def wire_dead_letters(
     return df.mapInPandas(mapper, schema=out_schema)
 
 
-def wire_def_for(
-    schema: T.StructType, cols: list[str]
-) -> tuple[MySQLTableDef, set[str]]:
-    """Derive a wire registry from a Spark schema — the master emits its
-    own current (possibly DDL-evolved) table shape. Timestamps ride as
-    BIGINT epoch-microseconds; returns which columns need that
-    conversion."""
-    ts_cols: set[str] = set()
-    specs = []
-    for c in cols:
-        dt = schema[c].dataType
-        if isinstance(dt, T.TimestampType):
-            specs.append(MySQLColumn(c, "longlong"))
-            ts_cols.add(c)
-        elif isinstance(dt, T.BinaryType):
-            specs.append(MySQLColumn(c, "blob(3)"))
-        elif isinstance(dt, T.LongType):
-            specs.append(MySQLColumn(c, "longlong"))
-        elif isinstance(dt, (T.IntegerType, T.ShortType)):
-            specs.append(MySQLColumn(c, "long"))
-        elif isinstance(dt, T.DoubleType):
-            specs.append(MySQLColumn(c, "double"))
-        else:
-            specs.append(MySQLColumn(c, "varchar(65000)"))
-    return MySQLTableDef(columns=tuple(specs)), ts_cols
-
-
-def restore_timestamps(df: DataFrame, ts_cols: set[str]) -> DataFrame:
-    """Consumer-side twin of ``wire_def_for``'s timestamp convention:
-    rebuild the before/after structs casting each epoch-microsecond BIGINT
-    back to TIMESTAMP (pure ``timestamp_micros`` projection). A chained
-    slave applies this before feeding the decoded changelog to
-    ``apply_batch``."""
-    from pyspark.sql import functions as F
-
-    for side in ("before", "after"):
-        fields = df.schema[side].dataType.fields
-        rebuilt = F.struct(
-            *[
-                (
-                    F.timestamp_micros(F.col(f"{side}.{f.name}"))
-                    if f.name in ts_cols
-                    else F.col(f"{side}.{f.name}")
-                ).alias(f.name)
-                for f in fields
-            ]
-        )
-        df = df.withColumn(side, F.when(F.col(side).isNotNull(), rebuilt))
-    return df
-
-
-def encode_wire_changelog(
-    changes: DataFrame,
-    table: str = "web.pages",
-    key_col: str = "url",
-    op_col: str = "change_op",
-) -> DataFrame:
-    """CDC OUT in wire format — the master side of the protocol: encode a
-    `PagesTable.changes_between` changelog as ROWS_EVENT blobs any
-    reference-style slave could consume. I → WRITE with the full after
-    image; U → UPDATE whose before image carries ONLY the key (MySQL
-    ``binlog_row_image=MINIMAL`` — consumers ignore the before image,
-    reference parity); D → DELETE with the FULL tombstone image (MySQL's
-    default ``binlog_row_image=FULL`` — the tombstone's event-time column
-    must travel or the downstream LWW rank cannot order the delete
-    against earlier row versions). Envelope positions are synthesized per encode
-    (a real master assigns them serially at commit; this operator is the
-    payload encoder, order still comes from the snapshot pair)."""
-    from pyspark.sql import functions as F
-
-    src = changes.withColumn("_log_pos", F.monotonically_increasing_id())
-    payload_cols = [
-        c for c in changes.columns if c not in (op_col,) and not c.startswith("_")
-    ]
-    td, ts_cols = wire_def_for(changes.schema, payload_cols)
-    all_cols = tuple(payload_cols)
-
-    def to_wire(row) -> dict:
-        out = {}
-        for c in payload_cols:
-            v = row[c]
-            try:  # pandas nulls arrive as None / NaN / NaT depending on dtype
-                if v is None or pd.isna(v):
-                    out[c] = None
-                    continue
-            except (TypeError, ValueError):
-                pass
-            if c in ts_cols:
-                epoch = _dt.datetime(1970, 1, 1, tzinfo=_UTC)
-                v = v if v.tzinfo else v.replace(tzinfo=_UTC)
-                delta = v - epoch
-                v = (
-                    delta.days * 86_400_000_000
-                    + delta.seconds * 1_000_000
-                    + delta.microseconds
-                )
-            out[c] = v
-        return out
-    out_schema = T.StructType(
-        [
-            T.StructField("log_pos", T.LongType(), True),
-            T.StructField("file_seq", T.IntegerType(), True),
-            T.StructField("server_id", T.IntegerType(), True),
-            T.StructField("op", T.StringType(), True),
-            T.StructField("table", T.StringType(), True),
-            T.StructField("tx_id", T.LongType(), True),
-            T.StructField("rows_event", T.BinaryType(), True),
-            T.StructField("query", T.StringType(), True),
-        ]
-    )
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs, ops = [], []
-            # to_dict("records") materializes plain dicts once per batch —
-            # far cheaper than iterrows' per-row Series construction
-            for r in pdf.to_dict("records"):
-                op = r[op_col]
-                full = to_wire(r)
-                key_only = {key_col: r[key_col]}
-                if op == "U":
-                    blob = td.encode_rows_event(
-                        [(key_only, full)], "update",
-                        used=(key_col,), used_after=all_cols,
-                    )
-                elif op == "D":
-                    blob = td.encode_rows_event([full], "delete")
-                else:  # I
-                    blob = td.encode_rows_event([full], "write")
-                blobs.append(blob)
-                ops.append(op)
-            yield pd.DataFrame(
-                {
-                    "log_pos": pdf["_log_pos"].values,
-                    "file_seq": 0,
-                    "server_id": 0,
-                    "op": ops,
-                    "table": table,
-                    "tx_id": None,
-                    "rows_event": blobs,
-                    "query": None,
-                }
-            )
-
-    return src.mapInPandas(mapper, schema=out_schema)
-
-
 def route_wire_tables(
     df: DataFrame, registry: dict[str, MySQLTableDef]
 ) -> dict[str, DataFrame]:

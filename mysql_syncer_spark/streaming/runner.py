@@ -26,7 +26,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import TableConfig
-from ..sink import manifest_store
 from ..sink.pages_table import PagesTable
 from ..sources.event_log import stream_event_log
 
@@ -247,47 +246,3 @@ def run_streaming_replay(
         "n_commits": table.n_committed(),
         "last_progress": q.lastProgress,
     }
-
-
-def start_corpus_ingest(
-    spark: SparkSession,
-    docs_dir: str,
-    table_path: str,
-    checkpoint_dir: str,
-    k: int = 8,
-    bands: int = 4,
-    max_files_per_trigger: int = 1,
-    doc_schema: str = "doc_id long, text string",
-) -> StreamingQuery:
-    """Streamed corpus ingest (the webtext twin of the CDC replay): tail a
-    directory of document parquet drops, dedup-gate each micro-batch
-    against the corpus's persisted band index, and commit through the
-    ledgered CorpusTable — batchId keys the ledger, so checkpointed
-    restarts re-deliver batches as committed no-ops (exactly-once in
-    final state, same contract as the pages sink).
-
-    ``docs_dir`` may be a glob; note the file source does NOT recurse
-    into subdirectories, so per-batch parquet DIRECTORIES need
-    ``dir/*.parquet`` pointing at the part files."""
-    from ..sink.corpus_table import CorpusTable
-
-    if manifest_store.exists(table_path):
-        table = CorpusTable(spark, table_path)
-    else:
-        table = CorpusTable.create(spark, table_path, k=k, bands=bands)
-
-    def apply(batch_df, batch_id: int) -> None:
-        table.apply_batch(f"stream-{batch_id}", batch_df)
-
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("corpus_ingest")
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -89,61 +89,6 @@ def test_corpus_ingest_band_index_grows_with_accepted_only(spark):
     }
 
 
-def test_streamed_corpus_ingest_kill_resume(spark, tmp_path):
-    """Streamed ingest (foreachBatch + checkpoint): kill after the first
-    micro-batch, resume, final corpus equals the uninterrupted serial
-    apply in file order — ledger absorbs re-delivered batches."""
-    import os
-    import time
-
-    from mysql_syncer_spark.streaming.runner import start_corpus_ingest
-
-    docs, batches = _batches(spark)
-    drop_dir = str(tmp_path / "drops")
-    os.makedirs(drop_dir)
-    # one parquet drop per batch with ascending mtimes → deterministic
-    # file-source order b0, b1, b2
-    for i, b in enumerate(batches):
-        d = f"{drop_dir}/b{i}.parquet"
-        b.coalesce(1).write.parquet(d)
-        t = 1_700_000_000 + i * 60
-        for root, _, files in os.walk(d):
-            for f in files:
-                os.utime(os.path.join(root, f), (t, t))
-        os.utime(d, (t, t))
-
-    # serial reference
-    serial = CorpusTable.create(spark, str(tmp_path / "serial"))
-    for i, b in enumerate(batches):
-        serial.apply_batch(f"stream-{i}", b)
-    want = {r["doc_id"] for r in serial.read().select("doc_id").collect()}
-
-    # the file-stream source does not recurse into the per-batch parquet
-    # DIRECTORIES — point it at the part files via a glob
-    drop_glob = f"{drop_dir}/b*.parquet"
-    table_path = str(tmp_path / "stream")
-    ckpt = str(tmp_path / "ckpt")
-    q = start_corpus_ingest(spark, drop_glob, table_path, ckpt)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        cur = os.path.join(table_path, "_versions", "CURRENT")
-        if os.path.exists(cur) and int(open(cur).read()) >= 1:
-            break
-        time.sleep(0.05)
-    q.stop()
-    q.awaitTermination(30)
-    tbl = CorpusTable(spark, table_path)
-    assert len(tbl.manifest().committed_batches) >= 1
-
-    q = start_corpus_ingest(spark, drop_glob, table_path, ckpt)
-    q.awaitTermination(120)
-    if q.isActive:
-        q.stop()
-    got = {r["doc_id"] for r in tbl.read().select("doc_id").collect()}
-    assert got == want
-    assert tbl.manifest().committed_batches == [f"stream-{i}" for i in range(3)]
-
-
 def _verified_greedy(docs, batches, t):
     """Accepted ids of the greedy fold over the VERIFIED collision relation
     (LSH candidates ∩ exact token-set jaccard >= t)."""

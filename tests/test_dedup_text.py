@@ -1,7 +1,5 @@
 """Semantic checks for the corpus-dedup operators (beyond oracle parity)."""
 
-import pyspark.sql.functions as F
-
 from mysql_syncer_spark.functions.dedup_text import (
     exact_duplicates,
     lsh_candidate_pairs,
@@ -152,91 +150,3 @@ def test_duplicate_clusters_raises_instead_of_splitting(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         duplicate_clusters(pairs, max_iters=2).collect()
-
-
-def test_contaminated_docs_13gram(spark):
-    """Decontamination: a doc sharing one 13-gram with the benchmark is
-    flagged; shorter overlaps are not; the benchmark side is broadcast."""
-    from mysql_syncer_spark.functions.dedup_text import contaminated_docs
-
-    bench_q = (
-        "what is the capital of france and when was it founded by whom"
-    )  # exactly 13 words -> one 13-gram
-    corpus = [
-        # contains the full 13-gram (padded around) -> contaminated
-        (1, "intro text " + bench_q + " trailing words here"),
-        # only a 12-word prefix -> clean
-        (2, "intro " + " ".join(bench_q.split()[:12]) + " unrelated tail"),
-        (3, "completely unrelated document about spark partitioning"),
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    bench = spark.createDataFrame([(bench_q,)], "text string")
-
-    out = contaminated_docs(df, bench, n=13)
-    got = {r["doc_id"]: r["n_shared_grams"] for r in out.collect()}
-    assert got == {1: 1}
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
-    assert "Python" not in plan
-
-
-def test_contaminated_docs_duckdb_parity(spark, sf_dir):
-    """Full-corpus parity for the 13-gram decontamination flagger: the
-    DuckDB twin recomputes (doc_id, n_shared_grams) from word n-grams
-    directly (no hashes) — xxhash64 collisions would have to conspire
-    for the counts to differ."""
-    import duckdb
-    import pyspark.sql.functions as F
-
-    from mysql_syncer_spark.functions.dedup_text import contaminated_docs
-
-    n = 13
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    # benchmark = mid-sections of a few corpus docs → guaranteed overlap
-    bench = docs.filter(F.col("doc_id") % 97 == 0).select(
-        F.expr("substring(text, 20, 220)").alias("text")
-    )
-    got = {
-        r["doc_id"]: r["n_shared_grams"]
-        for r in contaminated_docs(docs, bench, n=n).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW docs AS SELECT doc_id, text FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    want = {
-        row[0]: row[1]
-        for row in con.execute(f"""
-WITH tok AS (
-  SELECT doc_id,
-         list_filter(string_split(
-           trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
-           t -> t <> '') AS toks
-  FROM docs
-),
-grams AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(list_slice(toks, i, i + {n} - 1), ' ') AS gram
-  FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - {n} + 2)) AS i
-        FROM tok WHERE len(toks) >= {n})
-),
-btok AS (
-  SELECT list_filter(string_split(
-           trim(regexp_replace(lower(substring(text, 20, 220)), '\\s+', ' ', 'g')), ' '),
-           t -> t <> '') AS toks
-  FROM docs WHERE doc_id % 97 = 0
-),
-bgrams AS (
-  SELECT DISTINCT array_to_string(list_slice(toks, i, i + {n} - 1), ' ') AS gram
-  FROM (SELECT toks, unnest(range(1, len(toks) - {n} + 2)) AS i
-        FROM btok WHERE len(toks) >= {n})
-)
-SELECT g.doc_id, count(*) AS n_shared
-FROM grams g SEMI JOIN bgrams b ON g.gram = b.gram
-GROUP BY g.doc_id
-""").fetchall()
-    }
-    assert len(want) > 0  # overlap exists by construction
-    assert got == want

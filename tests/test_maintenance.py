@@ -74,45 +74,6 @@ def test_manifest_size_stays_flat_over_many_commits(spark, tmp_table_path):
     assert t.manifest().ledger_watermarks["fileseq"] == 199
 
 
-def test_repair_bucket_rebuilds_from_log(spark, tmp_path):
-    """Targeted repair: delete one bucket's data dirs, rebuild that bucket
-    alone from the binlog parquet, final state equals the oracle; other
-    buckets' dirs are byte-identical (untouched)."""
-    import os
-    import shutil
-
-    from mysql_syncer_spark.generator import (
-        GenSpec,
-        generate_events,
-        write_event_log,
-    )
-    from mysql_syncer_spark.oracle import sequential_replay
-    from mysql_syncer_spark.plans.replay import repair_bucket, replay
-    from mysql_syncer_spark.sink.pages_table import PagesTable
-    from tests.test_replay_parity import assert_state_equal
-
-    tbl = generate_events(GenSpec(n_events=4000))  # default DDL scenario
-    log = str(tmp_path / "log")
-    write_event_log(tbl, log)
-    path = str(tmp_path / "pages")
-    replay(spark, log, path, num_buckets=8)
-    t = PagesTable(spark, path)
-    m = t.manifest()
-    victim = next(b for b, lst in sorted(m.buckets.items()) if lst)
-    others_before = {b: list(lst) for b, lst in m.buckets.items() if b != victim}
-    for d in m.buckets[victim]:
-        shutil.rmtree(os.path.join(path, d))
-
-    res = repair_bucket(spark, log, path, int(victim))
-    assert res["rows"] > 0
-    m2 = PagesTable(spark, path).manifest()
-    assert {b: lst for b, lst in m2.buckets.items() if b != victim} == others_before
-    assert m2.buckets[victim] != m.buckets[victim]
-
-    oracle, _, _ = sequential_replay(tbl)
-    assert_state_equal(PagesTable(spark, path).read().collect(), oracle)
-
-
 def test_compaction_sorts_buckets_by_key(
     spark, event_log_dir, event_table, tmp_table_path
 ):

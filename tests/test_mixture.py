@@ -1,92 +1,16 @@
-"""Mixing / splitting / sequence packing: hand truth, invariants, and
+"""Quality bucketing / sequence packing: hand truth, invariants, and
 DuckDB SQL parity on the real documents table (md5-hex draws are
 engine-portable, so parity is exact)."""
 
 import duckdb
-from pyspark.sql import functions as F
 
-from mysql_syncer_spark.functions.mixture import (
-    hash_split,
-    mixture_sample,
-    pack_sequences,
-    threshold_hex,
-)
+from mysql_syncer_spark.functions.mixture import pack_sequences
 
 SF = "/root/testdata/sf0.01"
 
 
 def _docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
-
-
-def test_hash_split_deterministic_and_stable(spark):
-    docs = _docs(spark)
-    full = {r["doc_id"]: r["split"] for r in hash_split(docs, 0.2).collect()}
-    again = {r["doc_id"]: r["split"] for r in hash_split(docs, 0.2).collect()}
-    assert full == again
-    # membership depends only on (seed, id): a subset of the corpus splits
-    # identically — no leakage when data arrives late
-    sub = {
-        r["doc_id"]: r["split"]
-        for r in hash_split(docs.filter(F.col("doc_id") % 3 == 0), 0.2).collect()
-    }
-    assert all(full[k] == v for k, v in sub.items())
-    frac = sum(1 for v in full.values() if v == "holdout") / len(full)
-    assert 0.1 < frac < 0.3  # 500 docs, p=0.2
-
-
-def test_mixture_sample_epochs(spark):
-    docs = _docs(spark)
-    n_src0 = docs.filter(F.col("source") == "src0").count()
-    out = mixture_sample(docs, {"src0": 2.5, "src1": 0.4}, default_rate=0.0)
-    rows = out.select("doc_id", "source", "n_copies").collect()
-    # unlisted domains dropped entirely
-    assert {r["source"] for r in rows} == {"src0", "src1"}
-    by_src = {}
-    for r in rows:
-        by_src.setdefault(r["source"], []).append(r["n_copies"])
-    # src0: every doc kept, 2 or 3 copies, ~half get the 3rd epoch
-    assert len(by_src["src0"]) == n_src0
-    assert set(by_src["src0"]) <= {2, 3}
-    third = sum(1 for c in by_src["src0"] if c == 3) / n_src0
-    assert 0.3 < third < 0.7
-    # src1: downsampled to ~40 %, single copies
-    assert set(by_src["src1"]) == {1}
-
-
-def test_mixture_matches_duckdb(spark):
-    rates = {"src0": 2.5, "src1": 0.4, "src2": 1.0}
-    got = {
-        (r["doc_id"], r["n_copies"])
-        for r in mixture_sample(_docs(spark), rates, default_rate=0.25)
-        .select("doc_id", "n_copies")
-        .collect()
-    }
-    whole_case = (
-        "CASE source "
-        + " ".join(f"WHEN '{d}' THEN {int(r)}" for d, r in rates.items())
-        + " ELSE 0 END"
-    )
-    thr_case = (
-        "CASE source "
-        + " ".join(
-            f"WHEN '{d}' THEN '{threshold_hex(r - int(r))}'" for d, r in rates.items()
-        )
-        + f" ELSE '{threshold_hex(0.25)}' END"
-    )
-    con = duckdb.connect()
-    con.execute(f"create view documents as select * from '{SF}/documents.parquet'")
-    oracle = con.execute(f"""
-        SELECT doc_id, n_copies FROM (
-            SELECT doc_id,
-                   ({whole_case}
-                    + CASE WHEN substr(md5('mix1|' || doc_id::VARCHAR), 1, 13)
-                                < {thr_case}
-                           THEN 1 ELSE 0 END)::BIGINT AS n_copies
-            FROM documents)
-        WHERE n_copies >= 1
-    """).fetchall()
-    assert got == set(oracle) and len(got) > 100
 
 
 def test_pack_sequences_invariants(spark):
@@ -127,15 +51,6 @@ def test_pack_sequences_matches_duckdb(spark):
                      ROWS UNBOUNDED PRECEDING)
     """).fetchall()
     assert got == set(oracle)
-
-
-def test_mixture_plan_is_map_only(spark):
-    """Mixing must never shuffle: the physical plan of mixture_sample +
-    hash_split over a parquet scan contains no Exchange at all."""
-    df = hash_split(mixture_sample(_docs(spark), {"src0": 1.5}), 0.1)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert "Python" not in plan and "BatchEval" not in plan
 
 
 def test_quality_buckets_hand_truth(spark):
@@ -197,47 +112,6 @@ def test_quality_buckets_match_duckdb(spark):
     assert got == set(oracle) and len(got) == 500
 
 
-def test_quality_buckets_2pass_agrees_with_exact(spark):
-    """The scale twin must agree with the rank-exact form away from the
-    cutoff boundaries; at full accuracy the sketch is exact, so any
-    disagreement is confined to ties AT a cutoff value."""
-    from mysql_syncer_spark.functions.mixture import (
-        quality_buckets,
-        quality_buckets_2pass,
-    )
-    from mysql_syncer_spark.functions.text import unigram_nll
-
-    docs = _docs(spark)
-    scored = unigram_nll(docs).join(docs.select("doc_id", "source"), "doc_id")
-    exact = {
-        r["doc_id"]: r["bucket"] for r in quality_buckets(scored, "nll").collect()
-    }
-    twopass = {
-        r["doc_id"]: r["bucket"]
-        for r in quality_buckets_2pass(scored, "nll").collect()
-    }
-    assert set(exact) == set(twopass)
-    order = {"head": 0, "middle": 1, "tail": 2}
-    disagree = [k for k in exact if exact[k] != twopass[k]]
-    # boundary ties may land one bucket apart, never two, and few
-    assert all(abs(order[exact[k]] - order[twopass[k]]) == 1 for k in disagree)
-    assert len(disagree) < len(exact) * 0.1
-
-
-def test_quality_buckets_2pass_plan(spark):
-    """Pass 2 is label-only: after the cutoff aggregate, the corpus side
-    sees one BroadcastHashJoin and no sort of the data by score."""
-    from mysql_syncer_spark.functions.mixture import quality_buckets_2pass
-
-    docs = _docs(spark).withColumn("score", F.col("n_chars").cast("double"))
-    plan = (
-        quality_buckets_2pass(docs, "score")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan, plan
-    assert "Sort" not in plan, plan
-
-
 def test_pack_sequences_property(spark):
     """Hypothesis: for ANY doc set (ids, token counts), packing yields
     contiguous per-group streams with shard = start//budget and total
@@ -276,91 +150,3 @@ def test_pack_sequences_property(spark):
                 run += r["n_tokens"]
 
     check()
-
-
-def test_mixture_rates_property(spark):
-    """Hypothesis: n_copies is always floor(rate) or ceil(rate) for the
-    doc's domain, and rate 0 domains vanish."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=15, deadline=None)
-    @given(
-        st.dictionaries(
-            st.sampled_from(["a", "b", "c", "d"]),
-            st.floats(0, 4, allow_nan=False, width=16),
-            min_size=1,
-        )
-    )
-    def check(rates):
-        rows = [(i, ["a", "b", "c", "d", "e"][i % 5]) for i in range(80)]
-        df = spark.createDataFrame(rows, "doc_id long, source string")
-        out = mixture_sample(df, rates, default_rate=0.0).collect()
-        import math
-
-        for r in out:
-            rate = rates.get(r["source"], 0.0)
-            assert r["n_copies"] in {math.floor(rate), math.ceil(rate)}
-            assert r["n_copies"] >= 1
-        kept_domains = {r["source"] for r in out}
-        for d, rate in rates.items():
-            if rate == 0.0:
-                assert d not in kept_domains
-
-    check()
-
-
-def test_cap_per_domain_exact_matches_duckdb(spark):
-    from mysql_syncer_spark.functions.mixture import cap_per_domain
-
-    docs = _docs(spark)
-    got = {
-        r["doc_id"]
-        for r in cap_per_domain(docs, 30, exact=True).select("doc_id").collect()
-    }
-    con = duckdb.connect()
-    con.execute(f"create view documents as select * from '{SF}/documents.parquet'")
-    oracle = con.execute("""
-        SELECT doc_id FROM (
-            SELECT doc_id, row_number() OVER (
-                PARTITION BY source
-                ORDER BY substr(md5('cap1|' || doc_id::VARCHAR), 1, 13), doc_id
-            ) AS rn
-            FROM documents)
-        WHERE rn <= 30
-    """).fetchall()
-    assert got == {r[0] for r in oracle}
-    # exactly min(cap, count) per domain
-    per = cap_per_domain(docs, 30, exact=True).groupBy("source").count().collect()
-    full = {r["source"]: r["count"] for r in docs.groupBy("source").count().collect()}
-    assert {r["source"]: r["count"] for r in per} == {
-        s: min(30, n) for s, n in full.items()
-    }
-
-
-def test_cap_per_domain_expected_matches_duckdb(spark):
-    from mysql_syncer_spark.functions.mixture import cap_per_domain
-
-    docs = _docs(spark)
-    got = {
-        r["doc_id"]
-        for r in cap_per_domain(docs, 30).select("doc_id").collect()
-    }
-    con = duckdb.connect()
-    con.execute(f"create view documents as select * from '{SF}/documents.parquet'")
-    oracle = con.execute("""
-        WITH c AS (SELECT source, count(*)::BIGINT AS n FROM documents GROUP BY 1)
-        SELECT doc_id FROM documents JOIN c USING (source)
-        WHERE n <= 30
-           OR substr(md5('cap1|' || doc_id::VARCHAR), 1, 13)
-              < lower(lpad(to_hex((least(1.0, 30.0 / n)
-                                   * 4503599627370496.0)::BIGINT), 13, '0'))
-    """).fetchall()
-    assert got == {r[0] for r in oracle}
-    # expected-cap: each oversized domain lands within a loose band
-    per = {
-        r["source"]: r["count"]
-        for r in cap_per_domain(docs, 30).groupBy("source").count().collect()
-    }
-    for s, n in per.items():
-        assert n <= 60  # 2× expected cap is far outside plausible variance

@@ -215,12 +215,12 @@ def test_drop_then_readd_does_not_resurrect(spark, tmp_table_path):
     vals = {r["url"]: r["extra"] for r in t.read().collect()}
     assert vals == {"http://a/1": None, "http://a/2": None, "http://a/3": "new3"}
 
-    # changelog across the boundary: only the genuinely new row appears,
-    # with a NULL before image — no resurrection rows
-    log = t.changes_between(v0, with_before=True)
+    # changelog across the boundary: only the genuinely new row appears —
+    # no resurrection rows
+    log = t.changes_between(v0)
     rows = log.collect()
     assert {r["url"]: r["change_op"] for r in rows} == {"http://a/3": "I"}
-    assert rows[0]["extra"] == "new3" and rows[0]["before_extra"] is None
+    assert rows[0]["extra"] == "new3"
 
     # compaction rewrites under the generation name; values stay masked
     t.compact(buckets=[0, 1])

@@ -192,72 +192,3 @@ def test_banded_lsh_pairs_recall(spark):
     assert recall >= 0.9, recall
     for pair, sim in got.items():
         assert pair in brute and brute[pair] == sim  # no false positives
-
-
-def test_pq_adc_recall_and_jvm_plan(spark):
-    """Product quantization: encode → ADC top-k. Recall@10 vs exact L2 on
-    clustered synthetic vectors; the scoring stage is JVM-only (the LUT is
-    a plan literal)."""
-    import numpy as np
-
-    from mysql_syncer_spark.functions.similarity import (
-        pq_encode,
-        pq_topk,
-        train_pq_codebooks,
-    )
-
-    rng = np.random.default_rng(11)
-    centers = rng.normal(0, 1, (10, 64))
-    rows = []
-    for i in range(400):
-        c = centers[i % 10]
-        rows.append((i, (c + rng.normal(0, 0.15, 64)).tolist()))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    query = (centers[3] + rng.normal(0, 0.05, 64)).tolist()
-
-    books = train_pq_codebooks(df, m=8, k=16, sample_rows=400)
-    assert books.shape == (8, 16, 8)
-    coded = pq_encode(df, books).select("vec_id", "pq_code").cache()
-    assert coded.selectExpr("max(size(pq_code))").head()[0] == 8
-
-    # exact L2 top-10 (numpy truth)
-    mat = np.array([r[1] for r in rows])
-    exact = np.argsort(((mat - np.array(query)) ** 2).sum(1))[:10].tolist()
-
-    # ADC alone is the CANDIDATE GENERATOR: the exact top-10 must sit
-    # inside a 4x over-retrieved candidate set
-    cand = [r["vec_id"] for r in pq_topk(coded, query, books, k=40).collect()]
-    cand_recall = len(set(cand) & set(exact)) / 10
-    assert cand_recall >= 0.9, (cand_recall, cand, exact)
-
-    # over-retrieve + exact re-rank (the production shape) nails top-10
-    from mysql_syncer_spark.functions.similarity import pq_topk_rerank
-
-    full = pq_encode(df, books)
-    got = [r["vec_id"] for r in pq_topk_rerank(full, query, books, k=10).collect()]
-    rerank_recall = len(set(got) & set(exact)) / 10
-    assert rerank_recall >= 0.9, (rerank_recall, got, exact)
-
-    plan = (
-        pq_topk(coded, query, books, k=10)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrdered" in plan, plan
-    # scoring itself is JVM-only; the cached encode is the only UDF stage
-    assert plan.count("BatchEvalPython") == 0, plan
-
-
-def test_pq_adc_distance_is_exact_for_centroid_vectors(spark):
-    """A vector that IS a tuple of centroids has ADC distance equal to the
-    true squared distance between query-subvectors and those centroids."""
-    import numpy as np
-
-    from mysql_syncer_spark.functions.similarity import pq_topk
-
-    books = np.zeros((2, 4, 2))
-    books[0] = [[0, 0], [1, 0], [0, 1], [1, 1]]
-    books[1] = [[2, 2], [3, 2], [2, 3], [3, 3]]
-    df = spark.createDataFrame([(0, [1, 2])], "vec_id long, pq_code array<int>")
-    # vector = (books[0][1], books[1][2]) = (1,0,2,3); query = (0,0,2,2)
-    out = pq_topk(df, [0.0, 0.0, 2.0, 2.0], books, k=1).head()
-    assert out["pq_dist"] == 2.0  # (1-0)^2 + (0-0)^2 + (2-2)^2 + (3-2)^2

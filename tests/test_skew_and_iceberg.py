@@ -174,6 +174,49 @@ def test_iceberg_golden_sql_edge_cases():
     assert "PARTITIONED BY (bucket(8, url))" in create
 
 
+def test_iceberg_apply_batch_keeps_the_sink_filter_chain(spark, monkeypatch):
+    """The Iceberg adapter applies a batch like PagesTable.apply_batch: an
+    oversized DDL (F3) emits no ALTER, and DDLs run in log order
+    (file_seq, log_pos) whatever order the batch rows arrive in. Needs no
+    jar: availability is faked and ``spark.sql`` only records."""
+    import datetime as dt
+
+    from mysql_syncer_spark.config import TableConfig
+    from mysql_syncer_spark.sink import iceberg_table
+
+    monkeypatch.setattr(iceberg_table, "iceberg_available", lambda s: True)
+    calls = []
+    monkeypatch.setattr(spark, "sql", lambda q: calls.append(q))
+    schema_sql = (
+        "log_pos long, file_seq int, server_id int, op string, table string,"
+        " tx_id long,"
+        " before struct<url:string,warc_ts:timestamp,text:string>,"
+        " after struct<url:string,warc_ts:timestamp,text:string>,"
+        " ddl struct<kind:string,col:string,new_name:string,dtype:string>"
+    )
+    ddl = lambda pos, fs, d: (pos, fs, 1, "DDL", "web.pages", None, None, None, d)
+    ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    events = spark.createDataFrame(
+        [
+            ddl(5, 1, ("rename_column", "a", "c", None)),
+            ddl(20, 0, ("add_column", "b", None, "string")),
+            ddl(15, 0, ("add_column", "x" * 3000, None, "string")),
+            ddl(10, 0, ("add_column", "a", None, "string")),
+            (30, 1, 1, "I", "web.pages", None, None, ("u1", ts, "v1"), None),
+        ],
+        schema_sql,
+    )
+    mapping = {"url": "url", "warc_ts": "warc_ts", "text": "text"}
+    iceberg_table.apply_batch_iceberg(
+        spark, "lake.t", events, TableConfig(name="web.pages"), mapping
+    )
+    assert [q for q in calls if q.startswith("ALTER")] == [
+        "ALTER TABLE lake.t ADD COLUMN a string",
+        "ALTER TABLE lake.t ADD COLUMN b string",
+        "ALTER TABLE lake.t RENAME COLUMN a TO c",
+    ]
+    assert calls[-1].startswith("MERGE INTO lake.t t")
+
 def test_adaptive_planner_skips_probe_between_edges(spark, tmp_path):
     """A multi-batch replay probes only its first batch that is not
     skipped: carried batches skip the probe job and still report an exact

@@ -138,64 +138,6 @@ def test_route_wire_tables_multi_table(spark):
     assert len(o) == 1 and o[0]["after"]["amount"] == Decimal("12.50")
 
 
-def test_wire_changelog_roundtrip(spark):
-    """CDC OUT as wire: changes_between → ROWS_EVENT blobs → decode gives
-    back the same changelog (I full image, U/D minimal before images)."""
-    from mysql_syncer_spark.sources.wire_log import (
-        decode_wire_events,
-        encode_wire_changelog,
-        wire_def_for,
-    )
-
-    tbl = generate_events(GenSpec(n_events=1200, events_per_file=300))
-    d = tempfile.mkdtemp()
-    write_event_log(tbl, d)
-    path = tempfile.mkdtemp() + "/pages"
-    replay(spark, d, path, num_buckets=8)
-    t = PagesTable(spark, path)
-    v1 = t.manifest().version
-    # diff across the middle of the replay so the changelog carries real
-    # U (and, config permitting, D) rows, not just the initial inserts
-    changes = t.changes_between(max(1, v1 // 2), v1)
-    n_changes = changes.count()
-    ops_present = {r["change_op"] for r in changes.select("change_op").distinct().collect()}
-    assert n_changes > 0 and "U" in ops_present, ops_present
-
-    wire = encode_wire_changelog(changes)
-    payload_cols = [c for c in changes.columns if c != "change_op"]
-    td, ts_cols = wire_def_for(changes.schema, payload_cols)
-    decoded = decode_wire_events(wire, table_def=td)
-    assert decoded.count() == n_changes
-
-    def key_of(r):
-        img = r["after"] if r["after"] is not None else r["before"]
-        return img["url"]
-
-    want = {r["url"]: r for r in changes.collect()}
-    for r in decoded.collect():
-        url = key_of(r)
-        exp = want[url]
-        op = {"I": "I", "U": "U", "D": "D"}[r["op"]]
-        assert op == exp["change_op"], (url, r)
-        img = r["after"]
-        # D carries the FULL tombstone image (its warc_ts must travel for
-        # the downstream LWW rank) — fall through to the value check
-        if op == "U":  # before image is key-only (binlog_row_image=MINIMAL)
-            assert r["before"]["url"] == url
-            assert all(
-                v is None for k, v in r["before"].asDict().items() if k != "url"
-            )
-        for c in payload_cols:
-            got_v, exp_v = img[c], exp[c]
-            if c in ts_cols:
-                exp_v = _to_us(exp_v)
-            if isinstance(exp_v, bytearray):
-                exp_v = bytes(exp_v)
-            if isinstance(got_v, bytearray):
-                got_v = bytes(got_v)
-            assert got_v == exp_v, (url, c, got_v, exp_v)
-
-
 def test_streaming_wire_kill_and_resume(spark, tmp_path):
     """Exactly-once survives a mid-stream kill on the WIRE path too: stop
     after ≥1 committed micro-batch, resume from the same checkpoint, final
@@ -267,96 +209,6 @@ def test_decode_on_error_skip_drops_poison_pills(spark):
     got = decode_wire_events(df, table_def=td, on_error="skip").collect()
     assert sorted(r["log_pos"] for r in got) == [1, 4]
     assert all(r["after"]["name"] == "ok" for r in got)
-
-
-def test_chained_replication_via_wire_changelog(spark):
-    """Master→slave chaining: table A replays the binlog, publishes its
-    changelog as wire ROWS_EVENT batches (two incremental spans so U and
-    D flow, not just initial inserts); table B applies the decoded wire
-    changelog and converges to A's live state."""
-    from pyspark.sql import functions as F
-
-    from mysql_syncer_spark.sources.wire_log import (
-        encode_wire_changelog,
-        restore_timestamps,
-        wire_def_for,
-    )
-
-    tbl = generate_events(GenSpec(n_events=1200, events_per_file=300))
-    d = tempfile.mkdtemp()
-    write_event_log(tbl, d)
-    pa_path = tempfile.mkdtemp() + "/pages"
-    replay(spark, d, pa_path, num_buckets=8)
-    a = PagesTable(spark, pa_path)
-    v_end = a.manifest().version
-    # split where the schema is already post-rename: a changelog span that
-    # straddles a RENAME would emit the old column name (a real relay
-    # forwards the DDL between spans; here we span within one schema era)
-    v_mid = next(
-        v for v in range(1, v_end + 1)
-        if "extra_v2" in [n for n, _ in a.manifest(v).schema]
-    )
-    assert v_mid < v_end, "need a non-empty second span for U/D coverage"
-
-    b = PagesTable.create(spark, tempfile.mkdtemp() + "/pages", num_buckets=8)
-    payload_cols = None
-    for i, (v0, v1) in enumerate([(0, v_mid), (v_mid, v_end)]):
-        changes = a.changes_between(v0, v1)
-        if payload_cols is None:
-            payload_cols = [c for c in changes.columns if c != "change_op"]
-            td, ts_cols = wire_def_for(changes.schema, payload_cols)
-        wire = encode_wire_changelog(changes)
-        decoded = restore_timestamps(
-            decode_wire_events(wire, table_def=td), ts_cols
-        )
-        # chained batches must keep the span order for LWW: offset
-        # file_seq per span (a real relay assigns positions serially)
-        decoded = decoded.withColumn("file_seq", F.lit(i).cast("int"))
-        # the slave's registry needs DDL-added cols up front (the
-        # changelog is post-schema; replay DDL is not re-emitted)
-        for c in payload_cols:
-            if c not in [n for n, _ in b.manifest().schema]:
-                b.apply_batch(
-                    f"ddl-{c}",
-                    _chained_ddl_batch(spark, c),
-                    None,
-                )
-        res = b.apply_batch(f"chain-{i}", decoded, None)
-        assert res["skipped"] is False
-
-    live_a = {
-        r["url"]: tuple(
-            _to_us(r[c]) if c == "warc_ts" else
-            (bytes(r[c]) if isinstance(r[c], (bytes, bytearray)) else r[c])
-            for c in payload_cols
-        )
-        for r in a.read().collect()
-    }
-    live_b = {
-        r["url"]: tuple(
-            _to_us(r[c]) if c == "warc_ts" else
-            (bytes(r[c]) if isinstance(r[c], (bytes, bytearray)) else r[c])
-            for c in payload_cols
-        )
-        for r in PagesTable(spark, b.path).read().collect()
-    }
-    assert set(live_b) == set(live_a)
-    diffs = {u: (live_a[u], live_b[u]) for u in live_a if live_a[u] != live_b[u]}
-    assert not diffs, list(diffs.items())[:3]
-
-
-def _chained_ddl_batch(spark, col):
-    pay = "struct<url:string,warc_ts:timestamp,html:binary,text:string,lang:string>"
-    schema = (
-        "log_pos long, file_seq int, server_id int, op string, table string,"
-        f" tx_id long, before {pay}, after {pay},"
-        " ddl struct<kind:string,col:string,new_name:string,dtype:string>"
-    )
-    return spark.createDataFrame(
-        [(0, 0, 1, "DDL", "web.pages", None, None, None,
-          ("add_column", col, None, "string"))],
-        schema,
-    )
 
 
 def test_wire_dead_letters_complement_skip(spark):
