@@ -31,13 +31,14 @@ columns would have been diffed against a row that rank-LWW does not
 produce); such feeds must ship full images, which the engine's normal
 path already handles.
 
-Batch path (``apply_partial_batch``): fold the batch column-level →
-enrich to FULL images by coalescing unwritten columns from the current
-table state of ONLY the touched buckets (partition-pruned scan, the
+Batch path (``partial_events``): fold the batch column-level → enrich
+to FULL images by coalescing unwritten columns from the current table
+state of ONLY the touched buckets (partition-pruned scan, the
 lookup_many shape) → feed the engine's normal exactly-once
-``apply_batch``. Per batch this costs O(batch + touched buckets), never
-O(table), and the ledger/idempotency/skew machinery is reused rather
-than reimplemented.
+``apply_batch`` (``apply_partial_batch``; the streaming runner makes the
+same call as for a full-image trigger). Per batch this costs O(batch +
+touched buckets), never O(table), and the ledger/idempotency/skew
+machinery is reused rather than reimplemented.
 """
 
 from __future__ import annotations
@@ -140,14 +141,33 @@ def apply_partial_batch(
     cfg=None,
     server_id: int | None = None,
 ) -> dict:
-    """Apply one micro-batch of MINIMAL-image events to a PagesTable.
+    """Apply one micro-batch of MINIMAL-image events to a PagesTable:
+    ``partial_events`` → ``PagesTable.apply_batch`` (exactly-once ledger,
+    skew probe and threshold fold all reused). A batch already in the
+    ledger returns skipped before the enrichment runs any Spark job."""
+    from ..config import TableConfig
 
-    fold (1 shuffle) → enrich to full images against the live state of
-    only the touched buckets (partition-pruned, O(touched buckets)) →
-    ``PagesTable.apply_batch`` (exactly-once ledger, skew probe, DDL
-    machinery all reused). DDL events are NOT supported on this path —
-    MINIMAL images and in-flight schema changes must be serialized by
-    the caller (apply the DDL through a normal batch first).
+    cfg = cfg or TableConfig(name="web.pages")
+    bid = str(batch_id)
+    if table._is_committed(table.manifest(), bid):
+        return {"batch_id": bid, "skipped": True, "reason": "already committed"}
+    # ddls=[] — partial_events refuses DDL, and it spares apply_batch's
+    # DDL collect from requiring a `ddl` column the enriched events lack
+    return table.apply_batch(
+        bid, partial_events(table, events, cfg, server_id), cfg, ddls=[]
+    )
+
+
+def partial_events(
+    table, events: DataFrame, cfg=None, server_id: int | None = None
+) -> DataFrame:
+    """A micro-batch of MINIMAL-image events as full-image events for
+    ``PagesTable.apply_batch``: fold (1 shuffle) → enrich against the
+    live state of only the touched buckets (partition-pruned, O(touched
+    buckets)) → one U event per surviving key, one D per delete-wins key.
+    DDL events are NOT supported on this path — MINIMAL images and
+    in-flight schema changes must be serialized by the caller (apply the
+    DDL through a normal batch first).
     """
     from ..config import TableConfig
     from ..operators.dedup import lww_dedup
@@ -156,7 +176,7 @@ def apply_partial_batch(
     cfg = cfg or TableConfig(name="web.pages")
     if events.filter(F.col("op") == "DDL").limit(1).count():
         raise ValueError(
-            "apply_partial_batch does not accept DDL events; apply schema "
+            "partial images do not accept DDL events; apply schema "
             "changes through a full-image batch first"
         )
     m = table.manifest()
@@ -251,7 +271,4 @@ def apply_partial_batch(
             .alias("ddl"),
         )
 
-    enriched = event_rows(False).unionByName(event_rows(True))
-    # ddls=[] — DDL was refused above, and it spares apply_batch's DDL
-    # collect from requiring a `ddl` column the enriched events don't have
-    return table.apply_batch(batch_id, enriched, cfg, ddls=[])
+    return event_rows(False).unionByName(event_rows(True))

@@ -268,39 +268,35 @@ def replay(
 ) -> dict:
     """Full (or resumed) replay. Returns summary metrics.
 
-    ``pipeline_depth > 1`` overlaps delta writes of consecutive batches
-    (merge-on-read makes them independent) while manifests commit strictly
-    in order — the cure for the fixed per-batch serial floor at 10^4+
-    batches. DDL is pre-collected in ONE pushed-predicate scan of the log
-    so each batch still projects with the schema at its log position.
+    Batches run through ``PagesTable.apply_batches``, the one replay
+    loop; ``pipeline_depth > 1`` overlaps delta writes of consecutive
+    batches (merge-on-read makes them independent) while manifests commit
+    strictly in order — the cure for the fixed per-batch serial floor at
+    10^4+ batches. DDL is pre-collected in ONE scan of the log (or the
+    loop collects each batch's at submit), so each batch still projects
+    with the schema at its log position.
 
-    ``event_filter`` (DataFrame -> DataFrame, serial path only) narrows
-    each batch before apply — the snapshot-bootstrap hook; it must keep
-    non-row events (DDL etc.) or schema history is lost."""
+    ``event_filter`` (DataFrame -> DataFrame) narrows each batch before
+    apply — the snapshot-bootstrap hook; it must keep non-row events (DDL
+    etc.) or schema history is lost."""
     cfg = cfg or default_pages_config()
-    if event_filter is not None and pipeline_depth > 1:
-        raise ValueError("event_filter requires pipeline_depth=1")
     table = PagesTable.open(spark, table_path, num_buckets)
 
-    # ONE pushed-predicate scan collects every batch's DDL up front (both
-    # paths) — DDL events are never transaction-deferred (tx_id is NULL),
-    # so the per-file grouping matches the batch boundaries exactly. With
-    # an event_filter active (bootstrap trims events) the serial
-    # loop falls back to per-batch collection so filtered-out DDL is
-    # never applied.
-    ddl_index: dict[str, list[dict]] = {}
+    # ONE pushed-predicate scan collects every batch's DDL up front — DDL
+    # events are never transaction-deferred (tx_id is NULL), so the
+    # per-file grouping matches the batch boundaries exactly. With an
+    # event_filter active (bootstrap trims events) the loop collects
+    # each filtered batch's DDL instead, so filtered-out DDL is never
+    # applied.
+    ddl_index: dict[str, list[dict]] | None = None
     n_named = sum(1 for fn in os.listdir(event_dir) if _BINLOG_RE.search(fn))
-    have_index = False
     if event_filter is None:
         # fastest path: the writer embeds each file's DDL rows in the
         # parquet footer (schema history out of the data path — the
         # Debezium schema-history-topic pattern), so a millisecond
         # pyarrow footer read replaces the pushed-predicate Spark scan
-        footer_index = _ddl_index_from_footers(event_dir, cfg.name)
-        if footer_index is not None:
-            ddl_index = footer_index
-            have_index = True
-        elif n_named != 1 or pipeline_depth > 1:
+        ddl_index = _ddl_index_from_footers(event_dir, cfg.name)
+        if ddl_index is None and n_named != 1:
             # foreign log without footer metadata: ONE pushed-predicate
             # scan (a 1-file log gains nothing from it — the per-batch
             # collect is the same single job). The scan applies the SAME
@@ -312,33 +308,24 @@ def replay(
             _, ddl_events = filter_and_split(
                 read_event_log(spark, event_dir), cfg.name
             )
+            ddl_index = {}
             for d in ordered_ddls(ddl_events):
                 ddl_index.setdefault(f"fileseq-{d['file_seq']}", []).append(d)
-            have_index = True
 
     gated = (
         (f"fileseq-{seq}", batch if event_filter is None else event_filter(batch))
         for seq, batch in iter_tx_gated_batches(spark, event_dir, from_file_seq)
     )
-    if pipeline_depth > 1:
-        batches = table.apply_batches_pipelined(
-            gated, cfg=cfg, depth=pipeline_depth, ddl_index=ddl_index
-        )
-    else:
-        batches = table.apply_batches(
-            gated, cfg=cfg, ddl_index=ddl_index if have_index else None
-        )
-    total_events = sum(b.get("events_in", 0) for b in batches)
-    out = {
+    batches = table.apply_batches(
+        gated, cfg=cfg, depth=pipeline_depth, ddl_index=ddl_index
+    )
+    return {
         "n_batches": len(batches),
-        "events_applied": total_events,
+        "events_applied": sum(b.get("events_in", 0) for b in batches),
         "batches": batches,
         "table_path": table_path,
+        "pipeline_profile": table._last_pipeline_profile,
     }
-    prof = getattr(table, "_last_pipeline_profile", None)
-    if pipeline_depth > 1 and prof:
-        out["pipeline_profile"] = prof
-    return out
 
 
 def snapshot_events(
@@ -546,7 +533,7 @@ def replay_binlog(
     bound), so a K-file replay reads K files total, not K^2/2; within a
     batch the scan parallelism is per-file (the file is sequential by
     nature — reference fread-walk), and everything after the envelope is
-    the same one-shuffle ``apply_batch`` the typed path uses."""
+    the same ``apply_batches`` loop the typed path uses."""
     from ..sources.binlog_file import gtid_position, read_binlog_files
     from ..sources.wire_log import decode_wire_events
 

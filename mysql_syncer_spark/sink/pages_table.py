@@ -53,7 +53,6 @@ from pyspark.sql import functions as F
 
 from ..config import TableConfig
 from ..model import DDL_DTYPES
-from ..operators.filters import op_filter, oversized_ddl_filter, table_filter
 from ..operators.merge import batch_to_state, live_view
 from ..operators.routing import filter_and_split, ordered_ddls
 from . import manifest_store
@@ -73,6 +72,32 @@ def _fold_result(fut):
 
         warnings.warn(f"compaction failed, fold dropped: {e!r}", stacklevel=3)
         return None
+
+
+def _apply_fold(m: "Manifest", fold, bid: str) -> int:
+    """Swap each folded bucket's vintages in ``m`` for its compacted dir,
+    lineage under ``bid`` — the one place a fold lands, whoever computed
+    it. ``fold`` is ``_compact_compute``'s (snapshot, dirs, rows); a
+    bucket whose folded vintages are no longer all present (a racer
+    already folded them) is left alone. Returns the buckets folded."""
+    snapshot, cdirs, crows = fold
+    n = 0
+    for b, old in snapshot.items():
+        if b not in cdirs:
+            continue
+        cur = m.buckets.get(b, [])
+        if not all(x in cur for x in old):
+            continue  # a racer already folded these vintages
+        tail = [x for x in cur if x not in old]
+        m.buckets[b] = [cdirs[b]] + tail
+        m.lineage[b] = {"batch_id": bid, "rows": crows.get(b, 0)}
+        n += 1
+    return n
+
+
+def _already_committed(bid: str) -> dict:
+    return {"batch_id": bid, "skipped": True, "reason": "already committed"}
+
 
 BASE_SCHEMA: list[list[str]] = [
     ["url", "string"],
@@ -415,8 +440,10 @@ class PagesTable:
         """Commit history as a DataFrame — the Iceberg ``snapshots`` /
         ``history`` metadata-table parity surface. One row per persisted
         manifest version with its commit metrics (events_in, dedup_hits,
-        merge_ms, ...). Reads only the O(versions) manifest JSONs on the
-        driver — no data files touched."""
+        merge_ms, ...); a maintenance version's row names its lineage tag
+        (``compact-vN``, ...) and counts 0 events. Reads only the
+        O(versions) manifest JSONs on the driver — no data files
+        touched."""
         rows = []
         for mj in manifest_store.load_all(self.path):
             met = mj.get("metrics") or {}
@@ -529,7 +556,7 @@ class PagesTable:
         m = self.manifest()
         cfg = cfg or TableConfig(name="web.pages")
         if self._is_committed(m, bid):
-            return {"batch_id": bid, "skipped": True, "reason": "already committed"}
+            return _already_committed(bid)
         self._check_ledger_gap(m, bid)
 
         row_events, ddl_events = filter_and_split(events, cfg.name)
@@ -538,7 +565,6 @@ class PagesTable:
         # committed atomically with it) --------------------------------
         if ddls is None:
             ddls = ordered_ddls(ddl_events)
-        n_ddl = len(ddls)
         for d in ddls:
             self._apply_ddl(m, d)
 
@@ -551,35 +577,38 @@ class PagesTable:
             target_types=dict(m.schema),
             physical=dict(m.physical or {}),
         )
-        return self._commit_batch(
-            m, bid, delta, n_ddl, t0,
-            inline_compact=inline_compact,
-            rebase=lambda fm: [self._apply_ddl(fm, d) for d in ddls],
+        res, _ = self._commit_batch(
+            m, bid, delta, ddls, t0, inline_compact=inline_compact
         )
+        return res
 
     def _commit_batch(
         self,
         m: Manifest,
         bid: str,
         delta: dict,
-        n_ddl: int,
+        ddls: list[dict],
         t0: float,
-        inline_compact: bool = True,
-        rebase=None,
-    ) -> dict:
-        """Register a written delta + run threshold compaction + commit the
+        fold=None,
+        inline_compact: bool = False,
+    ) -> tuple[dict, Manifest]:
+        """Register a written delta, land a threshold fold and commit the
         manifest atomically (ledger + lineage + schema in one rename).
-        ``inline_compact=False`` (pipelined mode) skips the synchronous
-        fold — the caller runs compaction ASYNCHRONOUSLY and folds its
-        result into a later ordered commit (Iceberg's async
-        rewrite_data_files shape), so the table-sized merge never sits in
-        the serial commit path.
+        Returns the batch's result and the committed manifest.
+
+        ``fold`` is a finished ``AsyncCompactor`` compute (the replay
+        loop's folds, Iceberg's async rewrite_data_files shape: the
+        table-sized merge never sits in the serial commit path);
+        ``inline_compact`` instead plans and computes the fold here,
+        synchronously, this batch's delta included. ``_apply_fold`` swaps
+        the vintages either way.
 
         Optimistic concurrency: a lost version race reloads the manifest,
-        replays ``rebase(fresh)`` (the caller's DDL mutations), re-registers
-        the delta, and retries — the written delta dirs are version-free so
-        a rebase never rewrites data. If the SAME batch id landed via a
-        concurrent writer, returns skipped (exactly-once across writers)."""
+        re-applies ``ddls`` and re-registers the delta and the fold, and
+        retries — the written delta dirs are version-free so a rebase never
+        rewrites data, and the fold skips buckets a racer already folded.
+        If the SAME batch id landed via a concurrent writer, returns
+        skipped (exactly-once across writers)."""
         new_dirs, lineage_rows = delta["new_dirs"], delta["lineage_rows"]
         rows_in_batch = sum(lineage_rows.values())
         while True:
@@ -589,23 +618,15 @@ class PagesTable:
                 m.lineage[b] = {"batch_id": bid, "rows": lineage_rows.get(b, 0)}
 
             # --- threshold compaction, same atomic commit --------------
-            # buckets past compact_threshold vintages fold back to ONE
-            # file; read amplification stays bounded while per-batch write
-            # cost stays O(batch). Rows are already transformed —
-            # extraction never re-runs at compaction.
-            over = [
-                b for b, lst in m.buckets.items() if len(lst) > m.compact_threshold
-            ]
-            # metric counts buckets the fold PLAN actually touched, not
-            # merely past-threshold — _plan_fold may skip some or all
-            n_compacted = 0
-            if over and inline_compact:
-                fold_map = self._plan_fold(m, over)
+            # buckets past compact_threshold vintages fold back; read
+            # amplification stays bounded while per-batch write cost stays
+            # O(batch). Rows are already transformed — extraction never
+            # re-runs at compaction.
+            if fold is None and inline_compact:
+                fold_map = self._plan_fold(m)
                 if fold_map:
-                    self._compact_buckets(
-                        m, list(fold_map), bid, fold_map=fold_map
-                    )
-                    n_compacted = len(fold_map)
+                    fold = self._compact_compute(m, list(fold_map), fold_map=fold_map)
+            n_compacted = 0 if fold is None else _apply_fold(m, fold, bid)
             m.committed_batches.append(bid)
             # inline ledger fold: contiguous numeric ids collapse into the
             # prefix watermark ON EVERY COMMIT, so the manifest stays
@@ -620,7 +641,7 @@ class PagesTable:
                 "rows_after_dedup": rows_in_batch,  # winner rows written
                 # events folded away by the batch-level LWW reduction
                 "dedup_hits": max(0, events_in - rows_in_batch),
-                "ddl_applied": n_ddl,
+                "ddl_applied": len(ddls),
                 "buckets_touched": len(new_dirs),
                 "merge_ms": int((time.time() - t0) * 1000),
                 # event-time high-water of the batch + commit wall clock:
@@ -644,90 +665,61 @@ class PagesTable:
             }
             try:
                 self._commit(m)
-                break
+                return dict(m.metrics, skipped=False), m
             except CommitConflictError:
                 fresh = self.manifest()
                 if self._is_committed(fresh, bid):
-                    self._manifest_after_commit = fresh
                     return {
                         "batch_id": bid,
                         "skipped": True,
                         "reason": "committed by concurrent writer",
-                    }
-                if rebase is not None:
-                    rebase(fresh)
+                    }, fresh
+                for d in ddls:
+                    self._apply_ddl(fresh, d)
                 m = fresh
-        # pipelined callers rebind their shared manifest to this object
-        # after a rebase (the original reference is stale post-conflict)
-        self._manifest_after_commit = m
-        return dict(m.metrics, skipped=False)
 
     def apply_batches(
         self,
         batches,
         cfg: TableConfig | None = None,
-        ddl_index: dict[str, list[dict]] | None = None,
-    ) -> list[dict]:
-        """Apply an ORDERED stream of ``(batch_id, events)`` batches one at
-        a time — the serial twin of ``apply_batches_pipelined``. Only the
-        first batch that is not skipped runs the keys-only probe, and only
-        that batch can take the winner pre-filter: the probe's decision is
-        not carried, so every later batch merges without the pre-filter,
-        whatever its skew.
-        ``ddl_index`` (batch_id → DDL dicts, pre-collected for the whole
-        log) skips each batch's DDL collect job; None collects per batch."""
-        cfg = cfg or TableConfig(name="web.pages")
-        probe = True
-        results = []
-        for batch_id, events in batches:
-            res = self.apply_batch(
-                batch_id, events, cfg,
-                probe=probe,
-                ddls=None if ddl_index is None else ddl_index.get(str(batch_id), []),
-            )
-            probe = probe and bool(res.get("skipped"))
-            results.append(res)
-        return results
-
-    def apply_batches_pipelined(
-        self,
-        batches,
-        cfg: TableConfig | None = None,
-        depth: int = 4,
+        depth: int = 1,
         ddl_index: dict[str, list[dict]] | None = None,
     ) -> list[dict]:
         """Apply an ORDERED stream of ``(batch_id, events)`` batches with up
-        to ``depth`` delta writes in flight (merge-on-read makes batch
-        deltas independent: only the manifest commit must stay ordered,
-        like the reference's pipelined group commit —
-        /root/reference/src/slave/rs_redis_thread.h:10, depth 36). Only the
-        first submitted batch runs the keys-only probe and can take the
-        winner pre-filter; later batches merge without it, as in
-        ``apply_batches``.
+        to ``depth`` delta writes in flight; ``depth=1`` is serial replay.
+        Merge-on-read makes batch deltas independent: only the manifest
+        commit must stay ordered, like the reference's pipelined group
+        commit (rs_redis_thread.h, depth 36). Only the first batch that is
+        not skipped runs the keys-only probe, and only that batch can take
+        the winner pre-filter: the probe's decision is not carried, so
+        every later batch merges without the pre-filter, whatever its
+        skew.
 
-        DDL ordering: callers pass ``ddl_index`` (batch_id → DDL dicts,
-        pre-collected in ONE pushed-predicate scan of the whole log). Each
-        batch's DDLs are applied at SUBMIT time to a PLANNING COPY of the
-        manifest (so concurrent batches each project with exactly the
-        schema at their log position) but mutate the REAL manifest only
-        inside the batch's own ordered commit — the committed snapshot for
-        batch K (and any time-travel read of it) can therefore never carry
-        schema changes from later, not-yet-committed batches, and schema
-        visibility stays behind the exactly-once ledger across a crash.
-        Exactly-once: commits happen strictly in order; a crash leaves only
-        orphan delta dirs (vacuum()-able), never a half commit.
+        DDL ordering: a batch's DDLs come from ``ddl_index`` (batch_id →
+        DDL dicts, pre-collected for the whole log in ONE scan) or, when
+        it is None, are collected from the batch at submit. They are
+        applied at SUBMIT time to a PLANNING COPY of the manifest (so
+        concurrent batches each project with exactly the schema at their
+        log position) but mutate the REAL manifest only inside the batch's
+        own ordered commit — the committed snapshot for batch K (and any
+        time-travel read of it) can therefore never carry schema changes
+        from later, not-yet-committed batches, and schema visibility stays
+        behind the exactly-once ledger across a crash. The planning copy
+        also tracks the submitted ids, so the ledger-gap check sees batches
+        still in flight. Exactly-once: commits happen strictly in order; a
+        crash leaves only orphan delta dirs (vacuum()-able), never a half
+        commit.
 
-        Threshold compaction runs on an ``AsyncCompactor`` (Iceberg async
-        rewrite_data_files): the table-sized fold never sits in the serial
-        commit path, and a finished fold lands inside the next batch's
-        ordered commit. Vintage count can exceed compact_threshold by the
-        batches that land while a fold is in flight — still bounded."""
+        Threshold compaction runs on an ``AsyncCompactor``: a finished fold
+        lands inside the next batch's ordered commit, and a pending one is
+        drained as its own maintenance commit at the end. Vintage count can
+        exceed compact_threshold by the batches that land while a fold is
+        in flight — still bounded."""
         from concurrent.futures import ThreadPoolExecutor
 
         cfg = cfg or TableConfig(name="web.pages")
         m = self.manifest()
-        plan_m = Manifest.from_json(m.to_json())  # submit-time schema view
-        ddl_index = ddl_index or {}
+        plan_m = Manifest.from_json(m.to_json())  # submit-time view
         results: list[dict] = []
         inflight: list[tuple[str, list[dict], float, object]] = []
         probe = True
@@ -750,16 +742,12 @@ class PagesTable:
                 self._apply_ddl(m, d)
             agg["ddl"] += time.time() - tw
             tw = time.time()
-            compactor.fold_into(m, bid)
+            fold = compactor.take()
             agg["fold"] += time.time() - tw
             tw = time.time()
-            res = self._commit_batch(
-                m, bid, delta, len(ddls), t0, inline_compact=False,
-                rebase=lambda fm, _ds=ddls: [self._apply_ddl(fm, d) for d in _ds],
-            )
+            res, m = self._commit_batch(m, bid, delta, ddls, t0, fold=fold)
             results.append(res)
             agg["commit"] += time.time() - tw
-            m = self._manifest_after_commit  # follow any conflict rebase
             tw = time.time()
             compactor.schedule(m)
             agg["sched"] += time.time() - tw
@@ -768,17 +756,19 @@ class PagesTable:
             with ThreadPoolExecutor(max_workers=depth) as ex:
                 for batch_id, events in batches:
                     bid = str(batch_id)
-                    if self._is_committed(m, bid):
-                        results.append(
-                            {"batch_id": bid, "skipped": True, "reason": "already committed"}
-                        )
+                    if self._is_committed(plan_m, bid):
+                        results.append(_already_committed(bid))
                         continue
-                    ddls = ddl_index.get(bid, [])
+                    self._check_ledger_gap(plan_m, bid)
+                    plan_m.committed_batches.append(bid)
+                    self._fold_ledger(plan_m)
+                    ddls = (
+                        ordered_ddls(filter_and_split(events, cfg.name)[1])
+                        if ddl_index is None
+                        else ddl_index.get(bid, [])
+                    )
                     for d in ddls:
                         self._apply_ddl(plan_m, d)
-                    mapping = dict(plan_m.column_mapping)
-                    target_types = dict(plan_m.schema)
-                    physical = dict(plan_m.physical or {})
                     t0 = time.time()
 
                     # the filter graph (F1/F3 + op routing) is built INSIDE
@@ -788,21 +778,16 @@ class PagesTable:
                     # per-batch floor at every cluster size)
                     def work(
                         events=events,
-                        mapping=mapping,
                         probe=probe,
-                        target_types=target_types,
-                        physical=physical,
+                        mapping=dict(plan_m.column_mapping),
+                        target_types=dict(plan_m.schema),
+                        physical=dict(plan_m.physical or {}),
                     ):
-                        filtered = op_filter(
-                            oversized_ddl_filter(
-                                table_filter(events, [cfg.name])
-                            )
-                        )
                         return self._write_batch_delta(
-                            filtered,
+                            filter_and_split(events, cfg.name)[0],
                             cfg,
                             mapping,
-                            m.num_buckets,
+                            plan_m.num_buckets,
                             probe=probe,
                             target_types=target_types,
                             physical=physical,
@@ -863,7 +848,7 @@ class PagesTable:
     ) -> dict:
         """Build and write ONE batch's delta (merge-on-read unit of work).
         Pure with respect to the manifest — takes a mapping snapshot, so
-        several batches can run concurrently (apply_batches_pipelined);
+        several batches can run concurrently (``apply_batches``);
         the caller serializes manifest mutation + commit.
 
         Skew (D2): with ``probe`` a keys-only probe job runs first —
@@ -1024,10 +1009,10 @@ class PagesTable:
         except OSError:
             return 0
 
-    def _plan_fold(
-        self, m: Manifest, over: list[str]
-    ) -> dict[str, list[str]]:
-        """Size-tiered vintage selection (the LSM minor/major compaction
+    def _plan_fold(self, m: Manifest) -> dict[str, list[str]]:
+        """Threshold fold plan: bucket → vintages to fold, over the
+        buckets past ``compact_threshold`` vintages (empty when none is).
+        Size-tiered vintage selection (the LSM minor/major compaction
         split, Iceberg rewrite_data_files BIN_PACK shape): per bucket,
         fold ONLY the small-delta tail and leave the largest vintage (the
         base) in place, unless the tail has grown to a real fraction of
@@ -1043,13 +1028,14 @@ class PagesTable:
         rank max is associative; tombstones are ordinary rows and stay in
         the fold output)."""
         fold: dict[str, list[str]] = {}
-        for b in over:
-            vintages = list(m.buckets[b])
+        for b, vintages in m.buckets.items():
+            if len(vintages) <= m.compact_threshold:
+                continue
             sizes = {d: self._dir_bytes(d) for d in vintages}
             base = max(vintages, key=lambda d: sizes[d])
             rest = [d for d in vintages if d != base]
             if sum(sizes[d] for d in rest) >= _MAJOR_FOLD_RATIO * sizes[base]:
-                fold[b] = vintages  # major: fold the base too
+                fold[b] = list(vintages)  # major: fold the base too
             elif len(rest) > 1:
                 fold[b] = rest  # minor: the base stays untouched
         return fold
@@ -1105,27 +1091,26 @@ class PagesTable:
         cdirs, crows = self._write_snapshot(compacted, frozen.physical)
         return snapshot, cdirs, crows
 
-    def _compact_buckets(
-        self,
-        m: Manifest,
-        over: list[str],
-        bid: str,
-        fold_map: dict[str, list[str]] | None = None,
-    ) -> None:
-        """Fold the given buckets' vintages (all of them, or a
-        ``fold_map`` subset) into one file each. Mutates ``m`` in memory;
-        the caller commits atomically."""
-        snapshot, cdirs, crows = self._compact_compute(m, over, fold_map=fold_map)
-        for b, d in cdirs.items():
-            folded = set(snapshot.get(b, ()))
-            kept = [x for x in m.buckets[b] if x not in folded]
-            m.buckets[b] = kept + [d]
-            m.lineage[b] = {"batch_id": bid, "rows": crows.get(b, 0)}
+    def _commit_maintenance(self, m: Manifest, tag: str, n: int) -> None:
+        """Commit ``m`` (version already bumped) as a maintenance version:
+        its metrics name the lineage ``tag`` and the ``n`` buckets it
+        rewrote and count no events, so ``metrics_history()`` never lists
+        the previous batch twice; the lag and commit-time stamps carry
+        forward, so ``replication_lag_ms`` and ``read_as_of`` answer as
+        they did before the commit."""
+        prev = m.metrics or {}
+        m.metrics = {
+            "batch_id": tag,
+            "maintenance": True,
+            "compacted_buckets": n,
+            **{k: prev[k] for k in ("max_event_ts_us", "commit_ts_ms") if k in prev},
+        }
+        self._commit(m)
 
     def async_compactor(self) -> "AsyncCompactor":
         """Maintenance-thread threshold compaction for single-batch
         callers (the streaming foreachBatch sink): the same compactor
-        ``apply_batches_pipelined`` drives, but the fold lands as its OWN
+        ``apply_batches`` drives, but the fold lands as its OWN
         maintenance commit between micro-batches, so the table-sized
         merge never executes inside a trigger. Call ``tick()`` after
         every committed batch; ``close()`` when the stream stops (a
@@ -1146,9 +1131,10 @@ class PagesTable:
         if not target:
             return {"compacted_buckets": 0}
         m.version += 1
-        self._compact_buckets(m, target, f"compact-v{m.version}")
-        self._commit(m)
-        return {"compacted_buckets": len(target)}
+        tag = f"compact-v{m.version}"
+        n = _apply_fold(m, self._compact_compute(m, target), tag)
+        self._commit_maintenance(m, tag, n)
+        return {"compacted_buckets": n}
 
     def tag(self, name: str, version: int | None = None) -> dict:
         """Name a committed snapshot (Iceberg tag parity). Tags live in
@@ -1219,7 +1205,7 @@ class PagesTable:
             for b, d in cdirs.items():
                 m.buckets[b] = [d]
                 m.lineage[b] = {"batch_id": bid, "rows": crows.get(b, 0)}
-        self._commit(m)
+        self._commit_maintenance(m, bid, len(m.buckets))
         return {
             "rebucketed": True,
             "num_buckets": new_num_buckets,
@@ -1249,12 +1235,9 @@ class PagesTable:
         if not target:
             return {"backfilled_buckets": 0}
         m.version += 1
-        bid = f"backfill-v{m.version}"
-        _, cdirs, crows = self._compact_compute(m, target, transform=transform)
-        for b, d in cdirs.items():
-            m.buckets[b] = [d]
-            m.lineage[b] = {"batch_id": bid, "rows": crows.get(b, 0)}
-        self._commit(m)
+        tag = f"backfill-v{m.version}"
+        fold = self._compact_compute(m, target, transform=transform)
+        self._commit_maintenance(m, tag, _apply_fold(m, fold, tag))
         return {"backfilled_buckets": len(target), "version": m.version}
 
     def _apply_ddl(self, m: Manifest, d: dict) -> None:
@@ -1500,7 +1483,7 @@ class PagesTable:
         before = len(m.committed_batches)
         self._fold_ledger(m)
         m.version += 1
-        self._commit(m)
+        self._commit_maintenance(m, f"ledger-v{m.version}", 0)
         return {
             "entries_before": before,
             "entries_after": len(m.committed_batches),
@@ -1564,18 +1547,22 @@ class PagesTable:
     # observability
     # ------------------------------------------------------------------
     def metrics_history(self) -> list[dict]:
+        """The metrics of every batch commit, oldest first (maintenance
+        commits — folds, compact, backfill, rebucket, ledger — are left
+        out; ``history()`` lists every version)."""
         return [
             mj["metrics"]
             for mj in manifest_store.load_all(self.path)
-            if mj.get("metrics")
+            if mj.get("metrics") and not mj["metrics"].get("maintenance")
         ]
 
 
 class AsyncCompactor:
     """Off-trigger threshold compaction: the one schedule → compute over a
-    frozen snapshot → fold cycle, for the pipelined replay (whose folds
-    land inside its next ordered commit, ``fold_into``) and the streaming
-    sink (whose folds land as their own maintenance commit, ``tick``).
+    frozen snapshot → fold cycle, for the replay loop (whose folds land
+    inside its next ordered commit: ``take``, then ``_commit_batch``) and
+    the streaming sink (whose folds land as their own maintenance commit,
+    ``tick``).
 
     Exactly-once safety: the compute reads a FROZEN committed vintage
     snapshot (LWW merge-on-read makes folding any vintage subset
@@ -1597,12 +1584,7 @@ class AsyncCompactor:
         if self._fut is not None:
             return
         t = self._table
-        over = [
-            b for b, lst in m.buckets.items() if len(lst) > m.compact_threshold
-        ]
-        if not over:
-            return
-        fold_map = t._plan_fold(m, over)
+        fold_map = t._plan_fold(m)
         if not fold_map:
             return
         frozen = Manifest.from_json(m.to_json())
@@ -1610,28 +1592,32 @@ class AsyncCompactor:
             t._compact_compute, frozen, list(fold_map), fold_map=fold_map
         )
 
-    def fold_into(self, m: Manifest, bid: str) -> int:
-        """Fold a finished compute into ``m`` in memory, lineage under
-        ``bid``; the caller's next commit carries it. Returns the number
-        of buckets folded (0 when none was ready or it failed)."""
-        res = self._take()
-        return 0 if res is None else self._apply(m, res, bid)
+    def take(self, wait: bool = False):
+        """The finished compute's fold for ``_apply_fold``, or None when
+        none is in flight, it is still running (and not ``wait``), or it
+        failed."""
+        fut = self._fut
+        if fut is None or not (wait or fut.done()):
+            return None
+        self._fut = None
+        return _fold_result(fut)
 
     def commit_fold(self, wait: bool = False) -> int:
         """Fold a finished compute (with ``wait``, the in-flight one) into
         its own maintenance commit. Returns the number of buckets folded."""
-        res = self._take(wait)
-        if res is None:
+        fold = self.take(wait)
+        if fold is None:
             return 0
         t = self._table
         while True:
             m = t.manifest()
-            n = self._apply(m, res, f"compact-v{m.version + 1}")
+            m.version += 1
+            tag = f"compact-v{m.version}"
+            n = _apply_fold(m, fold, tag)
             if n == 0:
                 return 0
-            m.version += 1
             try:
-                t._commit(m)
+                t._commit_maintenance(m, tag, n)
                 return n
             except CommitConflictError:
                 continue  # re-read and re-apply onto the fresh manifest
@@ -1656,31 +1642,3 @@ class AsyncCompactor:
         """Stop the maintenance thread; an in-flight fold is awaited and
         left uncommitted (its dirs are orphans for vacuum())."""
         self._pool.shutdown(wait=True)
-
-    def _take(self, wait: bool = False):
-        """The finished compute's (snapshot, dirs, rows), or None when none
-        is in flight, it is still running (and not ``wait``), or it
-        failed."""
-        fut = self._fut
-        if fut is None or not (wait or fut.done()):
-            return None
-        self._fut = None
-        return _fold_result(fut)
-
-    @staticmethod
-    def _apply(m: Manifest, res, bid: str) -> int:
-        """Swap each folded bucket's vintages in ``m`` for the compacted
-        dir; returns the number of buckets folded."""
-        snapshot, cdirs, crows = res
-        n = 0
-        for b, old in snapshot.items():
-            if b not in cdirs:
-                continue
-            cur = m.buckets.get(b, [])
-            if not all(x in cur for x in old):
-                continue  # a racer already folded these vintages
-            tail = [x for x in cur if x not in old]
-            m.buckets[b] = [cdirs[b]] + tail
-            m.lineage[b] = {"batch_id": bid, "rows": crows.get(b, 0)}
-            n += 1
-        return n

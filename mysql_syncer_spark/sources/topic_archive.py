@@ -9,8 +9,9 @@ A wire format plugs in as a ``TopicCodec``; ``write``, ``read`` and
 ``replay`` are shared. Replay applies one exactly-once ``PagesTable``
 batch per source binlog file (batch_id ``fileseq-{seq}``, the ledger keys
 of ``plans.replay``, so replaying the same stream from another format is
-a no-op), with DDL riding in-stream and the keys-only skew probe run on
-the first batch only (``PagesTable.apply_batches``). The naming lets each batch read EXACTLY its own file
+a no-op) through ``PagesTable.apply_batches``, the one replay loop: DDL
+rides in-stream and is collected per batch, and the keys-only skew probe
+runs on the first batch only. The naming lets each batch read EXACTLY its own file
 (O(files) bytes over a replay); an archive named otherwise falls back to
 a content filter on file_seq, which re-scans the archive per batch.
 """

@@ -98,18 +98,19 @@ def start_streaming_replay(
     to tail RAW binlog file bytes (``event_dir`` is then ignored).
 
     ``partial=True`` tails a ``binlog_row_image=MINIMAL`` stream: each
-    micro-batch routes through ``operators.partial.apply_partial_batch``
-    (column-level fold + touched-bucket enrichment) before the same
-    exactly-once sink commit — checkpointed batchIds stay the ledger
-    keys, so kill/resume semantics are identical to the full-image
-    tail."""
+    micro-batch not yet in the ledger is enriched to full images by
+    ``operators.partial.partial_events`` (column-level fold +
+    touched-bucket enrichment) and then takes the full-image path: the
+    same probe carry, exactly-once sink commit and maintenance-thread
+    compaction — checkpointed batchIds stay the ledger keys, so
+    kill/resume semantics are identical to the full-image tail."""
     if cfg is None:
         from ..plans.replay import default_pages_config
 
         cfg = default_pages_config()
     table = PagesTable.open(spark, table_path, num_buckets)
     # only the first trigger that is not skipped runs the keys-only probe
-    # (as in PagesTable.apply_batches)
+    # (as in the replay loop, PagesTable.apply_batches)
     probe = True
     # threshold compaction runs on a maintenance thread and commits
     # between micro-batches — the trigger never pays the table-sized fold
@@ -135,19 +136,19 @@ def start_streaming_replay(
     def apply(batch_df, batch_id: int) -> None:
         nonlocal probe
         # batchId is stable across checkpointed restarts → the ledger key.
+        bid = f"stream-{batch_id}"
         if partial:
-            from ..operators.partial import apply_partial_batch
+            from ..operators.partial import partial_events
 
-            apply_partial_batch(table, f"stream-{batch_id}", batch_df, cfg)
-            return
+            if table._is_committed(table.manifest(), bid):
+                return  # a redelivered trigger runs no enrichment job
+            events, ddls = partial_events(table, batch_df, cfg), []
+        elif transform is not None or source is not None:
+            events, ddls = batch_df, None
+        else:
+            events, ddls = batch_df, _footer_ddls(batch_id)
         res = table.apply_batch(
-            f"stream-{batch_id}", batch_df, cfg, probe=probe,
-            ddls=(
-                None
-                if transform is not None or source is not None
-                else _footer_ddls(batch_id)
-            ),
-            inline_compact=False,
+            bid, events, cfg, probe=probe, ddls=ddls, inline_compact=False
         )
         if not res.get("skipped"):
             probe = False

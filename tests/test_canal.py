@@ -306,11 +306,11 @@ def test_canal_replay_reads_one_file_per_batch(spark, tmp_path, monkeypatch):
 
     seen = []
 
-    def spy(self, batch_id, events, cfg=None, **kw):
-        seen.append(sorted(events.inputFiles()))
-        return {"events_in": 0, "skipped": False}
+    def spy(self, batches, cfg=None, **kw):
+        seen.extend(sorted(events.inputFiles()) for _, events in batches)
+        return []
 
-    monkeypatch.setattr(pt.PagesTable, "apply_batch", spy)
+    monkeypatch.setattr(pt.PagesTable, "apply_batches", spy)
     replay_canal_json(spark, d_json, str(tmp_path / "t"), num_buckets=4)
     assert len(seen) == 3
     assert all(len(f) == 1 for f in seen)

@@ -155,11 +155,11 @@ def test_avro_replay_reads_one_file_per_batch(spark, tmp_path, monkeypatch):
 
     seen = []
 
-    def spy(self, batch_id, events, cfg=None, **kw):
-        seen.append(sorted(events.inputFiles()))
-        return {"events_in": 0, "skipped": False}
+    def spy(self, batches, cfg=None, **kw):
+        seen.extend(sorted(events.inputFiles()) for _, events in batches)
+        return []
 
-    monkeypatch.setattr(pt.PagesTable, "apply_batch", spy)
+    monkeypatch.setattr(pt.PagesTable, "apply_batches", spy)
     replay_debezium_avro(spark, d_avro, str(tmp_path / "t"), num_buckets=4)
     assert len(seen) == 3
     for files in seen:

@@ -3,6 +3,8 @@ exactly-once semantics intact."""
 
 import os
 
+import pytest
+
 from mysql_syncer_spark.oracle import sequential_replay
 from mysql_syncer_spark.plans.replay import replay
 from mysql_syncer_spark.sink.pages_table import PagesTable
@@ -58,7 +60,7 @@ def test_manifest_size_stays_flat_over_many_commits(spark, tmp_table_path):
             "new_dirs": {}, "lineage_rows": {}, "events_in": 0,
             "max_key_rows": 0,
         }
-        t._commit_batch(m, f"fileseq-{k}", empty_delta, 0, 0.0)
+        t._commit_batch(m, f"fileseq-{k}", empty_delta, [], 0.0)
         sizes.append(len(m.to_json()))
     assert t.n_committed() == 200
     assert t.manifest().committed_batches == []
@@ -69,7 +71,7 @@ def test_manifest_size_stays_flat_over_many_commits(spark, tmp_table_path):
     # out-of-order ids stay explicitly listed until the gap closes
     t._commit_batch(m, "fileseq-250", dict(
         new_dirs={}, lineage_rows={}, events_in=0, max_key_rows=0),
-        0, 0.0)
+        [], 0.0)
     assert t.manifest().committed_batches == ["fileseq-250"]
     assert t.manifest().ledger_watermarks["fileseq"] == 199
 
@@ -249,15 +251,17 @@ def test_gc_grace_window_protects_in_flight_writes(
     assert not os.path.exists(inflight)
 
 
-def test_ledger_gap_warns_on_skipped_id(spark, event_log_dir):
+@pytest.mark.parametrize("loop", ["apply_batch", "apply_batches"])
+def test_ledger_gap_warns_on_skipped_id(spark, event_log_dir, loop):
     """Skip-a-file resume: applying fileseq-N with N-1 neither committed
     nor explicit warns (the fold's contiguity contract is broken), while
-    the batch still applies; the contiguous next id stays silent."""
+    the batch still applies; contiguous next ids stay silent — in the
+    replay loop at depth 2 too, where the previous id is still in flight
+    when the next is submitted."""
     import tempfile
     import warnings
 
     import pyspark.sql.functions as F
-    import pytest
 
     from mysql_syncer_spark.sources.event_log import read_event_log
 
@@ -267,16 +271,24 @@ def test_ledger_gap_warns_on_skipped_id(spark, event_log_dir):
     t.apply_batch("fileseq-0", ev.filter(F.col("file_seq") == 0), None)
     assert t.manifest().ledger_watermarks.get("fileseq", -1) >= 0
 
-    # contiguous id: no warning
+    def apply(*ids):
+        batches = [
+            (f"fileseq-{k}", ev.filter(F.col("file_seq") == 1)) for k in ids
+        ]
+        if loop == "apply_batch":
+            return [t.apply_batch(bid, b, None) for bid, b in batches]
+        return t.apply_batches(batches, depth=2)
+
+    # contiguous ids: no warning
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        t.apply_batch("fileseq-1", ev.filter(F.col("file_seq") == 1), None)
+        apply(1, 2)
 
-    # gap: fileseq-2 skipped, fileseq-3 applied → warn but apply
-    with pytest.warns(UserWarning, match="skips uncommitted ids \\[2\\]"):
-        res = t.apply_batch("fileseq-3", ev.filter(F.col("file_seq") == 1), None)
+    # gap: fileseq-3 skipped, fileseq-4 applied → warn but apply
+    with pytest.warns(UserWarning, match="skips uncommitted ids \\[3\\]"):
+        (res,) = apply(4)
     assert res["skipped"] is not True
-    assert "fileseq-3" in t.manifest().committed_batches  # held explicit
+    assert "fileseq-4" in t.manifest().committed_batches  # held explicit
 
 
 def test_tiered_fold_leaves_base_untouched(spark, event_log_dir):

@@ -274,3 +274,31 @@ def test_streaming_partial_replay_equals_full(spark):
             timeout_sec=120,
         )
         assert PagesTable(spark, pb_path).n_committed() == n0
+
+
+def test_partial_stream_takes_the_full_image_trigger_path(spark):
+    """A MINIMAL tail makes the full-image trigger's sink call: only its
+    first trigger runs the keys-only probe, threshold folds run on the
+    stream's maintenance thread (trigger commits fold nothing, the folds
+    land as their own commits), and the final state equals a full
+    replay."""
+    from mysql_syncer_spark.streaming.runner import run_streaming_replay
+
+    with tempfile.TemporaryDirectory() as td:
+        fd, md = _logs(td)
+        pa_path = os.path.join(td, "pages_a")
+        replay(spark, fd, pa_path, num_buckets=4)
+        pb_path = os.path.join(td, "pages_b")
+        PagesTable.create(spark, pb_path, num_buckets=4, compact_threshold=1)
+        run_streaming_replay(
+            spark, md, pb_path, os.path.join(td, "ck"), num_buckets=4,
+            partial=True, timeout_sec=300,
+        )
+        tb = PagesTable(spark, pb_path)
+        hist = tb.metrics_history()
+        assert len(hist) == 4
+        assert [m["skew_probed"] for m in hist] == [True, False, False, False]
+        assert all(m["compacted_buckets"] == 0 for m in hist)
+        cols = ["url", "warc_ts", "html", "text", "lang"]
+        assert _sorted_rows(PagesTable(spark, pa_path).read(), cols) == \
+            _sorted_rows(tb.read(), cols)

@@ -178,6 +178,35 @@ def test_failed_compaction_never_fails_a_pipelined_replay(
     assert_state_equal(PagesTable(spark, path).read().collect(), oracle)
 
 
+def test_fold_commits_do_not_repeat_batch_metrics(spark, tmp_path):
+    """A depth-2 replay at compact_threshold=1 folds often: every fold
+    lands in a batch commit or its own maintenance commit, so
+    metrics_history() lists each batch once and its events_in sum to the
+    events applied, while history() keeps one row per version with 0
+    events on the maintenance rows."""
+    from mysql_syncer_spark.generator import GenSpec, generate_events, write_event_log
+
+    tbl = generate_events(GenSpec(n_events=1200, events_per_file=300))
+    log_dir = str(tmp_path / "log")
+    write_event_log(tbl, log_dir)
+    path = str(tmp_path / "pages")
+    PagesTable.create(spark, path, num_buckets=4, compact_threshold=1)
+    res = replay(spark, log_dir, path, num_buckets=4, pipeline_depth=2)
+    t = PagesTable(spark, path)
+    hist = t.metrics_history()
+    ids = [m["batch_id"] for m in hist]
+    assert ids == [f"fileseq-{k}" for k in range(4)]
+    assert sum(m["events_in"] for m in hist) == res["events_applied"] > 0
+    rows = t.history().collect()
+    assert [r["version"] for r in rows] == list(range(len(rows)))
+    maint = [r for r in rows if r["batch_id"] not in ids and r["version"] > 0]
+    assert maint and all(r["batch_id"].startswith("compact-v") for r in maint)
+    assert all(r["events_in"] == 0 and r["compacted_buckets"] > 0 for r in maint)
+    assert t.replication_lag_ms() is not None  # lag stamps carried forward
+    oracle, _, _ = sequential_replay(tbl)
+    assert_state_equal(t.read().collect(), oracle)
+
+
 def test_point_lookup_prunes_to_one_bucket(spark, replayed, event_table):
     """lookup(url) reads only the key's bucket and returns exactly the
     live row (or nothing for tombstoned/unknown urls)."""
@@ -226,7 +255,7 @@ def test_pipelined_crash_mid_stream_then_resume(spark, tmp_path_factory):
             yield f"fileseq-{seq}", batch
 
     with pytest.raises(Boom):
-        table.apply_batches_pipelined(interrupted(), cfg=cfg, depth=2)
+        table.apply_batches(interrupted(), cfg=cfg, depth=2)
     n_before = table.n_committed()
     assert n_before >= 1
 

@@ -93,7 +93,7 @@ def test_pipelined_commit_never_leaks_future_ddl(spark, tmp_table_path):
         {"kind": "add_column", "col": "extra", "new_name": None,
          "dtype": "string", "file_seq": 1, "log_pos": 10}
     ]}
-    t.apply_batches_pipelined(
+    t.apply_batches(
         [("b-0", b0), ("b-1", b1)], depth=4, ddl_index=ddl_index
     )
     # version 1 = b-0's commit: schema must NOT carry 'extra'
@@ -116,6 +116,34 @@ def _mk_events(spark, rows):
         " ddl struct<kind:string,col:string,new_name:string,dtype:string>"
     )
     return spark.createDataFrame(rows, schema)
+
+
+def test_replay_loop_collects_ddl_at_any_depth(spark, tmp_path):
+    """With no ``ddl_index`` the replay loop collects each batch's DDL at
+    submit, so a depth-2 run ends with the same schema and state as
+    depth 1 (and the oracle): ADD then RENAME lands ``extra_v2``."""
+    from mysql_syncer_spark.plans.replay import iter_tx_gated_batches
+
+    tbl = generate_events(GenSpec(n_events=1_200, events_per_file=300))
+    d = str(tmp_path / "log")
+    write_event_log(tbl, d)
+    oracle, cols, _ = sequential_replay(tbl)
+    got = {}
+    for depth in (1, 2):
+        t = PagesTable.create(spark, str(tmp_path / f"d{depth}"), num_buckets=4)
+        t.apply_batches(
+            ((f"fileseq-{s}", b) for s, b in iter_tx_gated_batches(spark, d)),
+            depth=depth,
+        )
+        df = t.read()
+        assert df.columns == cols, depth
+        got[depth] = (
+            t.manifest().schema,
+            sorted(tuple(r) for r in df.select("url", "extra_v2").collect()),
+        )
+    assert [n for n, _ in got[1][0]][-1] == "extra_v2"
+    assert got[2] == got[1]
+    assert dict(got[1][1]) == {u: row.get("extra_v2") for u, row in oracle.items()}
 
 
 def test_drop_column(spark, tmp_table_path):

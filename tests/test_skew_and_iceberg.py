@@ -243,11 +243,7 @@ def test_adaptive_planner_skips_probe_between_edges(spark, tmp_path):
         t = PagesTable.create(spark, str(tmp_path / loop), num_buckets=4)
         # b-0 is committed before the replay, so the replay skips it
         assert t.apply_batch("b-0", batches[0][1])["skew_probed"] is True
-        res = (
-            t.apply_batches_pipelined(batches, depth=2)
-            if loop == "pipelined"
-            else t.apply_batches(batches)
-        )
+        res = t.apply_batches(batches, depth=2 if loop == "pipelined" else 1)
         by_id = {r["batch_id"]: r for r in res}
         assert by_id["b-0"]["skipped"] is True, loop
         assert by_id["b-1"]["skew_probed"] is True, loop  # the probe passed on

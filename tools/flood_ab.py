@@ -4,12 +4,15 @@ final-state digest per replay, one JSON line each. Run it on two checkouts in
 turn (parent, change, parent, ...): ``python tools/flood_ab.py --seed 1 --cores 4``.
 Shapes: zipf, 100k zipf events in 1 file (dup share ~0.81); hot10, 100k events
 with one url on every 10th, the rest unique (~0.10); zipf4, 4 files of 60k zipf
-events, pipelined at depth 4."""
+events, pipelined at depth 4; serial40, 40 files of 2,000 zipf events at depth 1,
+so threshold folds fire on the serial path. ``--shapes serial40`` runs a subset
+(the warm-up replay always runs)."""
 
 import argparse
 import hashlib
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -52,14 +55,17 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--cores", type=int, default=4)
+    ap.add_argument("--shapes", default="zipf,hot10,zipf4,serial40")
     args = ap.parse_args()
     spark, work = get_spark(cores=args.cores), tempfile.mkdtemp(prefix="flood_ab_")
     gen = lambda n, per_file: generate_events(GenSpec(  # noqa: E731
         n_events=n, events_per_file=per_file, n_urls=1_000_000, ddl_scenario=(), seed=args.seed))
     shapes = [("warmup", lambda: gen(5_000, 5_000), 1), ("zipf", lambda: gen(100_000, 100_000), 1),
               ("hot10", lambda: one_hot_key(gen(100_000, 100_000)), 1),
-              ("zipf4", lambda: gen(240_000, 60_000), 4)]  # (name, log builder, pipeline depth)
-    for name, events, depth in shapes:
+              ("zipf4", lambda: gen(240_000, 60_000), 4),
+              ("serial40", lambda: gen(80_000, 2_000), 1)]  # (name, log builder, pipeline depth)
+    wanted = {"warmup", *args.shapes.split(",")}
+    for name, events, depth in (s for s in shapes if s[0] in wanted):
         log, path = os.path.join(work, name, "log"), os.path.join(work, name, "pages")
         write_event_log(events(), log)
         c0, t0 = tree_cpu_s(), time.time()
@@ -70,9 +76,12 @@ def main() -> None:
         if name != "warmup":  # the warm-up replay pays JVM and UDF-worker start
             keys = ("skew_probed", "dup_share", "salted_merge", "prefiltered")  # parent and change
             plans = [{k: b[k] for k in keys if k in b} for b in res["batches"]]
+            folded = sum(b.get("compacted_buckets", 0) for b in res["batches"])  # folds landed in batch commits
             print(json.dumps({"shape": name, "seed": args.seed, "wall_s": round(wall, 3), "cpu_s": round(cpu, 3),
-                              "rows": len(rows), "digest": digest[:16], "plans": plans}), flush=True)
+                              "rows": len(rows), "digest": digest[:16], "folded_in_batches": folded,
+                              "plans": plans}), flush=True)
     spark.stop()
+    shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":
