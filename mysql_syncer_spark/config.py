@@ -21,7 +21,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
 
 
 @dataclass(frozen=True)
@@ -38,9 +38,12 @@ class TableConfig:
     name: str  # "web.pages"
     key_columns: tuple[str, ...] = ("url",)
     on_delete: str = "delete"
-    # Optional vectorized payload transform (e.g. html→text extraction),
-    # applied to the batch DataFrame before merge. Must be pure/deterministic.
-    transform: Callable[[DataFrame], DataFrame] | None = field(
+    # Optional vectorized payload transform (e.g. html→text extraction):
+    # pyarrow.Table -> pyarrow.Table with the same columns, applied to the
+    # merge winners inside the sink's Arrow write pass (one executor pass
+    # per task; see sink/pages_table.py ``_bucket_writer``). It runs on
+    # the executors, so it must pickle, and be pure/deterministic.
+    transform: Callable[[pa.Table], pa.Table] | None = field(
         default=None, compare=False
     )
     # Columns `transform` DERIVES from other payload columns (derived wire

@@ -1,17 +1,19 @@
 """Text extraction / normalization / analysis over web-page payloads.
 
 Extraction determinism contract (BASELINE.json input_hint): ``text`` must be
-byte-identical per url between the engine's vectorized UDF and the oracle's
-pure-Python fold. Both paths therefore share ONE pure function over bytes
-(``extract_text_bytes``) with no locale-, version-, or library-dependent
-behavior — ASCII-regex tag stripping + whitespace collapse + HTML entity
-subset, nothing else.
+byte-identical per url between the engine and the oracle's pure-Python
+fold. ``extract_text_bytes`` is THE spec — ASCII-regex tag stripping +
+HTML entity subset + whitespace collapse, with no locale-, version-, or
+library-dependent behavior.
 
-Two engine implementations are provided:
-- ``with_extracted_text(df, impl='pandas')`` — Arrow-batched pandas UDF
-  (the input_hint-mandated path; pandas str ops, no per-row Python loop).
-- ``impl='sql'`` — pure JVM regexp_replace chain (whole-stage codegen,
-  fastest; used to cross-check the UDF in tests).
+The engine runs ONE vectorized re-expression of it, ``extract_text_arrow``
+(pyarrow compute / RE2 over a whole Arrow array, no per-row Python call).
+It serves the pages sink's fill (``fill_text_arrow``, run inside the
+sink's Arrow write pass, so the payload crosses into Python once), the
+``with_filled_text`` Arrow UDF and ``with_extracted_text(impl='arrow')``.
+``impl='sql'`` is a pure JVM regexp_replace chain used to cross-check it
+in tests (Java's ``\\s`` is ASCII-only, so it differs on Unicode
+whitespace).
 
 The analysis helpers (language ID, quality score, token count,
 fingerprint) are JVM built-ins end-to-end — these run in the 100 TB hot
@@ -22,11 +24,12 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 _TAG_RE = re.compile(r"<[^>]*>")
 _WS_RE = re.compile(r"\s+")
@@ -35,10 +38,32 @@ _ENTITIES = [("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"')]
 _TAG_PAT = r"<[^>]*>"
 _WS_PAT = r"\s+"
 
+# Python's str ``\s`` is exactly these 29 code points (str.isspace()); RE2's
+# ``\s`` is ASCII-only, so the Arrow kernel spells the class out.
+_WS_CODEPOINTS = (
+    0x09, 0x0A, 0x0B, 0x0C, 0x0D, 0x1C, 0x1D, 0x1E, 0x1F, 0x20, 0x85, 0xA0,
+    0x1680, 0x2000, 0x2001, 0x2002, 0x2003, 0x2004, 0x2005, 0x2006, 0x2007,
+    0x2008, 0x2009, 0x200A, 0x2028, 0x2029, 0x202F, 0x205F, 0x3000,
+)
+
+
+def _re2_class(cps) -> str:
+    return "[" + "".join(f"\\x{{{c:x}}}" for c in cps) + "]"
+
+
+# ``\s+`` -> " " rewrites every single space to itself; matching only runs
+# of two or more, or one non-space whitespace character, gives the same
+# result without touching the (most common) single spaces.
+_WS_ARROW = (
+    _re2_class(_WS_CODEPOINTS)
+    + "{2,}|"
+    + _re2_class(c for c in _WS_CODEPOINTS if c != 0x20)
+)
+
 
 def extract_text_bytes(html: bytes) -> str:
-    """Pure deterministic html→text. THE spec — oracle and UDF both call
-    this logic (the UDF re-expresses it with vectorized pandas str ops)."""
+    """Pure deterministic html→text. THE spec — the oracle calls it, and
+    ``extract_text_arrow`` re-expresses it over Arrow arrays."""
     s = html.decode("utf-8", errors="replace")
     s = _TAG_RE.sub(" ", s)
     for ent, ch in _ENTITIES:
@@ -46,15 +71,60 @@ def extract_text_bytes(html: bytes) -> str:
     return _WS_RE.sub(" ", s).strip()
 
 
-@pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """Arrow-batched extraction: vectorized pandas string ops over the whole
-    batch (no per-row Python function calls)."""
-    s = html.str.decode("utf-8", errors="replace")
-    s = s.str.replace(_TAG_PAT, " ", regex=True)
+def extract_text_arrow(html):
+    """``extract_text_bytes`` over a binary Arrow array (or chunked array):
+    a string array, NULL where ``html`` is NULL. Decoding is a validating
+    cast; only a batch the cast rejects (invalid UTF-8 somewhere) falls
+    back to Python's ``decode("utf-8", "replace")``. After the decode
+    every step is one RE2 / string kernel over the whole array, and once
+    whitespace runs are single spaces, trimming spaces is ``strip()``."""
+    try:
+        s = pc.cast(html, pa.string())
+    except pa.ArrowInvalid:
+        s = pa.array(
+            [
+                None if b is None else b.decode("utf-8", errors="replace")
+                for b in html.to_pylist()
+            ],
+            pa.string(),
+        )
+    s = pc.replace_substring_regex(s, _TAG_PAT, " ")
     for ent, ch in _ENTITIES:
-        s = s.str.replace(ent, ch, regex=False)
-    return s.str.replace(_WS_PAT, " ", regex=True).str.strip()
+        s = pc.replace_substring(s, ent, ch)
+    s = pc.replace_substring_regex(s, _WS_ARROW, " ")
+    return pc.utf8_trim(s, " ")
+
+
+def _filled(html, text):
+    """``text`` with ONLY its missing entries (html present, text NULL)
+    extracted; rows that already carry text pass through untouched."""
+    need = pc.and_(pc.is_null(text), pc.is_valid(html))
+    if not pc.any(need).as_py():
+        return text
+    if isinstance(text, pa.ChunkedArray):
+        text, need = text.combine_chunks(), need.combine_chunks()
+    got = extract_text_arrow(pc.filter(html, need)).cast(text.type)
+    if isinstance(got, pa.ChunkedArray):
+        got = got.combine_chunks()
+    return pc.replace_with_mask(text, need, got)
+
+
+def fill_text_arrow(
+    table: pa.Table, html_col: str = "html", text_col: str = "text"
+) -> pa.Table:
+    """The pages sink's transform (``TableConfig.transform``, Arrow table →
+    Arrow table): fills ONLY missing text — merge winners from the change
+    stream — so extraction cost scales with newly-won rows, not table
+    rows; current-state winners and tombstones pass through untouched."""
+    i = table.schema.get_field_index(text_col)
+    return table.set_column(
+        i, text_col, _filled(table[html_col], table[text_col])
+    )
+
+
+@arrow_udf(T.StringType())
+def _fill_text_udf(html: pa.Array, text: pa.Array) -> pa.Array:
+    return _filled(html, text)
 
 
 def extract_text_sql(html: Column) -> Column:
@@ -66,40 +136,22 @@ def extract_text_sql(html: Column) -> Column:
     return F.trim(F.regexp_replace(s, _WS_PAT, " "))
 
 
-@pandas_udf(T.StringType())
-def fill_text_udf(html: pd.Series, text: pd.Series) -> pd.Series:
-    """Extraction that fills ONLY missing text (merge winners coming from
-    the change stream); rows that already carry text (current-state
-    winners, tombstones) pass through untouched — so post-merge extraction
-    costs scale with newly-won rows, not table rows."""
-    need = text.isna() & html.notna()
-    if not need.any():
-        return text
-    s = html[need].str.decode("utf-8", errors="replace")
-    s = s.str.replace(_TAG_PAT, " ", regex=True)
-    for ent, ch in _ENTITIES:
-        s = s.str.replace(ent, ch, regex=False)
-    s = s.str.replace(_WS_PAT, " ", regex=True).str.strip()
-    out = text.copy()
-    out[need] = s
-    return out
-
-
 def with_filled_text(
     df: DataFrame, html_col: str = "html", text_col: str = "text"
 ) -> DataFrame:
-    return df.withColumn(text_col, fill_text_udf(F.col(html_col), F.col(text_col)))
+    """``fill_text_arrow`` as a DataFrame column (an Arrow UDF)."""
+    return df.withColumn(text_col, _fill_text_udf(F.col(html_col), F.col(text_col)))
 
 
 def with_extracted_text(
-    df: DataFrame, html_col: str = "html", out_col: str = "text", impl: str = "pandas"
+    df: DataFrame, html_col: str = "html", out_col: str = "text", impl: str = "arrow"
 ) -> DataFrame:
-    if impl == "pandas":
-        col = extract_text_udf(F.col(html_col))
+    if impl == "arrow":
+        col = _fill_text_udf(F.col(html_col), F.lit(None).cast("string"))
     elif impl == "sql":
         col = extract_text_sql(F.col(html_col))
     else:
-        raise ValueError(f"impl must be pandas|sql, got {impl}")
+        raise ValueError(f"impl must be arrow|sql, got {impl}")
     return df.withColumn(
         out_col, F.when(F.col(html_col).isNotNull(), col).otherwise(F.lit(None))
     )

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import TableConfig
-from ..functions.text import with_extracted_text, with_filled_text
+from ..functions.text import fill_text_arrow
 from ..operators.routing import filter_and_split, ordered_ddls
 from ..sink.pages_table import PagesTable
 from ..sources.event_log import read_event_log
@@ -34,21 +34,15 @@ from ..sources.event_log import read_event_log
 _BINLOG_RE = re.compile(r"binlog-(\d+)\.parquet$")
 
 
-def default_pages_config(text_impl: str = "pandas") -> TableConfig:
-    """web.pages binding. The transform runs on MERGE WINNERS (post-LWW):
-    the fill-missing extractor touches only rows newly won from the change
-    stream (current-state winners already carry text), so extraction cost
-    scales with the batch's unique winning urls, not table size or raw
-    event count."""
-
-    def transform(df: DataFrame) -> DataFrame:
-        if text_impl == "pandas":
-            return with_filled_text(df, "html", "text")
-        return with_extracted_text(df, "html", "text", impl=text_impl)
-
+def default_pages_config() -> TableConfig:
+    """web.pages binding. The transform runs on MERGE WINNERS (post-LWW),
+    inside the sink's Arrow write pass: the fill-missing extractor touches
+    only rows newly won from the change stream (current-state winners
+    already carry text), so extraction cost scales with the batch's unique
+    winning urls, not table size or raw event count."""
     return TableConfig(
         name="web.pages",
-        transform=transform,
+        transform=fill_text_arrow,
         derived_columns={"text": ("html",)},
     )
 

@@ -53,11 +53,13 @@ def get_spark(
         # smaller input splits: the scan + map-side partial agg is the bulk
         # of CDC replay work; 128m splits under-parallelize medium files
         .config("spark.sql.files.maxPartitionBytes", "32m")
-        # per-batch commit-floor trims (measured ~20% off a small-batch
-        # delta write at 4 cores): no _SUCCESS markers (the engine's own
-        # manifest is the commit record), direct-rename committer v2, no
-        # parquet summary files. On object storage you would swap these
-        # for a cloud-native committer (magic/S3A), same motivation.
+        # Hadoop committer trims for the tables Spark itself writes (the
+        # corpus sink; the pages sink writes its files from one
+        # mapInArrow pass with pyarrow and runs no committer): no
+        # _SUCCESS markers (the engine's own manifest is the commit
+        # record), direct-rename committer v2, no parquet summary files.
+        # On object storage you would swap these for a cloud-native
+        # committer (magic/S3A), same motivation.
         .config("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .config("mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("parquet.summary.metadata.level", "NONE")

@@ -94,6 +94,16 @@ def apply_batch_iceberg(
         state, list(cfg.key_columns), ["_lww_ts_us", "_lww_file", "_lww_pos"]
     )
     if cfg.transform is not None:
-        deduped = cfg.transform(deduped)
+        # the Arrow-level transform (same columns in, same columns out)
+        # runs in one mapInArrow pass, as in the pages sink's writer
+        fn = cfg.transform
+
+        def transform(batches):
+            import pyarrow as pa
+
+            for rb in batches:
+                yield from fn(pa.Table.from_batches([rb])).to_batches()
+
+        deduped = deduped.mapInArrow(transform, deduped.schema)
     deduped.createOrReplaceTempView("batch_updates")
     spark.sql(build_merge_sql(table_ident, deduped.columns, cfg.key_columns[0]))

@@ -38,12 +38,19 @@ a storage change, not a semantics change:
   rs_filter_binlog.c:22-27 semantics).
 - **Lineage + metrics** (D5): per-bucket {writing batch, rows, files} in
   the manifest; per-commit metrics history readable via ``metrics_history``.
+- **One write pass**: every write (batch deltas, threshold folds,
+  ``compact``, ``backfill``, ``rebucket``) is one ``mapInArrow`` over the
+  bucket-merged frame (``_bucket_writer``): each task applies the table's
+  Arrow ``transform`` (the text fill) and writes one parquet file per
+  bucket with pyarrow, so the payload enters Python once and no Hadoop
+  committer runs; the tasks' ``(bucket, rows)`` are the lineage.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -95,6 +102,68 @@ def _apply_fold(m: "Manifest", fold, bid: str) -> int:
     return n
 
 
+def _bucket_writer(out: str, transform=None, physical: dict | None = None):
+    """The ``mapInArrow`` function of one snapshot write into ``out``. A
+    task applies ``transform`` (Arrow table -> Arrow table) to its rows,
+    writes each bucket it holds to ``out/_bucket=B/part-<partition>
+    .parquet`` with pyarrow, and yields ``(_bucket, rows)`` per file.
+    ``physical`` renames generation-bound columns to their on-disk names
+    after the transform (``_align`` maps them back on every read).
+
+    Each file is written under ``out/_tmp/`` and moved into place with
+    ``os.replace``, so a reader never sees half a file and a retried task
+    attempt replaces the same name; ``_write_snapshot`` removes ``_tmp/``
+    after the job. Only columns other than the payload get parquet statistics
+    (readers prune row groups on the key and rank, never on a page), and
+    no Arrow schema is embedded: the manifest is the table's schema."""
+    phys = physical or {}
+
+    def write(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        part = TaskContext.get().partitionId()
+        writers: dict[int, list] = {}  # bucket -> [writer, tmp path, rows]
+        for rb in batches:
+            t = pa.Table.from_batches([rb])
+            if transform is not None:
+                t = transform(t)
+            buckets = t["_bucket"]
+            t = t.drop_columns(["_bucket"])
+            stats = [phys.get(c, c) for c in t.column_names if c not in _PAYLOAD_COLUMNS]
+            t = t.rename_columns([phys.get(c, c) for c in t.column_names])
+            for b in pc.unique(buckets).to_pylist():
+                if b not in writers:
+                    tmp = os.path.join(
+                        out, "_tmp", f"{b}-{part}-{uuid.uuid4().hex[:8]}.parquet"
+                    )
+                    os.makedirs(os.path.dirname(tmp), exist_ok=True)
+                    w = pq.ParquetWriter(
+                        tmp, t.schema, compression="snappy",
+                        write_statistics=stats, store_schema=False,
+                    )
+                    writers[b] = [w, tmp, 0]
+                piece = t.filter(pc.equal(buckets, b))
+                writers[b][0].write_table(piece)
+                writers[b][2] += piece.num_rows
+        for b, (w, tmp, _) in writers.items():
+            w.close()
+            final = os.path.join(out, f"_bucket={b}")
+            os.makedirs(final, exist_ok=True)
+            os.replace(tmp, os.path.join(final, f"part-{part:05d}.parquet"))
+        if writers:
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "_bucket": pa.array(list(writers), pa.int32()),
+                    "rows": pa.array([n for _, _, n in writers.values()], pa.int64()),
+                }
+            )
+
+    return write
+
+
 def _already_committed(bid: str) -> dict:
     return {"batch_id": bid, "skipped": True, "reason": "already committed"}
 
@@ -112,6 +181,10 @@ _HIDDEN_DDL = [
     ["_lww_file", "int"],
     ["_deleted", "boolean"],
 ]
+
+# Payload columns: no reader prunes on them, so their parquet statistics
+# (min/max of whole pages) would only bloat every footer.
+_PAYLOAD_COLUMNS = ("html", "text")
 
 # Tiered compaction: a fold touches the bucket's base vintage only when
 # the delta tail has grown to this fraction of it (see _plan_fold).
@@ -546,10 +619,10 @@ class PagesTable:
         [winner pre-filter] → repartition by bucket (the one payload shuffle) →
         groupBy(bucket, key) LWW max_by — batch dedup and merge collapse
         into one aggregate, and hash(bucket) already satisfies its
-        distribution so NO second exchange → transform (D4: extraction
-        fills only newly-won rows) → bucket-partitioned write with no
-        repartition (data is already bucket-clustered) → atomic manifest
-        commit (ledger + lineage).
+        distribution so NO second exchange → one mapInArrow write pass:
+        the Arrow transform (D4: extraction fills only newly-won rows) and
+        one pyarrow file per bucket, no repartition (data is already
+        bucket-clustered) → atomic manifest commit (ledger + lineage).
         """
         t0 = time.time()
         bid = str(batch_id)
@@ -824,7 +897,7 @@ class PagesTable:
 
     def _bucket_merge(self, src: DataFrame, key_columns: list[str]) -> DataFrame:
         """One winner per (bucket, key): repartition by bucket so the
-        aggregate AND the partitionBy write share one exchange."""
+        aggregate AND the bucket write share one exchange."""
         from ..operators.dedup import rank_struct  # local: avoid cycle
 
         data_cols = [c for c in src.columns if c != "_bucket"]
@@ -950,9 +1023,9 @@ class PagesTable:
                     .drop("_pf_rank", *[f"_pf_{k}" for k in cfg.key_columns])
                 )
             merged = self._bucket_merge(src, list(cfg.key_columns))
-            if cfg.transform is not None:
-                merged = cfg.transform(merged)
-            new_dirs, lineage_rows = self._write_snapshot(merged, physical)
+            new_dirs, lineage_rows = self._write_snapshot(
+                merged, physical, cfg.transform
+            )
         if not probe:
             if new_dirs:
                 got = obs.get
@@ -980,27 +1053,28 @@ class PagesTable:
         }
 
     def _write_snapshot(
-        self, df: DataFrame, physical: dict | None = None
+        self, df: DataFrame, physical: dict | None = None, transform=None
     ) -> tuple[dict[str, str], dict[str, int]]:
-        if physical:
-            # generation-bound columns land on disk under their physical
-            # name; _align maps them back to logical on every read
-            df = df.withColumnsRenamed(
-                {lg: p for lg, p in physical.items() if lg in df.columns}
-            )
+        """Write a bucket-clustered frame (a ``_bucket`` column plus the
+        stored columns) as one new delta dir in ONE ``mapInArrow`` pass
+        (``_bucket_writer``): ``transform`` runs on each task's Arrow rows
+        and pyarrow writes one file per bucket, so the rows cross into
+        Python once and no Hadoop committer runs. Returns (bucket → dir,
+        bucket → rows), both from the rows the tasks yield."""
         # uuid suffix: a crashed attempt's orphan dir can never collide
         # with the retry's write (orphans are GC-able via vacuum()).
         rel = os.path.join("data", f"d-{uuid.uuid4().hex[:12]}")
         out = os.path.join(self.path, rel)
-        # already hash-clustered by _bucket → partitionBy writes one file
-        # per bucket with NO extra shuffle
-        df.write.mode("error").partitionBy("_bucket").parquet(out)
-        dirs = {
-            e.split("=", 1)[1]: os.path.join(rel, e)
-            for e in os.listdir(out)
-            if e.startswith("_bucket=")
-        }
-        return dirs, self._footer_rowcounts(out)
+        try:
+            written = df.mapInArrow(
+                _bucket_writer(out, transform, physical), "_bucket int, rows long"
+            ).collect()
+        finally:
+            shutil.rmtree(os.path.join(out, "_tmp"), ignore_errors=True)
+        rows: dict[str, int] = {}
+        for b, n in written:
+            rows[str(b)] = rows.get(str(b), 0) + n
+        return {b: os.path.join(rel, f"_bucket={b}") for b in rows}, rows
 
     def _dir_bytes(self, rel: str) -> int:
         p = os.path.join(self.path, rel)
@@ -1325,25 +1399,6 @@ class PagesTable:
         else:
             raise ValueError(f"unknown DDL kind {kind}")
 
-    @staticmethod
-    def _footer_rowcounts(out_dir: str) -> dict[str, int]:
-        """Per-bucket row counts from parquet footers — metadata-only, no
-        extra Spark action (Iceberg gets these from commit stats)."""
-        import pyarrow.parquet as pq
-
-        counts: dict[str, int] = {}
-        for entry in os.listdir(out_dir):
-            if not entry.startswith("_bucket="):
-                continue
-            b = entry.split("=", 1)[1]
-            total = 0
-            d = os.path.join(out_dir, entry)
-            for fn in os.listdir(d):
-                if fn.endswith(".parquet"):
-                    total += pq.read_metadata(os.path.join(d, fn)).num_rows
-            counts[b] = total
-        return counts
-
     # ------------------------------------------------------------------
     # maintenance (Iceberg expire_snapshots / remove_orphan_files parity)
     # ------------------------------------------------------------------
@@ -1382,8 +1437,6 @@ class PagesTable:
         file ever referenced them) are held for ``grace_sec`` so an
         in-flight writer's uncommitted deltas survive a concurrent
         vacuum/expire — after the grace they are crash orphans."""
-        import shutil
-
         data_root = os.path.join(self.path, "data")
         now = time.time()
         removed, skipped, freed = [], [], 0

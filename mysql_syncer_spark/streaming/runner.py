@@ -26,8 +26,26 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import TableConfig
+from ..plans.replay import _BINLOG_RE, ddl_rows_from_footers, default_pages_config
 from ..sink.pages_table import PagesTable
 from ..sources.event_log import stream_event_log
+
+
+def _log_entries(path: str):
+    """(batchId, input file) of each entry of one FileStreamSource log
+    file. Entries are URIs, so ``file:`` paths are decoded with
+    ``urlparse`` + ``unquote`` (a space is ``%20`` there); other schemes
+    are returned as written."""
+    with open(path) as f:
+        for line in f:
+            line = line.strip()
+            if not line.startswith("{"):
+                continue  # the log's version header
+            e = json.loads(line)
+            u = urlparse(e.get("path", ""))
+            yield e.get("batchId"), (
+                unquote(u.path) if u.scheme in ("", "file") else e["path"]
+            )
 
 
 def batch_source_files(checkpoint_dir: str, batch_id: int) -> list[str]:
@@ -36,34 +54,121 @@ def batch_source_files(checkpoint_dir: str, batch_id: int) -> list[str]:
     ``checkpoint_dir`` — a driver-side file read, no Spark job. The
     batch's entries are in ``sources/0/<batchId>``, or, once the log has
     rolled up, among the entries of ``sources/0/<batchId>.compact`` (each
-    entry carries its batchId). Entries are URIs, so ``file:`` paths are
-    decoded with ``urlparse`` + ``unquote`` (a space is ``%20`` there);
-    other schemes are returned as written.
+    entry carries its batchId).
 
     Reading only ``sources/0`` is correct because the runner uses footer
     DDLs only when it built the query's one source itself (no ``source``
     or ``transform`` argument): a query with a single source checkpoints
     it as source 0."""
     d = os.path.join(checkpoint_dir, "sources", "0")
-    out: list[str] = []
-    for fn in (str(batch_id), f"{batch_id}.compact"):
-        p = os.path.join(d, fn)
-        if not os.path.exists(p):
+    p = os.path.join(d, str(batch_id))
+    if os.path.exists(p):
+        return [f for _, f in _log_entries(p)]
+    p += ".compact"
+    if os.path.exists(p):
+        return [f for b, f in _log_entries(p) if b == batch_id]
+    return []
+
+
+def _source_log_files(checkpoint_dir: str, below: int) -> list[str]:
+    """Every input file of the triggers before ``below``, from all of the
+    checkpoint's ``sources/0`` log files (plain and ``.compact``)."""
+    d = os.path.join(checkpoint_dir, "sources", "0")
+    if not os.path.isdir(d):
+        return []
+    out: set[str] = set()
+    for fn in os.listdir(d):
+        head = fn.split(".")[0]
+        if not head.isdigit():
             continue
-        with open(p) as f:
-            for line in f:
-                line = line.strip()
-                if not line.startswith("{"):
-                    continue  # the log's version header
-                e = json.loads(line)
-                if fn.endswith(".compact") and e.get("batchId") != batch_id:
-                    continue
-                u = urlparse(e.get("path", ""))
-                out.append(
-                    unquote(u.path) if u.scheme in ("", "file") else e["path"]
+        for b, f in _log_entries(os.path.join(d, fn)):
+            if (int(head) if b is None else b) < below:
+                out.add(f)
+    return sorted(out)
+
+
+class _FooterDdls:
+    """Each trigger's DDL rows from binlog footers, applied in binlog-seq
+    order whatever order the file source delivers the files in.
+
+    The file source orders files by modification time, and files whose
+    mtimes tie (a coarse file-system clock, or a rotation within one
+    tick) come in listing order, so ``binlog-5`` can arrive before
+    ``binlog-4``. LWW ranks rows by (ts, file, pos), so rows land right in
+    any order; DDL must not: if file 4 adds a column and file 5's rows
+    are applied first, their values for it are lost. So a trigger whose
+    highest seq is ``s`` applies the DDL of every binlog file in the
+    directory with a seq above the highest seq delivered so far, up to
+    ``s`` — the DDL of a file the source has not delivered yet goes in
+    ahead of its rows, which is safe: ADD, RENAME and WIDEN change target
+    columns, never wire names, so the rows map as they would have.
+
+    A late file (seq below the highest delivered) therefore brings no
+    DDL. ``for_trigger`` raises before anything is written when one
+    brings DDL that is not yet in effect (the file appeared only after a
+    later file was applied, whose rows then missed that DDL) or when a
+    later applied file dropped a column (its rows could land in a
+    re-added column of the same name)."""
+
+    def __init__(self, event_dir: str, table_name: str, max_seq: int):
+        self._dir, self._name = event_dir, table_name
+        self.max_seq = max_seq
+        self._rows: dict[str, list[dict] | None] = {}  # footer cache
+
+    def _by_seq(self, paths) -> dict[int, list[dict]] | None:
+        """binlog seq -> footer DDL rows for the table; None when a file is
+        not a ``binlog-<seq>`` file carrying the footer index."""
+        out: dict[int, list[dict]] = {}
+        for p in paths:
+            m = _BINLOG_RE.search(p)
+            if m is None:
+                return None
+            if p not in self._rows:
+                self._rows[p] = ddl_rows_from_footers([p], self._name)
+            if self._rows[p] is None:
+                return None
+            out[int(m.group(1))] = self._rows[p]
+        return out
+
+    def for_trigger(self, batch_id: int, files: list[str], table) -> list | None:
+        """The DDL rows to apply with the trigger delivering ``files``, or
+        None when its files do not all carry the footer index."""
+        got = self._by_seq(files) if files else None
+        if got is None:
+            return None
+        listing = {}
+        for fn in os.listdir(self._dir):
+            m = _BINLOG_RE.search(fn)
+            if m:
+                listing[int(m.group(1))] = os.path.join(self._dir, fn)
+        hi = max(got)
+        span = self._by_seq(
+            [p for x, p in listing.items() if self.max_seq < x <= hi]
+        )
+        if span is None:
+            return None
+        span.update({x: rows for x, rows in got.items() if x > self.max_seq})
+        late = sorted(x for x in got if x < self.max_seq)
+        if late:
+            m = table.manifest()
+            before = m.to_json()
+            for x in late:
+                for d in got[x]:
+                    table._apply_ddl(m, d)
+            after = self._by_seq(
+                [listing[x] for x in listing if late[0] < x <= self.max_seq]
+            ) or {}
+            if m.to_json() != before or any(
+                d.get("kind") == "drop_column" for rows in after.values() for d in rows
+            ):
+                raise RuntimeError(
+                    f"trigger {batch_id} delivers binlog seq(s) {late} after seq "
+                    f"{self.max_seq} was applied, and their DDL is not in "
+                    "effect or a later file dropped a column: applying them "
+                    "would map rows under the wrong schema"
                 )
-        break
-    return out
+        self.max_seq = max(self.max_seq, hi)
+        return [d for x in sorted(span) for d in span[x]]
 
 
 def start_streaming_replay(
@@ -105,8 +210,6 @@ def start_streaming_replay(
     compaction — checkpointed batchIds stay the ledger keys, so
     kill/resume semantics are identical to the full-image tail."""
     if cfg is None:
-        from ..plans.replay import default_pages_config
-
         cfg = default_pages_config()
     table = PagesTable.open(spark, table_path, num_buckets)
     # only the first trigger that is not skipped runs the keys-only probe
@@ -118,20 +221,25 @@ def start_streaming_replay(
     # micro-batch tripled its latency)
     compactor = table.async_compactor()
 
+    footer: _FooterDdls | None = None  # seeded from the checkpoint once
+
     def _footer_ddls(batch_id: int) -> list | None:
-        """Micro-batch DDL rows from the source files' parquet footers —
+        """Micro-batch DDL rows from the binlog files' parquet footers —
         skips the per-batch DDL collect job entirely when every file in
         the trigger carries the writer's ``msss.ddl`` index (same filters
-        as the scan path; foreign logs return None and fall back)."""
-        from ..plans.replay import _BINLOG_RE, ddl_rows_from_footers
-
+        as the scan path; foreign logs return None and fall back). DDL
+        applies in binlog-seq order whatever order the files arrive in
+        (``_FooterDdls``)."""
+        nonlocal footer
         try:
             files = batch_source_files(checkpoint_dir, batch_id)
         except Exception:
             return None
-        if not files or not all(_BINLOG_RE.search(f) for f in files):
-            return None
-        return ddl_rows_from_footers(files, cfg.name)
+        if footer is None:
+            seen = _source_log_files(checkpoint_dir, batch_id)
+            seqs = [int(m.group(1)) for m in map(_BINLOG_RE.search, seen) if m]
+            footer = _FooterDdls(event_dir, cfg.name, max(seqs, default=-1))
+        return footer.for_trigger(batch_id, files, table)
 
     def apply(batch_df, batch_id: int) -> None:
         nonlocal probe

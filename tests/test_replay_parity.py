@@ -4,7 +4,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from mysql_syncer_spark.config import TableConfig
-from mysql_syncer_spark.functions.text import with_extracted_text
+from mysql_syncer_spark.functions.text import fill_text_arrow
 from mysql_syncer_spark.oracle import _to_us, sequential_replay
 from mysql_syncer_spark.plans.replay import default_pages_config, replay
 from mysql_syncer_spark.sink.pages_table import PagesTable
@@ -68,7 +68,7 @@ def test_on_delete_ignore_reference_parity(
     cfg = TableConfig(
         name="web.pages",
         on_delete="ignore",
-        transform=lambda df: with_extracted_text(df, "html", "text"),
+        transform=lambda t: fill_text_arrow(t, "html", "text"),
     )
     replay(spark, event_log_dir, tmp_table_path, cfg=cfg, num_buckets=8)
     oracle, _, _ = sequential_replay(event_table, on_delete="ignore")

@@ -236,3 +236,90 @@ def test_failed_compaction_never_fails_the_stream(spark, tmp_path, monkeypatch):
     assert res["n_commits"] == 4
     oracle, _, _ = sequential_replay(tbl)
     assert_state_equal(PagesTable(spark, table_path).read().collect(), oracle)
+
+
+def _mtime_ordered_log(order):
+    """A 6-file log dir (ADD COLUMN in file 2, RENAME in file 4) whose
+    files' mtimes put them in ``order`` for the file source."""
+    import os
+    import tempfile
+
+    from mysql_syncer_spark.generator import GenSpec, generate_events, write_event_log
+
+    tbl = generate_events(GenSpec(n_events=600, events_per_file=100, seed=5))
+    d = tempfile.mkdtemp(prefix="evlog_order_")
+    write_event_log(tbl, d)
+    t0 = time.time() - 3600
+    for rank, seq in enumerate(order):
+        p = os.path.join(d, f"binlog-{seq:06d}.parquet")
+        os.utime(p, (t0 + rank, t0 + rank))
+    return d
+
+
+def _footer_ddl_seqs(d):
+    import os
+
+    from mysql_syncer_spark.plans.replay import ddl_rows_from_footers
+
+    return sorted(
+        {
+            r["file_seq"]
+            for r in ddl_rows_from_footers(
+                [os.path.join(d, f) for f in os.listdir(d)], "web.pages"
+            )
+        }
+    )
+
+
+def _assert_equals_replay(spark, log, path, tmp_path):
+    from mysql_syncer_spark.plans.replay import replay
+
+    ref = str(tmp_path / "ref")
+    replay(spark, log, ref, num_buckets=8)
+    got = PagesTable(spark, path).read()
+    want = PagesTable(spark, ref).read()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.select(*got.columns).collect())
+    )
+
+
+def test_tail_applies_ddl_in_seq_order_when_files_arrive_swapped(spark, tmp_path):
+    """File 3 arriving before file 2 (the ADD COLUMN), as files whose
+    mtimes tie can: file 2's DDL goes in ahead of file 3's rows, so their
+    values for the new column are kept, and the tail ends equal to
+    replay() of the same log."""
+    d = _mtime_ordered_log([0, 1, 3, 2, 4, 5])
+    assert _footer_ddl_seqs(d) == [2, 4]
+    path = str(tmp_path / "pages")
+    run_streaming_replay(spark, d, path, str(tmp_path / "ckpt"), num_buckets=8)
+    _assert_equals_replay(spark, d, path, tmp_path)
+
+
+def test_tail_refuses_a_late_file_whose_ddl_missed_later_rows(spark, tmp_path):
+    """File 2 (the ADD COLUMN) shows up only after files 3-5 were applied
+    without it: the resumed tail raises before writing file 2's trigger."""
+    import os
+    import shutil
+
+    import pytest
+
+    d = _mtime_ordered_log(range(6))
+    aside = str(tmp_path / "binlog-000002.parquet")
+    shutil.move(os.path.join(d, "binlog-000002.parquet"), aside)
+    path, ckpt = str(tmp_path / "pages"), str(tmp_path / "ckpt")
+    run_streaming_replay(spark, d, path, ckpt, num_buckets=8)
+    assert PagesTable(spark, path).n_committed() == 5
+    shutil.move(aside, os.path.join(d, "binlog-000002.parquet"))
+    with pytest.raises(Exception, match=r"delivers binlog seq\(s\) \[2\]"):
+        run_streaming_replay(spark, d, path, ckpt, num_buckets=8)
+    assert PagesTable(spark, path).n_committed() == 5
+
+
+def test_tail_applies_files_out_of_seq_order_without_ddl(spark, tmp_path):
+    """A reorder with no DDL between the files still lands exactly:
+    LWW ranks rows by (ts, file, pos), not by arrival."""
+    d = _mtime_ordered_log([1, 0, 2, 3, 4, 5])
+    path = str(tmp_path / "pages")
+    run_streaming_replay(spark, d, path, str(tmp_path / "ckpt"), num_buckets=8)
+    _assert_equals_replay(spark, d, path, tmp_path)

@@ -27,15 +27,94 @@ def test_udf_matches_pure_and_sql(spark):
     ] + [b"<p>a  b\n c</p>", b"no tags &amp; done", b""]
     df = spark.createDataFrame([(h,) for h in htmls], "html binary")
     both = with_extracted_text(
-        with_extracted_text(df, "html", "t_pandas", impl="pandas"),
+        with_extracted_text(df, "html", "t_arrow", impl="arrow"),
         "html",
         "t_sql",
         impl="sql",
     ).collect()
     for r, h in zip(both, htmls):
         expect = extract_text_bytes(h)
-        assert r["t_pandas"] == expect
+        assert r["t_arrow"] == expect
         assert r["t_sql"] == expect
+
+
+def _ws_codepoints():
+    import re
+
+    return [c for c in range(0x110000) if re.match(r"\s", chr(c))]
+
+
+def test_arrow_kernel_matches_spec_on_every_python_whitespace():
+    """All 29 code points of Python's ``\\s``, alone, doubled, next to a
+    space and between words: the RE2 class must equal the spec's."""
+    import pyarrow as pa
+
+    from mysql_syncer_spark.functions.text import extract_text_arrow
+
+    cps = _ws_codepoints()
+    assert len(cps) == 29
+    cases = []
+    for c in cps:
+        w = chr(c)
+        cases += [w, w + w, "a" + w + "b", "a " + w + "b", " " + w, w + " x " + w]
+    htmls = [x.encode() for x in cases]
+    got = extract_text_arrow(pa.array(htmls, pa.binary())).to_pylist()
+    assert got == [extract_text_bytes(h) for h in htmls]
+
+
+def test_arrow_kernel_matches_spec_on_adversarial_bytes():
+    """Invalid UTF-8 (the decode fallback), entity chains like
+    ``&amp;lt;``, unclosed and nested tags, NULLs — in one batch and in a
+    batch of valid UTF-8 only (the cast path)."""
+    import random
+
+    import pyarrow as pa
+
+    from mysql_syncer_spark.functions.text import extract_text_arrow
+
+    parts = [b"<", b">", b"<p>", b"</a", b"<a<b>c>", b"&amp;", b"&lt;", b"&gt;",
+             b"&quot;", b"&amp;lt;", b"amp;", b"&", b"x", b" ", b"  ", b"\n",
+             b"\xff", b"\xc3", b"\xc3\xa9", b"\xe2\x80", b"\x00",
+             "\u00a0\u3000\u2028é😀".encode()]
+    parts += [chr(c).encode() for c in _ws_codepoints()]
+    rng = random.Random(7)
+    htmls = [
+        b"".join(rng.choice(parts) for _ in range(rng.randint(0, 24)))
+        for _ in range(3000)
+    ] + [b"&amp;lt;b&amp;gt;", b"<unclosed", b"<<a>>", b""]
+
+    def valid(b):
+        try:
+            b.decode("utf-8")
+            return True
+        except UnicodeDecodeError:
+            return False
+
+    assert not all(valid(h) for h in htmls)
+    for batch in (htmls, [h for h in htmls if valid(h)]):
+        got = extract_text_arrow(pa.array(batch + [None], pa.binary())).to_pylist()
+        assert got == [extract_text_bytes(h) for h in batch] + [None]
+
+
+def test_fill_text_arrow_keeps_existing_text(spark):
+    """The sink transform fills only NULL text with a present html; set
+    text (even empty) and tombstone rows (NULL html) pass through — as a
+    table function and as the ``with_filled_text`` Arrow UDF."""
+    import pyarrow as pa
+
+    from mysql_syncer_spark.functions.text import fill_text_arrow, with_filled_text
+
+    html = [b"<p>a  b</p>", b"<p>x</p>", None, b"&amp;lt;", b"<i>y</i>"]
+    text = [None, "kept", None, None, ""]
+    want = ["a b", "kept", None, "<", ""]
+    t = pa.table({"html": pa.array(html, pa.binary()), "text": pa.array(text, pa.string())})
+    out = fill_text_arrow(t)
+    assert out.column_names == t.column_names
+    assert out["text"].to_pylist() == want
+    assert out["html"].to_pylist() == html
+    df = spark.createDataFrame(list(zip(html, text)), "html binary, text string")
+    rows = with_filled_text(df, "html", "text").collect()
+    assert [r["text"] for r in rows] == want
 
 
 def test_token_count_edges(spark):

@@ -126,7 +126,7 @@ def main() -> None:
                 t = PagesTable.__new__(PagesTable)
                 merged = PagesTable._bucket_merge(t, st, ["url"])
                 if mode == "extract":
-                    merged = cfg.transform(merged)
+                    merged = with_filled_text(merged, "html", "text")
                 merged.select(
                     F.count(F.lit(1)), F.sum(F.length("text"))
                 ).collect()

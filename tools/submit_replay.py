@@ -38,13 +38,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     from mysql_syncer_spark.config import TableConfig
-    from mysql_syncer_spark.functions.text import with_filled_text
+    from mysql_syncer_spark.functions.text import fill_text_arrow
     from mysql_syncer_spark.plans.replay import replay
 
     cfg = TableConfig(
         name="web.pages",
         on_delete=args.on_delete,
-        transform=lambda df: with_filled_text(df, "html", "text"),
+        transform=fill_text_arrow,
     )
 
     if args.streaming:
