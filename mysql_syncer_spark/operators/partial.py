@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..xxhash import bucket_col
+
 _RANK = ("_pr_ts", "_pr_file", "_pr_pos")
 
 
@@ -190,7 +192,7 @@ def partial_events(
 
     # touched buckets: bounded collect (≤ num_buckets values), the same
     # O(buckets) driver cost the sink's keys-only probe already pays
-    bucket = F.pmod(F.xxhash64(key), F.lit(m.num_buckets)).cast("int")
+    bucket = bucket_col([key], m.num_buckets)
     touched = [
         r[0] for r in folded.select(bucket.alias("b")).distinct().collect()
     ]

@@ -16,11 +16,12 @@ a storage change, not a semantics change:
   per-batch write cost is O(batch), not O(table). Readers LWW-merge the
   bucket's delta vintages (exactly Iceberg's merge-on-read); when a
   bucket accumulates more than ``compact_threshold`` vintages it is
-  compacted back to one file in the same atomic commit, bounding read
-  amplification. Copy-on-write (the round-1 design) re-read and re-wrote
-  every touched bucket per batch — a uniformly-keyed stream touches ALL
-  buckets, so CoW cost per batch was O(table): quadratic total work over
-  a replay. MoR makes replay work O(events + table·vintages/threshold).
+  folded back, and the fold lands as its own maintenance commit
+  (``_land``), bounding read amplification. Copy-on-write (the round-1
+  design) re-read and re-wrote every touched bucket per batch — a
+  uniformly-keyed stream touches ALL buckets, so CoW cost per batch was
+  O(table): quadratic total work over a replay. MoR makes replay work
+  O(events + table·vintages/threshold).
   The table stays hash-bucketed on the key (``pmod(xxhash64(url), N)`` ≈
   Iceberg ``bucket(N, url)``), so bucket pruning and co-located merges
   are unchanged.
@@ -62,31 +63,18 @@ from ..config import TableConfig
 from ..model import DDL_DTYPES
 from ..operators.merge import batch_to_state, live_view
 from ..operators.routing import filter_and_split, ordered_ddls
+from ..xxhash import bucket_col
 from . import manifest_store
 from .manifest_store import CommitConflictError
 
 
-def _fold_result(fut):
-    """(snapshot, dirs, rows) of a finished fold compute, or None when it
-    failed. Best-effort maintenance never fails the run whose batches it
-    serves (they are already committed): the fold is dropped with a
-    warning, and its written dirs are unreferenced orphans vacuum()
-    removes."""
-    try:
-        return fut.result()
-    except Exception as e:
-        import warnings
-
-        warnings.warn(f"compaction failed, fold dropped: {e!r}", stacklevel=3)
-        return None
-
-
 def _apply_fold(m: "Manifest", fold, bid: str) -> int:
     """Swap each folded bucket's vintages in ``m`` for its compacted dir,
-    lineage under ``bid`` — the one place a fold lands, whoever computed
-    it. ``fold`` is ``_compact_compute``'s (snapshot, dirs, rows); a
-    bucket whose folded vintages are no longer all present (a racer
-    already folded them) is left alone. Returns the buckets folded."""
+    lineage under ``bid`` (for ``PagesTable._land``, the one place a
+    fold lands). ``fold`` is ``_compact_compute``'s (snapshot, dirs,
+    rows); a bucket whose folded vintages are no longer all present (a
+    racer already folded them) is left alone. Returns the buckets
+    folded."""
     snapshot, cdirs, crows = fold
     n = 0
     for b, old in snapshot.items():
@@ -356,7 +344,7 @@ class PagesTable:
     def _read_schema(self, m: Manifest):
         from pyspark.sql.types import StructType
 
-        phys = m.physical or {}
+        phys = m.physical
         # generation-bound columns are read under their ON-DISK name;
         # older generations of the same logical name (pre-drop vintages)
         # are simply never requested — the resurrection guard
@@ -379,7 +367,7 @@ class PagesTable:
         """Apply accumulated renames (coalesce old→new across file vintages)
         then project to manifest schema + hidden columns, NULL-filling
         columns added after a file was written."""
-        for logical, p in (m.physical or {}).items():
+        for logical, p in m.physical.items():
             if p in df.columns and logical not in df.columns:
                 df = df.withColumnRenamed(p, logical)
         for old, new in m.renames:
@@ -531,11 +519,7 @@ class PagesTable:
                     int(met.get("buckets_touched", 0)),
                     int(met.get("merge_ms", 0)),
                     int(met.get("compacted_buckets", 0)),
-                    len(mj.get("committed_batches", []))
-                    + sum(
-                        int(w) + 1
-                        for w in (mj.get("ledger_watermarks") or {}).values()
-                    ),
+                    self.n_committed(Manifest(**mj)),
                 )
             )
         return self.spark.createDataFrame(
@@ -567,7 +551,7 @@ class PagesTable:
         from ..xxhash import bucket_of, canary_hash
 
         m = self.manifest()
-        stored = getattr(m, "xxh64_canary", None)
+        stored = m.xxh64_canary
         if stored is not None and int(stored) != canary_hash():
             raise RuntimeError(
                 "local xxhash64 twin disagrees with the JVM canary stored "
@@ -598,11 +582,12 @@ class PagesTable:
     ) -> dict:
         """Apply one micro-batch of CDC events. Idempotent on ``batch_id``.
 
-        ``inline_compact=False``: skip the synchronous threshold fold in
-        this commit — for callers that run compaction on a maintenance
-        thread and land its result as a separate commit
-        (streaming/runner.py), so the table-sized fold never sits inside
-        a micro-batch trigger.
+        ``inline_compact``: after the commit, fold the buckets past
+        ``compact_threshold`` through a transient ``AsyncCompactor`` (its
+        own maintenance commit; a failed fold warns, never fails the
+        batch). ``False`` is for callers that compact on their own
+        maintenance thread (streaming/runner.py), so the table-sized
+        fold never sits inside a micro-batch trigger.
 
         ``probe=False``: skip the keys-only probe job that decides the
         winner pre-filter (see ``_write_batch_delta``). Callers that stream
@@ -622,7 +607,8 @@ class PagesTable:
         distribution so NO second exchange → one mapInArrow write pass:
         the Arrow transform (D4: extraction fills only newly-won rows) and
         one pyarrow file per bucket, no repartition (data is already
-        bucket-clustered) → atomic manifest commit (ledger + lineage).
+        bucket-clustered) → atomic manifest commit (ledger + lineage)
+        → [threshold fold, its own maintenance commit].
         """
         t0 = time.time()
         bid = str(batch_id)
@@ -648,11 +634,13 @@ class PagesTable:
             m.num_buckets,
             probe=probe,
             target_types=dict(m.schema),
-            physical=dict(m.physical or {}),
+            physical=dict(m.physical),
         )
-        res, _ = self._commit_batch(
-            m, bid, delta, ddls, t0, inline_compact=inline_compact
-        )
+        res, m = self._commit_batch(m, bid, delta, ddls, t0)
+        if inline_compact and not res["skipped"]:
+            compactor = AsyncCompactor(self)
+            compactor.schedule(m)
+            compactor.close()
         return res
 
     def _commit_batch(
@@ -662,25 +650,16 @@ class PagesTable:
         delta: dict,
         ddls: list[dict],
         t0: float,
-        fold=None,
-        inline_compact: bool = False,
     ) -> tuple[dict, Manifest]:
-        """Register a written delta, land a threshold fold and commit the
-        manifest atomically (ledger + lineage + schema in one rename).
-        Returns the batch's result and the committed manifest.
-
-        ``fold`` is a finished ``AsyncCompactor`` compute (the replay
-        loop's folds, Iceberg's async rewrite_data_files shape: the
-        table-sized merge never sits in the serial commit path);
-        ``inline_compact`` instead plans and computes the fold here,
-        synchronously, this batch's delta included. ``_apply_fold`` swaps
-        the vintages either way.
+        """Register a written delta and commit the manifest atomically
+        (ledger + lineage + schema in one rename). Returns the batch's
+        result and the committed manifest. A batch commit carries no fold:
+        folds land as their own maintenance commits (``_land``).
 
         Optimistic concurrency: a lost version race reloads the manifest,
-        re-applies ``ddls`` and re-registers the delta and the fold, and
-        retries — the written delta dirs are version-free so a rebase never
-        rewrites data, and the fold skips buckets a racer already folded.
-        If the SAME batch id landed via a concurrent writer, returns
+        re-applies ``ddls``, re-registers the delta and retries — the
+        written delta dirs are version-free so a rebase never rewrites
+        data. If the SAME batch id landed via a concurrent writer, returns
         skipped (exactly-once across writers)."""
         new_dirs, lineage_rows = delta["new_dirs"], delta["lineage_rows"]
         rows_in_batch = sum(lineage_rows.values())
@@ -689,23 +668,12 @@ class PagesTable:
             for b, d in new_dirs.items():
                 m.buckets.setdefault(b, []).append(d)
                 m.lineage[b] = {"batch_id": bid, "rows": lineage_rows.get(b, 0)}
-
-            # --- threshold compaction, same atomic commit --------------
-            # buckets past compact_threshold vintages fold back; read
-            # amplification stays bounded while per-batch write cost stays
-            # O(batch). Rows are already transformed — extraction never
-            # re-runs at compaction.
-            if fold is None and inline_compact:
-                fold_map = self._plan_fold(m)
-                if fold_map:
-                    fold = self._compact_compute(m, list(fold_map), fold_map=fold_map)
-            n_compacted = 0 if fold is None else _apply_fold(m, fold, bid)
             m.committed_batches.append(bid)
             # inline ledger fold: contiguous numeric ids collapse into the
             # prefix watermark ON EVERY COMMIT, so the manifest stays
             # O(buckets + out-of-order window) over a 10^6-batch replay
-            # instead of growing one ledger entry per commit
-            # (compact_ledger() remains for one-off maintenance).
+            # instead of growing one ledger entry per commit (a legacy
+            # manifest's explicit list folds on its next commit).
             self._fold_ledger(m)
             events_in = delta["events_in"]
             m.metrics = {
@@ -734,7 +702,6 @@ class PagesTable:
                 "max_key_rows": delta["max_key_rows"],
                 "skew_probed": bool(delta.get("skew_probed", True)),
                 "dup_share": delta.get("dup_share", 0.0),
-                "compacted_buckets": n_compacted,
             }
             try:
                 self._commit(m)
@@ -783,11 +750,12 @@ class PagesTable:
         crash leaves only orphan delta dirs (vacuum()-able), never a half
         commit.
 
-        Threshold compaction runs on an ``AsyncCompactor``: a finished fold
-        lands inside the next batch's ordered commit, and a pending one is
-        drained as its own maintenance commit at the end. Vintage count can
-        exceed compact_threshold by the batches that land while a fold is
-        in flight — still bounded."""
+        Threshold compaction runs on an ``AsyncCompactor``: a fold finished
+        by the time the head delta is ready lands as its own maintenance
+        commit just before the head batch's commit, and a pending one is
+        drained the same way at the end. Vintage count can exceed
+        compact_threshold by the batches that land while a fold is in
+        flight — still bounded."""
         from concurrent.futures import ThreadPoolExecutor
 
         cfg = cfg or TableConfig(name="web.pages")
@@ -796,7 +764,7 @@ class PagesTable:
         results: list[dict] = []
         inflight: list[tuple[str, list[dict], float, object]] = []
         probe = True
-        compactor = self.async_compactor()
+        compactor = AsyncCompactor(self)
 
         # decomposition of the serial (ordered-commit) floor: wait = head
         # delta not ready (pipeline starved, parallel work), the rest is
@@ -811,14 +779,16 @@ class PagesTable:
             delta = fut.result()
             agg["wait"] += time.time() - tw
             tw = time.time()
+            # a finished fold lands first, on the committed manifest
+            if compactor.commit_fold():
+                m = self.manifest()
+            agg["fold"] += time.time() - tw
+            tw = time.time()
             for d in ddls:  # buffered: manifest mutates with ITS commit
                 self._apply_ddl(m, d)
             agg["ddl"] += time.time() - tw
             tw = time.time()
-            fold = compactor.take()
-            agg["fold"] += time.time() - tw
-            tw = time.time()
-            res, m = self._commit_batch(m, bid, delta, ddls, t0, fold=fold)
+            res, m = self._commit_batch(m, bid, delta, ddls, t0)
             results.append(res)
             agg["commit"] += time.time() - tw
             tw = time.time()
@@ -854,7 +824,7 @@ class PagesTable:
                         probe=probe,
                         mapping=dict(plan_m.column_mapping),
                         target_types=dict(plan_m.schema),
-                        physical=dict(plan_m.physical or {}),
+                        physical=dict(plan_m.physical),
                     ):
                         return self._write_batch_delta(
                             filter_and_split(events, cfg.name)[0],
@@ -940,10 +910,9 @@ class PagesTable:
         batch_state = batch_to_state(
             row_events, column_mapping, cfg.on_delete, target_types
         )
-        bucket_col = F.pmod(
-            F.xxhash64(*cfg.key_columns), F.lit(num_buckets)
-        ).cast("int")
-        wb = batch_state.withColumn("_bucket", bucket_col)
+        wb = batch_state.withColumn(
+            "_bucket", bucket_col(cfg.key_columns, num_buckets)
+        )
 
         prefiltered = False
         if probe:
@@ -1122,16 +1091,18 @@ class PagesTable:
         fold_map: dict[str, list[str]] | None = None,
     ) -> tuple[dict[str, list[str]], dict[str, str], dict[str, int]]:
         """Read the given buckets' vintages AS OF a frozen manifest, merge
-        to one file per bucket, write. Pure compute — mutates nothing;
-        returns (snapshot dirs folded, compacted dir per bucket, rows).
-        Safe to run concurrently with later delta writes: it touches only
-        the frozen vintage list, and LWW merge-on-read makes folding ANY
-        subset of a bucket's vintages order-insensitive.
+        to one file per bucket (by ``frozen.num_buckets``), write. Pure
+        compute — mutates nothing; returns (snapshot dirs folded,
+        compacted dir per bucket, rows). Safe to run concurrently with
+        later delta writes: it touches only the frozen vintage list, and
+        LWW merge-on-read makes folding ANY subset of a bucket's vintages
+        order-insensitive.
 
         ``fold_map`` (bucket → dirs to fold, from ``_plan_fold``) restricts
         the fold to a vintage subset per bucket; default folds every
         vintage (maintenance ``compact()`` / ``backfill`` semantics —
-        those need the FULL merged state, tiered folds don't)."""
+        those need the FULL merged state, tiered folds don't). The Arrow
+        ``transform`` runs in the write pass (``backfill``)."""
         snapshot = (
             {b: list(fold_map[b]) for b in bucket_ids if b in fold_map}
             if fold_map is not None
@@ -1146,14 +1117,12 @@ class PagesTable:
             ),
             frozen,
         )
-        bucket_col = F.pmod(
-            F.xxhash64(*frozen.key_columns), F.lit(frozen.num_buckets)
-        ).cast("int")
         compacted = self._bucket_merge(
-            cur.withColumn("_bucket", bucket_col), list(frozen.key_columns)
+            cur.withColumn(
+                "_bucket", bucket_col(frozen.key_columns, frozen.num_buckets)
+            ),
+            list(frozen.key_columns),
         )
-        if transform is not None:
-            compacted = transform(compacted)
         # sort-on-compact (Iceberg rewrite_data_files sort-order parity):
         # the merge output is already partitioned by _bucket, so this is a
         # per-partition in-memory sort — no exchange — and the compacted
@@ -1162,7 +1131,7 @@ class PagesTable:
         # writes stay UNSORTED: sorting belongs on the maintenance path,
         # not the per-batch hot path.
         compacted = compacted.sortWithinPartitions("_bucket", *frozen.key_columns)
-        cdirs, crows = self._write_snapshot(compacted, frozen.physical)
+        cdirs, crows = self._write_snapshot(compacted, frozen.physical, transform)
         return snapshot, cdirs, crows
 
     def _commit_maintenance(self, m: Manifest, tag: str, n: int) -> None:
@@ -1181,15 +1150,23 @@ class PagesTable:
         }
         self._commit(m)
 
-    def async_compactor(self) -> "AsyncCompactor":
-        """Maintenance-thread threshold compaction for single-batch
-        callers (the streaming foreachBatch sink): the same compactor
-        ``apply_batches`` drives, but the fold lands as its OWN
-        maintenance commit between micro-batches, so the table-sized
-        merge never executes inside a trigger. Call ``tick()`` after
-        every committed batch; ``close()`` when the stream stops (a
-        pending compute is drained and committed)."""
-        return AsyncCompactor(self)
+    def _land(self, fold, kind: str = "compact") -> int:
+        """The one place a fold lands: a maintenance commit tagged
+        ``<kind>-v<version>``. A lost version race re-reads the manifest
+        and re-applies the fold (``_apply_fold`` keeps a racer's vintages).
+        Returns the buckets folded; commits nothing when none is."""
+        while True:
+            m = self.manifest()
+            m.version += 1
+            tag = f"{kind}-v{m.version}"
+            n = _apply_fold(m, fold, tag)
+            if n == 0:
+                return 0
+            try:
+                self._commit_maintenance(m, tag, n)
+                return n
+            except CommitConflictError:
+                continue  # re-read and re-apply onto the fresh manifest
 
     def compact(self, buckets: list[int] | None = None) -> dict:
         """Maintenance compaction (Iceberg ``rewrite_data_files`` parity):
@@ -1202,13 +1179,7 @@ class PagesTable:
             if buckets is None
             else [str(b) for b in buckets if str(b) in m.buckets]
         )
-        if not target:
-            return {"compacted_buckets": 0}
-        m.version += 1
-        tag = f"compact-v{m.version}"
-        n = _apply_fold(m, self._compact_compute(m, target), tag)
-        self._commit_maintenance(m, tag, n)
-        return {"compacted_buckets": n}
+        return {"compacted_buckets": self._land(self._compact_compute(m, target))}
 
     def tag(self, name: str, version: int | None = None) -> dict:
         """Name a committed snapshot (Iceberg tag parity). Tags live in
@@ -1254,31 +1225,23 @@ class PagesTable:
           batch (the bucket column is derived per batch from the mapping
           snapshot), and the ledger is untouched, so replay/redelivery
           idempotence survives the rewrite;
-        - cost: one full-table payload shuffle on the NEW bucket key —
-          the same shape as a full compaction, run as maintenance.
+        - cost: a full compaction (``_compact_compute``) onto the NEW
+          bucket count, run as maintenance; a lost version race raises
+          ``CommitConflictError`` (a layout change cannot be rebased).
         """
         if new_num_buckets < 1:
             raise ValueError("new_num_buckets must be >= 1")
         m = self.manifest()
         if new_num_buckets == m.num_buckets:
             return {"rebucketed": False, "num_buckets": m.num_buckets}
-        cur = self._read_buckets(m, None)
+        frozen = Manifest.from_json(m.to_json())
+        frozen.num_buckets = new_num_buckets
+        _, cdirs, crows = self._compact_compute(frozen, list(m.buckets))
         m.version += 1
         bid = f"rebucket-v{m.version}"
         m.num_buckets = new_num_buckets
-        m.buckets = {}
-        m.lineage = {}
-        if cur is not None:
-            bucket_col = F.pmod(
-                F.xxhash64(*m.key_columns), F.lit(new_num_buckets)
-            ).cast("int")
-            merged = self._bucket_merge(
-                cur.withColumn("_bucket", bucket_col), list(m.key_columns)
-            ).sortWithinPartitions("_bucket", *m.key_columns)
-            cdirs, crows = self._write_snapshot(merged, m.physical)
-            for b, d in cdirs.items():
-                m.buckets[b] = [d]
-                m.lineage[b] = {"batch_id": bid, "rows": crows.get(b, 0)}
+        m.buckets = {b: [d] for b, d in cdirs.items()}
+        m.lineage = {b: {"batch_id": bid, "rows": crows.get(b, 0)} for b in cdirs}
         self._commit_maintenance(m, bid, len(m.buckets))
         return {
             "rebucketed": True,
@@ -1292,27 +1255,24 @@ class PagesTable:
         LIVE winner with a new transform, without replaying the log).
 
         Per bucket: read the merged current state, apply ``transform``
-        (DataFrame -> DataFrame over payload + hidden columns — it must
-        not touch the key or the LWW rank columns, which keep future CDC
-        merges ordering correctly against backfilled rows), write ONE new
-        vintage replacing the bucket's list, commit once atomically.
-        Time travel to pre-backfill versions still reads the old files;
-        the batch ledger is untouched, so replaying committed batches
-        stays a no-op. Cost: O(table) once, bucket-parallel, one payload
-        shuffle (the same plan shape as compaction)."""
+        (Arrow table -> Arrow table, the ``TableConfig.transform``
+        contract, run in the ``_bucket_writer`` pass over payload + hidden
+        columns — it must not touch the key or the LWW rank columns, which
+        keep future CDC merges ordering correctly against backfilled
+        rows), write ONE new vintage per bucket, and land it through
+        ``_land``: a batch that commits meanwhile keeps its vintage on
+        top. Time travel to pre-backfill versions still reads the old
+        files; the batch ledger is untouched, so replaying committed
+        batches stays a no-op. Cost: O(table) once, bucket-parallel, one
+        payload shuffle (the compaction plan)."""
         m = self.manifest()
         target = (
             list(m.buckets.keys())
             if buckets is None
             else [str(b) for b in buckets if str(b) in m.buckets]
         )
-        if not target:
-            return {"backfilled_buckets": 0}
-        m.version += 1
-        tag = f"backfill-v{m.version}"
         fold = self._compact_compute(m, target, transform=transform)
-        self._commit_maintenance(m, tag, _apply_fold(m, fold, tag))
-        return {"backfilled_buckets": len(target), "version": m.version}
+        return {"backfilled_buckets": self._land(fold, "backfill")}
 
     def _apply_ddl(self, m: Manifest, d: dict) -> None:
         """ADD/RENAME COLUMN, idempotent under redelivery."""
@@ -1326,7 +1286,7 @@ class PagesTable:
                 raise ValueError(f"unsupported DDL dtype {dtype}")
             m.schema.append([col, DDL_DTYPES[dtype].simpleString()])
             m.column_mapping[col] = col
-            gen = (m.dropped_gens or {}).get(col, 0)
+            gen = m.dropped_gens.get(col, 0)
             if gen:
                 # re-ADD of a previously dropped name: bind the logical
                 # name to a fresh generation-suffixed ON-DISK name. Old
@@ -1345,7 +1305,7 @@ class PagesTable:
             for wire, cur in list(m.column_mapping.items()):
                 if cur == old:
                     m.column_mapping[wire] = new
-            if old in (m.physical or {}):
+            if old in m.physical:
                 # generation-bound column: its on-disk name never changes,
                 # so no renames entry (nothing to coalesce in old files)
                 m.physical[new] = m.physical.pop(old)
@@ -1394,7 +1354,7 @@ class PagesTable:
             # generation: a later re-ADD binds to a fresh on-disk name,
             # so pre-drop values in uncompacted vintages can never
             # resurface (field-id-style safety).
-            m.dropped_gens[col] = (m.dropped_gens or {}).get(col, 0) + 1
+            m.dropped_gens[col] = m.dropped_gens.get(col, 0) + 1
             m.physical.pop(col, None)
         else:
             raise ValueError(f"unknown DDL kind {kind}")
@@ -1517,7 +1477,7 @@ class PagesTable:
                 by_prefix.setdefault(prefix, set()).add(int(num))
             else:
                 keep.append(bid)
-        watermarks = dict(getattr(m, "ledger_watermarks", {}) or {})
+        watermarks = dict(m.ledger_watermarks)
         for prefix, nums in by_prefix.items():
             w = watermarks.get(prefix, -1)
             while (w + 1) in nums:
@@ -1529,26 +1489,13 @@ class PagesTable:
         m.committed_batches = keep
         return folded
 
-    def compact_ledger(self) -> dict:
-        """One-off ledger maintenance (legacy manifests; new commits fold
-        inline in ``_commit_batch``)."""
-        m = self.manifest()
-        before = len(m.committed_batches)
-        self._fold_ledger(m)
-        m.version += 1
-        self._commit_maintenance(m, f"ledger-v{m.version}", 0)
-        return {
-            "entries_before": before,
-            "entries_after": len(m.committed_batches),
-            "watermarks": m.ledger_watermarks,
-        }
-
     def n_committed(self, m: Manifest | None = None) -> int:
         """Number of committed batches (explicit ledger entries + batches
         folded into prefix watermarks — watermark w covers ids 0..w)."""
         m = m or self.manifest()
-        wm = getattr(m, "ledger_watermarks", {}) or {}
-        return len(m.committed_batches) + sum(w + 1 for w in wm.values())
+        return len(m.committed_batches) + sum(
+            w + 1 for w in m.ledger_watermarks.values()
+        )
 
     @staticmethod
     def _check_ledger_gap(m: Manifest, bid: str) -> None:
@@ -1564,7 +1511,7 @@ class PagesTable:
         prefix, _, num = bid.rpartition("-")
         if not (prefix and num.isdigit()):
             return
-        w = (m.ledger_watermarks or {}).get(prefix, -1)
+        w = m.ledger_watermarks.get(prefix, -1)
         if w < 0:  # no watermark yet → no contiguity contract established
             return
         k = int(num)
@@ -1593,7 +1540,7 @@ class PagesTable:
             return True
         prefix, _, num = bid.rpartition("-")
         if prefix and num.isdigit():
-            return int(num) <= (getattr(m, "ledger_watermarks", {}) or {}).get(prefix, -1)
+            return int(num) <= m.ledger_watermarks.get(prefix, -1)
         return False
 
     # ------------------------------------------------------------------
@@ -1601,7 +1548,7 @@ class PagesTable:
     # ------------------------------------------------------------------
     def metrics_history(self) -> list[dict]:
         """The metrics of every batch commit, oldest first (maintenance
-        commits — folds, compact, backfill, rebucket, ledger — are left
+        commits — folds, compact, backfill, rebucket — are left
         out; ``history()`` lists every version)."""
         return [
             mj["metrics"]
@@ -1612,17 +1559,16 @@ class PagesTable:
 
 class AsyncCompactor:
     """Off-trigger threshold compaction: the one schedule → compute over a
-    frozen snapshot → fold cycle, for the replay loop (whose folds land
-    inside its next ordered commit: ``take``, then ``_commit_batch``) and
-    the streaming sink (whose folds land as their own maintenance commit,
-    ``tick``).
+    frozen snapshot → ``_land`` cycle, for the replay loop (between its
+    ordered commits), the streaming sink (``tick``, then ``close``) and
+    ``apply_batch`` (``schedule``, then ``close``).
 
     Exactly-once safety: the compute reads a FROZEN committed vintage
     snapshot (LWW merge-on-read makes folding any vintage subset
     order-insensitive), and the fold rewrites only bucket lists that still
     contain the folded dirs — a crash between compute and fold leaves
     unreferenced orphan dirs (vacuum territory), never a wrong manifest.
-    A failed compute is dropped with a warning (``_fold_result``)."""
+    A failed compute is dropped with a warning (``commit_fold``)."""
 
     def __init__(self, table: PagesTable):
         from concurrent.futures import ThreadPoolExecutor
@@ -1645,35 +1591,24 @@ class AsyncCompactor:
             t._compact_compute, frozen, list(fold_map), fold_map=fold_map
         )
 
-    def take(self, wait: bool = False):
-        """The finished compute's fold for ``_apply_fold``, or None when
-        none is in flight, it is still running (and not ``wait``), or it
-        failed."""
+    def commit_fold(self, wait: bool = False) -> int:
+        """Land a finished compute (with ``wait``, the in-flight one) as its
+        own maintenance commit. Returns the number of buckets folded: 0
+        when none is in flight, it is still running, or it failed."""
         fut = self._fut
         if fut is None or not (wait or fut.done()):
-            return None
-        self._fut = None
-        return _fold_result(fut)
-
-    def commit_fold(self, wait: bool = False) -> int:
-        """Fold a finished compute (with ``wait``, the in-flight one) into
-        its own maintenance commit. Returns the number of buckets folded."""
-        fold = self.take(wait)
-        if fold is None:
             return 0
-        t = self._table
-        while True:
-            m = t.manifest()
-            m.version += 1
-            tag = f"compact-v{m.version}"
-            n = _apply_fold(m, fold, tag)
-            if n == 0:
-                return 0
-            try:
-                t._commit_maintenance(m, tag, n)
-                return n
-            except CommitConflictError:
-                continue  # re-read and re-apply onto the fresh manifest
+        self._fut = None
+        try:
+            fold = fut.result()
+        except Exception as e:
+            # best-effort: the batches are already committed; the fold's
+            # written dirs are orphans vacuum() removes
+            import warnings
+
+            warnings.warn(f"compaction failed, fold dropped: {e!r}", stacklevel=2)
+            return 0
+        return self._table._land(fold)
 
     def tick(self) -> int:
         """Fold a finished compute into its own maintenance commit, then

@@ -27,7 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..config import TableConfig
 from ..plans.replay import _BINLOG_RE, ddl_rows_from_footers, default_pages_config
-from ..sink.pages_table import PagesTable
+from ..sink.pages_table import AsyncCompactor, PagesTable
 from ..sources.event_log import stream_event_log
 
 
@@ -219,7 +219,7 @@ def start_streaming_replay(
     # between micro-batches — the trigger never pays the table-sized fold
     # (the cause of the round-5 p95 spikes: a fold landing INSIDE a
     # micro-batch tripled its latency)
-    compactor = table.async_compactor()
+    compactor = AsyncCompactor(table)
 
     footer: _FooterDdls | None = None  # seeded from the checkpoint once
 

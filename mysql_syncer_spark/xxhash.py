@@ -1,9 +1,9 @@
 """Pure-Python twin of Spark's ``xxhash64`` expression (XXH64, seed 42).
 
-The sink buckets rows by ``pmod(xxhash64(key), num_buckets)``. A point
-lookup must compute THE SAME bucket for its probe key; doing that with a
-1-row Spark job costs ~100 ms of driver latency per read
-(round-2 VERDICT 'What's wrong' #3). XXH64 is a published, stable
+The sink buckets rows by ``pmod(xxhash64(key), num_buckets)``
+(``bucket_col``). A point lookup must compute THE SAME bucket for its
+probe key; doing that with a 1-row Spark job costs ~100 ms of driver
+latency per read (round-2 VERDICT 'What's wrong' #3). XXH64 is a published, stable
 algorithm (Yann Collet's xxHash, public domain; Spark implements the same
 spec in ``org.apache.spark.sql.catalyst.expressions.XXH64``), so the twin
 computes the bucket locally in microseconds. Tables store a canary hash at
@@ -119,6 +119,15 @@ def bucket_of(values, num_buckets: int, seed: int = SPARK_SEED) -> int:
     """``pmod(xxhash64(values…), num_buckets)`` — the sink's bucket id."""
     h = chain_hash(values, seed)
     return h % num_buckets  # Python % is already a positive mod
+
+
+def bucket_col(key_columns, num_buckets: int):
+    """The JVM twin of ``bucket_of``: the Spark int column
+    ``pmod(xxhash64(key_columns…), num_buckets)`` every sink write and
+    fold buckets rows by."""
+    from pyspark.sql import functions as F
+
+    return F.pmod(F.xxhash64(*key_columns), F.lit(num_buckets)).cast("int")
 
 
 # canary input whose JVM hash is stored in the table manifest at create

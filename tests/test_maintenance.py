@@ -1,5 +1,5 @@
-"""Table maintenance: vacuum (orphan GC) + ledger compaction keep
-exactly-once semantics intact."""
+"""Table maintenance: vacuum (orphan GC), the inline ledger fold, compaction,
+backfill and rebucket keep exactly-once semantics intact."""
 
 import os
 
@@ -39,9 +39,6 @@ def test_ledger_compaction_preserves_idempotence(spark, event_log_dir, tmp_table
     assert m.committed_batches == []
     assert m.ledger_watermarks.get("fileseq", -1) >= 1
     assert t.n_committed(m) >= 2
-    res = t.compact_ledger()  # legacy maintenance path stays a no-op
-    assert res["entries_after"] == res["entries_before"] == 0
-    assert res["watermarks"].get("fileseq", -1) >= 1
     # replaying compacted batches must still be a no-op
     res2 = replay(spark, event_log_dir, tmp_table_path, num_buckets=8)
     assert all(b.get("skipped") for b in res2["batches"])
@@ -131,16 +128,19 @@ def test_expire_snapshots_keeps_retention_window(
 def test_backfill_recomputes_derived_column(
     spark, event_log_dir, event_table, tmp_table_path
 ):
-    import pyspark.sql.functions as F
+    import pyarrow.compute as pc
 
     replay(spark, event_log_dir, tmp_table_path, num_buckets=8)
     t = PagesTable(spark, tmp_table_path)
     v_before = t.manifest().version
     before = {r["url"]: r.asDict() for r in t.read().collect()}
 
-    def upgraded_extractor(df):
-        return df.withColumn(
-            "text", F.concat(F.lit("v2|"), F.coalesce(F.col("text"), F.lit("")))
+    def upgraded_extractor(tbl):
+        text = tbl["text"]
+        return tbl.set_column(
+            tbl.schema.get_field_index("text"),
+            "text",
+            pc.binary_join_element_wise("v2|", pc.fill_null(text, ""), ""),
         )
 
     res = t.backfill(upgraded_extractor)
@@ -353,4 +353,88 @@ def test_tiered_fold_leaves_base_untouched(spark, event_log_dir):
     t.compact()
     m2 = t.manifest()
     assert all(len(lst) == 1 for lst in m2.buckets.values())
+    assert_state_equal(t.read().collect(), oracle)
+
+
+def _four_batches(spark, tmp_path):
+    """A 4-file log (1,200 events), its oracle table and file-seq batches."""
+    import pyspark.sql.functions as F
+
+    from mysql_syncer_spark.generator import GenSpec, generate_events, write_event_log
+    from mysql_syncer_spark.sources.event_log import read_event_log
+
+    tbl = generate_events(GenSpec(n_events=1200, events_per_file=300))
+    log_dir = str(tmp_path / "log")
+    write_event_log(tbl, log_dir)
+    ev = read_event_log(spark, log_dir)
+    return tbl, [(f"fileseq-{k}", ev.filter(F.col("file_seq") == k)) for k in range(4)]
+
+
+def test_failed_fold_never_fails_apply_batch(spark, tmp_path, monkeypatch):
+    """apply_batch's threshold fold is best-effort: at compact_threshold=1
+    every batch from the second on schedules a fold, each raising compute
+    is warned about and dropped, and all four batches commit."""
+    import warnings
+
+    from mysql_syncer_spark.plans.replay import default_pages_config
+
+    tbl, batches = _four_batches(spark, tmp_path)
+    t = PagesTable.create(spark, str(tmp_path / "pages"), num_buckets=2, compact_threshold=1)
+    calls = []
+
+    def failing_compute(self, *args, **kwargs):
+        calls.append(1)
+        raise OSError("disk full")
+
+    monkeypatch.setattr(PagesTable, "_compact_compute", failing_compute)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        results = [t.apply_batch(bid, ev, default_pages_config()) for bid, ev in batches]
+    assert all(r["skipped"] is False for r in results)
+    assert t.n_committed() == 4
+    dropped = [w for w in caught if "compaction failed" in str(w.message)]
+    assert len(calls) == 3 and len(dropped) == 3
+    oracle, _, _ = sequential_replay(tbl)
+    assert_state_equal(t.read().collect(), oracle)
+
+
+@pytest.mark.parametrize("op", ["compact", "backfill"])
+def test_maintenance_rebases_on_racing_commit(spark, tmp_path, monkeypatch, op):
+    """A batch committed by a second writer while compact()/backfill()
+    computes its fold: the maintenance commit rebases onto it, the racer's
+    vintage stays on top of the rewritten one, and the state equals the
+    oracle."""
+    from mysql_syncer_spark.plans.replay import default_pages_config
+
+    tbl, batches = _four_batches(spark, tmp_path)
+    path = str(tmp_path / "pages")
+    t = PagesTable.create(spark, path, num_buckets=4)
+    cfg = default_pages_config()
+    for bid, ev in batches[:3]:
+        t.apply_batch(bid, ev, cfg)
+    m0 = t.manifest()
+    racer, racer_dirs = PagesTable(spark, path), {}
+    compute = PagesTable._compact_compute
+
+    def racing_compute(self, *args, **kwargs):
+        fold = compute(self, *args, **kwargs)
+        if not racer_dirs:
+            racer.apply_batch(*batches[3], cfg)
+            m = racer.manifest()
+            racer_dirs.update(
+                {b: m.buckets[b][-1] for b, e in m.lineage.items() if e["batch_id"] == "fileseq-3"}
+            )
+        return fold
+
+    monkeypatch.setattr(PagesTable, "_compact_compute", racing_compute)
+    if op == "compact":
+        assert t.compact()["compacted_buckets"] == len(m0.buckets)
+    else:
+        assert t.backfill(lambda tb: tb)["backfilled_buckets"] == len(m0.buckets)
+    m = t.manifest()
+    assert m.metrics["batch_id"] == f"{op}-v{m.version}"
+    assert racer_dirs
+    assert all(m.buckets[b][-1] == d for b, d in racer_dirs.items())
+    assert t.n_committed(m) == 4
+    oracle, _, _ = sequential_replay(tbl)
     assert_state_equal(t.read().collect(), oracle)

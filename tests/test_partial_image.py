@@ -298,7 +298,7 @@ def test_partial_stream_takes_the_full_image_trigger_path(spark):
         hist = tb.metrics_history()
         assert len(hist) == 4
         assert [m["skew_probed"] for m in hist] == [True, False, False, False]
-        assert all(m["compacted_buckets"] == 0 for m in hist)
+        assert all("compacted_buckets" not in m for m in hist)
         cols = ["url", "warc_ts", "html", "text", "lang"]
         assert _sorted_rows(PagesTable(spark, pa_path).read(), cols) == \
             _sorted_rows(tb.read(), cols)

@@ -31,6 +31,19 @@ def test_twin_matches_jvm_on_assorted_values(spark):
     assert canary_hash() == stored
 
 
+def test_bucket_col_matches_bucket_of(spark):
+    """The JVM bucket column and the local twin agree on every key and
+    bucket count, negative hashes included."""
+    from mysql_syncer_spark.xxhash import bucket_col
+
+    keys = [f"https://d{i}.example.com/p/{i * 7}" for i in range(40)] + ["", "üñï"]
+    assert any(chain_hash([k]) < 0 for k in keys)
+    df = spark.createDataFrame([(k,) for k in keys], "url string")
+    for n in (1, 2, 7, 64, 1000):
+        got = df.select("url", bucket_col(["url"], n).alias("b")).collect()
+        assert {r["url"]: r["b"] for r in got} == {k: bucket_of([k], n) for k in keys}
+
+
 @settings(max_examples=200, deadline=None)
 @given(st.binary(min_size=0, max_size=200), st.integers(0, 2**63 - 1))
 def test_xxh64_reference_vectors_via_chaining(data, seed):

@@ -6,7 +6,8 @@ Shapes: zipf, 100k zipf events in 1 file (dup share ~0.81); hot10, 100k events
 with one url on every 10th, the rest unique (~0.10); zipf4, 4 files of 60k zipf
 events, pipelined at depth 4; serial40, 40 files of 2,000 zipf events at depth 1,
 so threshold folds fire on the serial path. ``--shapes serial40`` runs a subset
-(the warm-up replay always runs)."""
+(the warm-up replay always runs). Folds are counted from ``history()``: the
+buckets folded over all versions and the number of ``compact-v*`` commits."""
 
 import argparse
 import hashlib
@@ -71,14 +72,17 @@ def main() -> None:
         c0, t0 = tree_cpu_s(), time.time()
         res = replay(spark, log, path, num_buckets=64, pipeline_depth=depth)
         wall, cpu = time.time() - t0, tree_cpu_s() - c0
-        rows = PagesTable(spark, path).read().selectExpr("url", "xxhash64(*) AS h").collect()
+        table = PagesTable(spark, path)
+        rows = table.read().selectExpr("url", "xxhash64(*) AS h").collect()
         digest = hashlib.sha256(repr(sorted((r["url"], r["h"]) for r in rows)).encode()).hexdigest()
         if name != "warmup":  # the warm-up replay pays JVM and UDF-worker start
-            keys = ("skew_probed", "dup_share", "salted_merge", "prefiltered")  # parent and change
+            keys = ("skew_probed", "dup_share", "prefiltered")
             plans = [{k: b[k] for k in keys if k in b} for b in res["batches"]]
-            folded = sum(b.get("compacted_buckets", 0) for b in res["batches"])  # folds landed in batch commits
-            print(json.dumps({"shape": name, "seed": args.seed, "wall_s": round(wall, 3), "cpu_s": round(cpu, 3),
-                              "rows": len(rows), "digest": digest[:16], "folded_in_batches": folded,
+            hist = table.history().collect()
+            print(json.dumps({"shape": name, "seed": args.seed, "wall_s": round(wall, 3),
+                              "cpu_s": round(cpu, 3), "rows": len(rows), "digest": digest[:16],
+                              "folded_buckets": sum(r["compacted_buckets"] for r in hist),
+                              "fold_commits": sum(r["batch_id"].startswith("compact-v") for r in hist),
                               "plans": plans}), flush=True)
     spark.stop()
     shutil.rmtree(work, ignore_errors=True)
