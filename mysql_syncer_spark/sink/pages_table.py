@@ -779,7 +779,8 @@ class PagesTable:
             delta = fut.result()
             agg["wait"] += time.time() - tw
             tw = time.time()
-            # a finished fold lands first, on the committed manifest
+            # a finished fold lands before the buffered DDL is applied,
+            # which the manifest reload would otherwise drop
             if compactor.commit_fold():
                 m = self.manifest()
             agg["fold"] += time.time() - tw

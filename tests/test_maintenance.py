@@ -357,7 +357,7 @@ def test_tiered_fold_leaves_base_untouched(spark, event_log_dir):
 
 
 def _four_batches(spark, tmp_path):
-    """A 4-file log (1,200 events), its oracle table and file-seq batches."""
+    """A 4-file log (1,200 events): its event table and one batch per file."""
     import pyspark.sql.functions as F
 
     from mysql_syncer_spark.generator import GenSpec, generate_events, write_event_log

@@ -82,7 +82,7 @@ def main() -> None:
             print(json.dumps({"shape": name, "seed": args.seed, "wall_s": round(wall, 3),
                               "cpu_s": round(cpu, 3), "rows": len(rows), "digest": digest[:16],
                               "folded_buckets": sum(r["compacted_buckets"] for r in hist),
-                              "fold_commits": sum(r["batch_id"].startswith("compact-v") for r in hist),
+                              "fold_commits": sum((r["batch_id"] or "").startswith("compact-v") for r in hist),
                               "plans": plans}), flush=True)
     spark.stop()
     shutil.rmtree(work, ignore_errors=True)
